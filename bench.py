@@ -276,17 +276,64 @@ SECONDARY = [
 
 # ANN index entries with a fit/probe split (VERDICT r5 task 4 / r6 task 2;
 # ann_ivf joined in r7 — its r5/r6 SECONDARY entry conflated the
-# fit-dominated total): (fit label, probe label, index kind).
+# fit-dominated total): (fit label, probe label, probe query). The probe
+# is timed right after its fit.
 ANN_SPLIT = [
-    ("ann_pq_fit", "ann_pq_probe", "pq"),
-    ("ann_ivf_fit", "ann_ivf_probe", "ivf"),
-    ("ann_ivfpq_fit", "ann_ivfpq_probe", "ivfpq"),
+    ("ann_pq_fit", "ann_pq_probe", "ann_pq_topk"),
+    ("ann_ivf_fit", "ann_ivf_probe", "ann_ivf_topk"),
+    ("ann_ivfpq_fit", "ann_ivfpq_probe", "ann_ivfpq_topk"),
     # r7: the residual-coded (by_residual=True) IVF-PQ layout
-    ("ann_ivfpqr_fit", "ann_ivfpqr_probe", "ivfpqr"),
+    ("ann_ivfpqr_fit", "ann_ivfpqr_probe", "ann_ivfpq_residual_topk"),
     # r9: OPQ — learned rotation + permutation before flat PQ; the fit
-    # line covers rotation fit (scatter + power iteration + energy pass)
-    # plus the sub-codebook fit on the transformed corpus
-    ("ann_opq_fit", "ann_opq_probe", "opq"),
+    # line is MARGINAL against the warm rotation model (its own
+    # ann_opq_rotation_fit line): transform + sub-codebook fit + encode
+    ("ann_opq_fit", "ann_opq_probe", "ann_opq_topk"),
+]
+# r10: the composed IVF-OPQ split, BENCH_DETAIL only (the stdout line has
+# no byte headroom for it)
+ANN_DETAIL_SPLIT = [("ann_ivfopq_fit", "ann_ivfopq_probe", "ann_ivfopq_topk")]
+
+# Shared-artifact builds, each timed as its OWN line (VERDICT r7 task 5 —
+# the ann_*_fit/ann_*_probe convention), so consumer entries measure
+# cache-warm marginal cost instead of whichever ran first absorbing the
+# build: (label, registry artifact, sf dir, detail-only). Each build first
+# invalidates its artifact, which drops every entry recorded as built
+# from it, then builds cold. "headline" rows run before the headline
+# entries at the headline sf; "secondary" rows run after the secondary
+# entries at the secondary sf. Detail-only rows go to BENCH_DETAIL only.
+BUILDS = [
+    # the maintained near-dup index: upstream of the pair set and of
+    # dedup_incremental_lsh, so it is timed first
+    ("lsh_index_build", "lsh_index", "headline", True),
+    # r12: mined under the production bucket cap and published to the
+    # stable artifact store; the cluster entry reads the parquet
+    ("lsh_pairs_build", "lsh_pairs", "headline", False),
+    # r11: documents ∪ the 150-doc template slice, consumed by
+    # dedup_minhash_lsh_capped and dedup_lsh_reband_hot
+    ("lsh_aug_index_build", "lsh_aug_index", "headline", True),
+    # r12: the three-family index consumed by dedup_lsh_repair_all
+    ("lsh_multi_index_build", "lsh_multi_index", "headline", True),
+    # r9/r10: the headline-sf IVF-PQ and IVF-OPQ fits, so their headline
+    # entries measure warm-marginal probe cost
+    ("ann_ivfpq_fit_headline", "ivfpq_index", "headline", True),
+    ("ann_ivfopq_fit_headline", "ivfopq_index", "headline", True),
+    # r10: the drift tier's preamble (cumulative artifact + PSI binner)
+    ("drift_preamble_build", "order_preamble", "headline", True),
+    # r8: the shared unit-corpus models — PQ sub-codebooks (flat PQ and
+    # composed IVF-PQ) and the coarse quantizer (both IVF-PQ variants) —
+    # so the per-index fits below measure MARGINAL cost against them
+    ("ann_books_fit", "pq_books", "secondary", False),
+    ("ann_coarse_fit", "coarse_cents", "secondary", False),
+    ("ann_pq_fit", "pq_index", "secondary", False),
+    ("ann_ivf_fit", "ivf_index", "secondary", False),
+    ("ann_ivfpq_fit", "ivfpq_index", "secondary", False),
+    ("ann_ivfpqr_fit", "ivfpqr_index", "secondary", False),
+    # the OPQ rotation model (OPQMatrix of the FAISS chain)
+    ("ann_opq_rotation_fit", "opq_model", "secondary", False),
+    ("ann_opq_fit", "opq_index", "secondary", False),
+    # marginal against the warm OPQ artifacts: rotated-space coarse cells
+    # + encode scan
+    ("ann_ivfopq_fit", "ivfopq_index", "secondary", True),
 ]
 
 # Scaling probes: measured exponent e = log(t_hi/t_lo)/log(rows_hi/rows_lo)
@@ -509,158 +556,6 @@ def main() -> None:
             lambda: qs["q1_pricing_summary"](spark, _CALIB_FIXED_SF_DIR).count(),
         )
 
-    # Shared-artifact builds, reported as their OWN lines (VERDICT r7
-    # task 5 — the ann_*_fit/ann_*_probe convention): the LSH pair-set /
-    # portable-signature artifact is built once per (session, sf_dir) and
-    # consumed by dedup_cluster_lsh, so whichever consumer ran first used
-    # to absorb the build into its own entry (r7's cache-cold accounting
-    # shift). Timing the build here makes every consumer entry cache-warm
-    # marginal cost, comparable across rounds; dedup_minhash_lsh remains
-    # deliberately UNCACHED so full mining cost stays visible.
-    builds: dict[str, float] = {}
-    from vmhub_data_pipeline_spark.queries.dedup import (
-        _LSH_INDEX_CACHE,
-        _LSH_PAIRS_CACHE,
-        lsh_index_cached,
-        lsh_pairs_cached,
-    )
-
-    # r8: the maintained near-dup INDEX (banded signatures + hashed
-    # shingle sets) — the upstream artifact BOTH the pair-set build and
-    # dedup_incremental_lsh consume, so it is timed first and the
-    # downstream lines measure marginal cost against a warm index.
-    # Detail-only (BENCH_DETAIL "builds"; kept off the stdout line for
-    # its byte budget).
-    build_detail: dict[str, float] = {}
-    # the compiled LSH probe frames bind the index they were built
-    # against — clearing the index cache without them would leave probes
-    # reading the PREVIOUS (still-resident) checkpoint (the
-    # _PROBE_FRAME_CACHE rule)
-    from vmhub_data_pipeline_spark.queries.dedup import (
-        _LSH_PROBE_FRAME_CACHE,
-    )
-
-    _LSH_PROBE_FRAME_CACHE.clear()
-    _LSH_INDEX_CACHE.clear()
-    t0 = time.perf_counter()
-    lsh_index_cached(spark, sf_dir)
-    build_detail["lsh_index_build"] = round(time.perf_counter() - t0, 3)
-    print(
-        f"# [build sf{sf}, detail-only] lsh_index_build: "
-        f"{build_detail['lsh_index_build']:.3f}s",
-        file=sys.stderr,
-    )
-
-    # r12: the pair set is mined under the PRODUCTION bucket cap and
-    # PUBLISHED to the stable artifact store (durable parquet) — this
-    # build line now prices mine+publish, and the cluster entry's warm
-    # reps read the published parquet instead of a session checkpoint
-    from vmhub_data_pipeline_spark.queries.dedup import _LSH_HOT_CAP as _CAP
-
-    _LSH_PAIRS_CACHE.clear()
-    t0 = time.perf_counter()
-    lsh_pairs_cached(spark, sf_dir, max_bucket_occupancy=_CAP).count()
-    builds["lsh_pairs_build"] = round(time.perf_counter() - t0, 3)
-    print(f"# [build sf{sf}] lsh_pairs_build: {builds['lsh_pairs_build']:.3f}s", file=sys.stderr)
-
-    # r11: the boilerplate-AUGMENTED index (documents ∪ the 150-doc
-    # template slice) consumed by dedup_minhash_lsh_capped and
-    # dedup_lsh_reband_hot — its own detail line so both entries measure
-    # warm marginal cost (the lsh_index_build convention).
-    from vmhub_data_pipeline_spark.queries.dedup import (
-        _LSH_AUG_CACHE,
-        lsh_aug_index_cached,
-    )
-
-    _LSH_AUG_CACHE.clear()
-    t0 = time.perf_counter()
-    lsh_aug_index_cached(spark, sf_dir)
-    build_detail["lsh_aug_index_build"] = round(time.perf_counter() - t0, 3)
-    print(
-        f"# [build sf{sf}, detail-only] lsh_aug_index_build: "
-        f"{build_detail['lsh_aug_index_build']:.3f}s",
-        file=sys.stderr,
-    )
-
-    # r12: the three-family index consumed by dedup_lsh_repair_all — its
-    # own detail line (the lsh_aug_index_build convention), so the
-    # maintenance entry measures warm detect+repair+verify cost.
-    from vmhub_data_pipeline_spark.queries.dedup import (
-        _LSH_MULTI_CACHE,
-        lsh_multi_index_cached,
-    )
-
-    _LSH_MULTI_CACHE.clear()
-    t0 = time.perf_counter()
-    lsh_multi_index_cached(spark, sf_dir)
-    build_detail["lsh_multi_index_build"] = round(time.perf_counter() - t0, 3)
-    print(
-        f"# [build sf{sf}, detail-only] lsh_multi_index_build: "
-        f"{build_detail['lsh_multi_index_build']:.3f}s",
-        file=sys.stderr,
-    )
-
-    # r9: the headline-sf 16-cell IVF-PQ fit, timed as its own detail
-    # build line so the three sf-hi IVF-PQ entries (ann_ivfpq_topk /
-    # ann_ivfpq_filtered_topk / ann_ivfpq_persist_probe) all measure
-    # warm-marginal probe cost instead of whichever-ran-first absorbing
-    # the fit.
-    from vmhub_data_pipeline_spark.queries.vector import ivfpq_index_cached as _ivfpq_cached
-
-    t0 = time.perf_counter()
-    _ivfpq_cached(spark, sf_dir)
-    build_detail["ann_ivfpq_fit_headline"] = round(time.perf_counter() - t0, 3)
-    print(
-        f"# [build sf{sf}, detail-only] ann_ivfpq_fit_headline: "
-        f"{build_detail['ann_ivfpq_fit_headline']:.3f}s",
-        file=sys.stderr,
-    )
-
-    # r10: the headline-sf composed IVF-OPQ fit (rotation model +
-    # transformed corpus + books + rotated-space coarse cells), its own
-    # detail build line so the ann_ivfopq_topk headline entry measures
-    # warm-marginal probe cost — the ann_ivfpq_fit_headline convention.
-    from vmhub_data_pipeline_spark.queries.vector import (
-        ivfopq_index_cached as _ivfopq_cached,
-    )
-
-    t0 = time.perf_counter()
-    _ivfopq_cached(spark, sf_dir)
-    build_detail["ann_ivfopq_fit_headline"] = round(time.perf_counter() - t0, 3)
-    print(
-        f"# [build sf{sf}, detail-only] ann_ivfopq_fit_headline: "
-        f"{build_detail['ann_ivfopq_fit_headline']:.3f}s",
-        file=sys.stderr,
-    )
-
-    # r10 (VERDICT r9 task 8): the drift tier's shared preamble — the
-    # value-grain cumulative artifact (_orders_cents_cum) plus the frozen
-    # PSI decile binner — timed as its own build line so stats_psi_drift
-    # and stats_ks_drift below are labeled warm-marginal monitoring cost
-    # (the lsh_index_build convention). Detail-only.
-    from vmhub_data_pipeline_spark.operators.sampling import _PREAMBLE_CACHE
-    from vmhub_data_pipeline_spark.queries.stats import (
-        _CENTS_CUM_CACHE,
-        _PSI_BOUNDS_CACHE,
-        psi_bounds_cached,
-    )
-
-    _PREAMBLE_CACHE.clear()
-    # the cum HANDLE cache binds the preamble checkpoint it was built
-    # against — clearing one without the other would leave consumers
-    # reading the PREVIOUS (still-resident) checkpoint (the
-    # _PROBE_FRAME_CACHE rule)
-    _CENTS_CUM_CACHE.clear()
-    _PSI_BOUNDS_CACHE.clear()
-    t0 = time.perf_counter()
-    psi_bounds_cached(spark, sf_dir)
-    build_detail["drift_preamble_build"] = round(time.perf_counter() - t0, 3)
-    print(
-        f"# [build sf{sf}, detail-only] drift_preamble_build: "
-        f"{build_detail['drift_preamble_build']:.3f}s",
-        file=sys.stderr,
-    )
-
     def run_once(name: str, d: str) -> tuple[float, int]:
         t0 = time.perf_counter()
         n = qs[name](spark, d).count()
@@ -669,6 +564,60 @@ def main() -> None:
     def median_run(name: str, d: str) -> float:
         runs = [run_once(name, d) for _ in range(REPEATS_DEFAULT)]
         return sorted(t for t, _ in runs)[len(runs) // 2]
+
+    # Shared-artifact builds (BUILDS), each timed cold as its own line:
+    # consumer entries then measure cache-warm marginal cost.
+    from vmhub_data_pipeline_spark.operators.caching import invalidate
+    from vmhub_data_pipeline_spark.queries import dedup as dq
+    from vmhub_data_pipeline_spark.queries import stats as st
+    from vmhub_data_pipeline_spark.queries import vector as vq
+
+    build_fns = {
+        "lsh_index": dq.lsh_index_cached,
+        # the pair-set line prices mine + publish of the parquet artifact
+        "lsh_pairs": lambda s, d: dq.lsh_pairs_cached(
+            s, d, max_bucket_occupancy=dq._LSH_HOT_CAP
+        ).count(),
+        "lsh_aug_index": dq.lsh_aug_index_cached,
+        "lsh_multi_index": dq.lsh_multi_index_cached,
+        # the drift preamble line covers the checkpointed cumulative
+        # artifact AND the PSI binner fitted on it
+        "order_preamble": st.psi_bounds_cached,
+        "pq_books": vq.pq_books_cached,
+        "coarse_cents": vq.coarse_cents_cached,
+        "pq_index": vq.pq_index_cached,
+        "ivf_index": vq.ivf_index_cached,
+        "ivfpq_index": vq.ivfpq_index_cached,
+        "ivfpqr_index": vq.ivfpqr_index_cached,
+        "opq_model": vq.opq_model_cached,
+        "opq_index": vq.opq_index_cached,
+        "ivfopq_index": vq.ivfopq_index_cached,
+    }
+    probes = {fit: (probe, q) for fit, probe, q in ANN_SPLIT + ANN_DETAIL_SPLIT}
+
+    def timed_builds(where: str, d: str, line_block: dict, detail_block: dict) -> None:
+        tag = f"build sf{sf}" if where == "headline" else f"secondary sf{sec_sf}"
+        for label, artifact, at, detail_only in BUILDS:
+            if at != where:
+                continue
+            out = detail_block if detail_only else line_block
+            # drops every entry built from the artifact too: no probe can
+            # time the previous build's (still-resident) checkpoint
+            invalidate(artifact)
+            t0 = time.perf_counter()
+            build_fns[artifact](spark, d)
+            out[label] = round(time.perf_counter() - t0, 3)
+            msg = f"{label}: {out[label]:.3f}s"
+            if label in probes:
+                probe_label, query = probes[label]
+                out[probe_label] = round(median_run(query, d), 3)
+                msg += f", {probe_label}: {out[probe_label]:.3f}s"
+            detail = ", detail-only" if detail_only else ""
+            print(f"# [{tag}{detail}] {msg}", file=sys.stderr)
+
+    builds: dict[str, float] = {}
+    build_detail: dict[str, float] = {}
+    timed_builds("headline", sf_dir, builds, build_detail)
 
     timings: dict[str, float] = {}
     spread: dict[str, dict] = {}
@@ -701,140 +650,19 @@ def main() -> None:
     # ANN fit vs probe, reported apart: the index fit is a train-once cost
     # (O(corpus x iter) distributed, O(model) driver), the probe is what a
     # query actually pays against the resident index.
-    from vmhub_data_pipeline_spark.queries.vector import (
-        _IVF_INDEX_CACHE,
-        _IVFPQ_INDEX_CACHE,
-        _IVFPQR_INDEX_CACHE,
-        _PQ_FIT_CACHE,
-        ivf_index_cached,
-        ivfpq_index_cached,
-        ivfpqr_index_cached,
-        pq_index_cached,
-    )
-
-    from vmhub_data_pipeline_spark.queries.vector import (
-        _OPQ_INDEX_CACHE,
-        _OPQ_MODEL_CACHE,
-        opq_index_cached,
-    )
-
-    ann_kinds = {
-        "pq": (_PQ_FIT_CACHE, pq_index_cached, "ann_pq_topk"),
-        "ivf": (_IVF_INDEX_CACHE, ivf_index_cached, "ann_ivf_topk"),
-        "ivfpq": (_IVFPQ_INDEX_CACHE, ivfpq_index_cached, "ann_ivfpq_topk"),
-        "ivfpqr": (
-            _IVFPQR_INDEX_CACHE,
-            ivfpqr_index_cached,
-            "ann_ivfpq_residual_topk",
-        ),
-        "opq": (_OPQ_INDEX_CACHE, opq_index_cached, "ann_opq_topk"),
-    }
-    # r8: the coarse quantizer AND the PQ sub-codebooks over the unit
-    # corpus are shared model artifacts (the quantizer across both IVF-PQ
-    # variants — the FAISS shared-quantizer layout; the books between the
-    # flat PQ index and the non-residual composed index, which train the
-    # bit-identical model) — each gets its own line, so the per-index
-    # ann_*_fit entries below measure MARGINAL cost against warm shared
-    # models (mostly the encode scans; a cold standalone composed fit
-    # runs the fused one-job-per-round recursion instead — ivfpq_fit_fused
-    # — and costs less than the shared lines summed).
-    from vmhub_data_pipeline_spark.queries.vector import (
-        _COARSE_FIT_CACHE,
-        _PQ_BOOKS_CACHE,
-        coarse_cents_cached,
-        pq_books_cached,
-    )
-
-    _PQ_BOOKS_CACHE.clear()
-    t0 = time.perf_counter()
-    pq_books_cached(spark, sec_dir)
-    secondary["ann_books_fit"] = round(time.perf_counter() - t0, 3)
-    _COARSE_FIT_CACHE.clear()
-    t0 = time.perf_counter()
-    coarse_cents_cached(spark, sec_dir)
-    secondary["ann_coarse_fit"] = round(time.perf_counter() - t0, 3)
-    print(
-        f"# [secondary sf{sec_sf}] ann_books_fit: {secondary['ann_books_fit']:.3f}s, "
-        f"ann_coarse_fit: {secondary['ann_coarse_fit']:.3f}s",
-        file=sys.stderr,
-    )
-    from vmhub_data_pipeline_spark.queries.vector import _PROBE_FRAME_CACHE
-
-    for fit_label, probe_label, kind in ANN_SPLIT:
-        cache, fit_fn, probe_query = ann_kinds[kind]
-        cache.clear()
-        # the compiled probe plan binds the index it was built against —
-        # clearing the index cache without it would leave the probe
-        # timing the PREVIOUS index's (still-resident) checkpoint
-        _PROBE_FRAME_CACHE.clear()
-        if kind == "opq":
-            # the rotation model (scatter + power iteration + energy
-            # pass) is its own artifact (opq_model_cached — the
-            # OPQMatrix of the FAISS chain), reported apart so
-            # ann_opq_fit measures the MARGINAL cost against a warm
-            # rotation: transform + sub-codebook fit + encode
-            _OPQ_MODEL_CACHE.clear()
-            t0 = time.perf_counter()
-            from vmhub_data_pipeline_spark.queries.vector import (
-                opq_model_cached,
-            )
-
-            opq_model_cached(spark, sec_dir)
-            secondary["ann_opq_rotation_fit"] = round(
-                time.perf_counter() - t0, 3
-            )
-            print(
-                f"# [secondary sf{sec_sf}] ann_opq_rotation_fit: "
-                f"{secondary['ann_opq_rotation_fit']:.3f}s",
-                file=sys.stderr,
-            )
-        t0 = time.perf_counter()
-        fit_fn(spark, sec_dir)
-        secondary[fit_label] = round(time.perf_counter() - t0, 3)
-        secondary[probe_label] = round(median_run(probe_query, sec_dir), 3)
-        print(
-            f"# [secondary sf{sec_sf}] {fit_label}: {secondary[fit_label]:.3f}s, "
-            f"{probe_label}: {secondary[probe_label]:.3f}s",
-            file=sys.stderr,
-        )
+    sec_detail: dict[str, float] = {}
+    timed_builds("secondary", sec_dir, secondary, sec_detail)
 
     # r8: the incremental add-batch against the (now warm) IVF-PQ index —
     # the daily-add cost a serving system pays between refits. Recorded in
     # BENCH_DETAIL only (sec_detail), keeping the stdout line inside its
     # 1500-byte budget.
-    sec_detail: dict[str, float] = {}
     sec_detail["ann_ivfpq_add_batch"] = round(
         median_run("ann_ivfpq_add_batch", sec_dir), 3
     )
     print(
         f"# [secondary sf{sec_sf}, detail-only] ann_ivfpq_add_batch: "
         f"{sec_detail['ann_ivfpq_add_batch']:.3f}s",
-        file=sys.stderr,
-    )
-
-    # r10: the composed IVF-OPQ fit/probe split — detail-only (BENCH_DETAIL
-    # via sec_detail; the stdout line has ~34 bytes of headroom left and
-    # the fit/probe convention's history lives in BENCH_DETAIL either
-    # way). The fit is MARGINAL against the warm shared artifacts (the
-    # rotation model + transformed corpus + books are opq's, already fit
-    # above): only the rotated-space coarse quantizer + encode scan run.
-    from vmhub_data_pipeline_spark.queries.vector import (
-        _IVFOPQ_INDEX_CACHE,
-        ivfopq_index_cached,
-    )
-
-    _IVFOPQ_INDEX_CACHE.clear()
-    _PROBE_FRAME_CACHE.clear()
-    t0 = time.perf_counter()
-    ivfopq_index_cached(spark, sec_dir)
-    sec_detail["ann_ivfopq_fit"] = round(time.perf_counter() - t0, 3)
-    sec_detail["ann_ivfopq_probe"] = round(
-        median_run("ann_ivfopq_topk", sec_dir), 3
-    )
-    print(
-        f"# [secondary sf{sec_sf}, detail-only] ann_ivfopq_fit: "
-        f"{sec_detail['ann_ivfopq_fit']:.3f}s, ann_ivfopq_probe: "
-        f"{sec_detail['ann_ivfopq_probe']:.3f}s",
         file=sys.stderr,
     )
 

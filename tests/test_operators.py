@@ -868,37 +868,3 @@ def test_ivfpq_fit_fused_bit_identical_to_sequential(spark):
     )
     assert cents_f == cents_seq
     assert books_f == books_seq
-
-
-def test_sweep_at_exit_registry_drains_scratch_caches():
-    """sweep_at_exit (ADVICE r8): the process-exit sweep must drain every
-    registered scratch cache through its on_evict callback exactly once
-    per value, tolerate a callback that raises (shutdown must not mask
-    the exit), and be idempotent per cache object (double registration
-    must not double-free)."""
-    from vmhub_data_pipeline_spark.operators.caching import (
-        _EXIT_SWEEPS,
-        _sweep_all,
-        sweep_at_exit,
-    )
-
-    before = list(_EXIT_SWEEPS)
-    _EXIT_SWEEPS.clear()  # isolate: don't drain the live session's scratch
-    try:
-        freed: list[str] = []
-        cache_a = sweep_at_exit({}, freed.append)
-        sweep_at_exit(cache_a, freed.append)  # idempotent per cache object
-
-        def boom(_):
-            raise RuntimeError("cleanup failure must not propagate")
-
-        cache_b = sweep_at_exit({}, boom)
-        cache_a[("app", "x")] = "dir-1"
-        cache_a[("app", "y")] = "dir-2"
-        cache_b[("app", "z")] = "dir-3"
-        _sweep_all()
-        assert sorted(freed) == ["dir-1", "dir-2"]
-        assert cache_a == {} and cache_b == {}
-    finally:
-        _EXIT_SWEEPS.clear()
-        _EXIT_SWEEPS.extend(before)

@@ -129,12 +129,11 @@ def test_streamed_lsh_growth_row_equal_to_batch_append(spark, sf_dir):
     append ≡ rebuild): streaming machinery may not perturb a single
     band row or shingle set."""
     from vmhub_data_pipeline_spark.queries.streaming_queries import (
-        _GROWN_LSH,
+        _lsh_growth_dir,
     )
 
     Q["streaming_lsh_index_growth"].fn(spark, sf_dir).count()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    grown = _GROWN_LSH[key]
+    grown = _lsh_growth_dir(spark, sf_dir)
     # __sb is the batch-keyed sink partition (r11 crash-idempotency
     # bookkeeping), not index state — drop it for the row-set comparison
     g_banded = spark.read.parquet(f"{grown}/banded").drop("__sb")
@@ -152,12 +151,11 @@ def test_streamed_lsh_growth_exactly_once_and_multibatch(spark, sf_dir):
     import os
 
     from vmhub_data_pipeline_spark.queries.streaming_queries import (
-        _GROWN_LSH,
+        _lsh_growth_dir,
     )
 
     Q["streaming_lsh_index_growth"].fn(spark, sf_dir).count()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    grown = _GROWN_LSH[key]
+    grown = _lsh_growth_dir(spark, sf_dir)
     n1 = (
         spark.read.parquet(f"{grown}/banded").count(),
         spark.read.parquet(f"{grown}/toks").count(),

@@ -222,7 +222,7 @@ def _orderless_digest(df) -> tuple:
     return agg["n"], agg["d"]
 
 
-def _replay_with_fresh_checkpoint(spark, sf_dir, name, grown_cache):
+def _replay_with_fresh_checkpoint(spark, sf_dir, name, growth_dir):
     """Run a growth stream, wipe ONLY its checkpoint (keeping the grown
     parquets — the mid-crash worst case: data written, commit lost), and
     run it again so every batch replays."""
@@ -230,8 +230,7 @@ def _replay_with_fresh_checkpoint(spark, sf_dir, name, grown_cache):
     import shutil
 
     Q[name].fn(spark, sf_dir).count()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    grown = grown_cache[key]
+    grown = growth_dir(spark, sf_dir)
     shutil.rmtree(os.path.join(grown, "_ckpt"))
     Q[name].fn(spark, sf_dir).count()
     return grown
@@ -243,17 +242,16 @@ def test_lsh_growth_replay_is_idempotent(spark, sf_dir):
     checkpoint, same arrival files, grown parquets already populated)
     reproduce the identical row sets on BOTH legs — where a plain append
     sink would have doubled every batch's rows (VERDICT r10 task 2)."""
-    from vmhub_data_pipeline_spark.queries.streaming_queries import _GROWN_LSH
+    from vmhub_data_pipeline_spark.queries.streaming_queries import _lsh_growth_dir
 
     Q["streaming_lsh_index_growth"].fn(spark, sf_dir).count()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    grown = _GROWN_LSH[key]
+    grown = _lsh_growth_dir(spark, sf_dir)
     before = (
         _orderless_digest(spark.read.parquet(f"{grown}/banded")),
         _orderless_digest(spark.read.parquet(f"{grown}/toks")),
     )
     _replay_with_fresh_checkpoint(
-        spark, sf_dir, "streaming_lsh_index_growth", _GROWN_LSH
+        spark, sf_dir, "streaming_lsh_index_growth", _lsh_growth_dir
     )
     after = (
         _orderless_digest(spark.read.parquet(f"{grown}/banded")),
@@ -266,15 +264,14 @@ def test_lsh_growth_replay_is_idempotent(spark, sf_dir):
 def test_ivfpq_growth_replay_is_idempotent(spark, sf_dir):
     """Same pin for the IVF-PQ growth stream's lists sink."""
     from vmhub_data_pipeline_spark.queries.streaming_queries import (
-        _GROWN_IVFPQ,
+        _ivfpq_growth_dir,
     )
 
     Q["streaming_index_growth"].fn(spark, sf_dir).count()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    grown = _GROWN_IVFPQ[key]
+    grown = _ivfpq_growth_dir(spark, sf_dir)
     before = _orderless_digest(spark.read.parquet(f"{grown}/lists"))
     _replay_with_fresh_checkpoint(
-        spark, sf_dir, "streaming_index_growth", _GROWN_IVFPQ
+        spark, sf_dir, "streaming_index_growth", _ivfpq_growth_dir
     )
     after = _orderless_digest(spark.read.parquet(f"{grown}/lists"))
     assert before == after, (before, after)
@@ -289,14 +286,12 @@ def test_lsh_growth_failure_discards_and_retry_recovers(spark, sf_dir):
     import os
 
     import vmhub_data_pipeline_spark.operators.dedup as dedup_ops
-    from vmhub_data_pipeline_spark.queries.streaming_queries import _GROWN_LSH
+    from vmhub_data_pipeline_spark.operators.caching import invalidate, store
 
     # reference result from a clean run, then reset the growth state
     ref = _orderless_digest(Q["streaming_lsh_index_growth"].fn(spark, sf_dir))
     key = (spark.sparkContext.applicationId, sf_dir)
-    import shutil
-
-    shutil.rmtree(_GROWN_LSH.pop(key), ignore_errors=True)
+    invalidate("lsh_growth_dir")
 
     real = dedup_ops.minhash_banded
 
@@ -310,7 +305,7 @@ def test_lsh_growth_failure_discards_and_retry_recovers(spark, sf_dir):
     finally:
         dedup_ops.minhash_banded = real
     # the discard ran: no half-grown dir is cached or left on disk
-    assert key not in _GROWN_LSH
+    assert key not in store("lsh_growth_dir")
     # retry rebuilds cleanly and serves the reference result
     got = _orderless_digest(Q["streaming_lsh_index_growth"].fn(spark, sf_dir))
     assert got == ref
@@ -348,18 +343,15 @@ def test_lsh_cold_probe_serves_without_any_fit(spark, sf_dir, monkeypatch):
     published, every in-memory cache cleared, and the signer functions
     FORBIDDEN (monkeypatched to raise), the cold probe still serves —
     row-identical to the resident-index probe."""
-    from vmhub_data_pipeline_spark.queries.dedup import (
-        _LSH_DISK_CACHE,
-        _LSH_INDEX_CACHE,
-        lsh_index_persisted,
-    )
+    from vmhub_data_pipeline_spark.operators.caching import invalidate
+    from vmhub_data_pipeline_spark.queries.dedup import lsh_index_persisted
 
     ref = Q["dedup_incremental_lsh"].fn(spark, sf_dir)
     ref_rows = ref.collect()
     lsh_index_persisted(spark, sf_dir)  # publish the stable artifact
 
-    _LSH_INDEX_CACHE.clear()
-    _LSH_DISK_CACHE.clear()
+    invalidate("lsh_index")
+    invalidate("lsh_persisted")
 
     def _forbidden(*a, **k):
         raise AssertionError("fit work ran on the cold path")
@@ -380,23 +372,17 @@ def test_ann_cold_reload_serves_without_any_fit(spark, sf_dir, monkeypatch):
     """Same pin for the ANN tier: artifact published, model/index caches
     cleared, BOTH fit entry points forbidden — the cold reload serves the
     resident probe's exact rows from the mounted path alone."""
-    from vmhub_data_pipeline_spark.queries.vector import (
-        _COARSE_FIT_CACHE,
-        _IVFPQ_DISK_CACHE,
-        _IVFPQ_INDEX_CACHE,
-        _PQ_BOOKS_CACHE,
-        _PROBE_FRAME_CACHE,
-        ivfpq_index_persisted,
-    )
+    from vmhub_data_pipeline_spark.operators.caching import invalidate
+    from vmhub_data_pipeline_spark.queries.vector import ivfpq_index_persisted
 
     ref_rows = {tuple(r) for r in Q["ann_ivfpq_topk"].fn(spark, sf_dir).collect()}
     ivfpq_index_persisted(spark, sf_dir)  # publish the stable artifact
 
-    _IVFPQ_INDEX_CACHE.clear()
-    _COARSE_FIT_CACHE.clear()
-    _PQ_BOOKS_CACHE.clear()
-    _IVFPQ_DISK_CACHE.clear()
-    _PROBE_FRAME_CACHE.clear()
+    for name in (
+        "ivfpq_index", "coarse_cents", "pq_books", "ivfpq_persisted",
+        "ann_probe_frame",
+    ):
+        invalidate(name)
 
     def _forbidden(*a, **k):
         raise AssertionError("fit work ran on the cold path")

@@ -112,6 +112,7 @@ def test_pair_set_artifact_is_durable_and_serves_without_remine(
     applied to a derived artifact."""
     import vmhub_data_pipeline_spark.operators.dedup as od
     from vmhub_data_pipeline_spark.operators.artifacts import artifact_complete
+    from vmhub_data_pipeline_spark.operators.caching import invalidate
     from vmhub_data_pipeline_spark.queries import dedup as dq
 
     baseline = Q["dedup_cluster_lsh"].fn(spark, sf_dir)
@@ -119,7 +120,7 @@ def test_pair_set_artifact_is_durable_and_serves_without_remine(
     path = dq.lsh_pairs_artifact_dir(sf_dir, 0.9, _LSH_HOT_CAP)
     assert artifact_complete(path)
 
-    dq._LSH_PAIRS_CACHE.clear()
+    invalidate("lsh_pairs")
 
     def _forbidden(*a, **k):  # pragma: no cover - failure path
         raise AssertionError("pair set was re-mined from a published artifact")
@@ -193,24 +194,15 @@ def test_lsh_grown_cold_probe_serves_without_fit_or_growth(
     functions and the growth stream itself are forbidden — the cold
     entry still serves, row-identical to the warm streamed-growth
     probe."""
-    import shutil
-
+    from vmhub_data_pipeline_spark.operators.caching import invalidate
     from vmhub_data_pipeline_spark.queries import streaming_queries as sq
-    from vmhub_data_pipeline_spark.queries.dedup import (
-        _LSH_DISK_CACHE,
-        _LSH_INDEX_CACHE,
-    )
 
     warm_rows = {
         tuple(r) for r in Q["streaming_lsh_index_growth"].fn(spark, sf_dir).collect()
     }
 
-    for p in list(sq._GROWN_LSH.values()):
-        shutil.rmtree(p, ignore_errors=True)
-    sq._GROWN_LSH.clear()
-    sq._GROWN_PROBE_CACHE.clear()
-    _LSH_INDEX_CACHE.clear()
-    _LSH_DISK_CACHE.clear()
+    for name in ("lsh_growth_dir", "grown_probe", "lsh_index", "lsh_persisted"):
+        invalidate(name)
 
     def _forbidden(*a, **k):  # pragma: no cover - failure path
         raise AssertionError("fit/growth work ran on the cold grown path")
@@ -233,30 +225,18 @@ def test_ann_grown_cold_reload_serves_without_fit_or_growth(
 ):
     """The ANN twin: grown lists + frozen model mount from one published
     path; fit entry points AND the growth stream forbidden."""
-    import shutil
-
+    from vmhub_data_pipeline_spark.operators.caching import invalidate
     from vmhub_data_pipeline_spark.queries import streaming_queries as sq
-    from vmhub_data_pipeline_spark.queries.vector import (
-        _COARSE_FIT_CACHE,
-        _IVFPQ_DISK_CACHE,
-        _IVFPQ_INDEX_CACHE,
-        _PQ_BOOKS_CACHE,
-        _PROBE_FRAME_CACHE,
-    )
 
     warm_rows = {
         tuple(r) for r in Q["streaming_index_growth"].fn(spark, sf_dir).collect()
     }
 
-    for p in list(sq._GROWN_IVFPQ.values()):
-        shutil.rmtree(p, ignore_errors=True)
-    sq._GROWN_IVFPQ.clear()
-    sq._GROWN_PROBE_CACHE.clear()
-    _IVFPQ_INDEX_CACHE.clear()
-    _IVFPQ_DISK_CACHE.clear()
-    _PROBE_FRAME_CACHE.clear()
-    _COARSE_FIT_CACHE.clear()
-    _PQ_BOOKS_CACHE.clear()
+    for name in (
+        "ivfpq_growth_dir", "grown_probe", "ivfpq_index", "ivfpq_persisted",
+        "ann_probe_frame", "coarse_cents", "pq_books",
+    ):
+        invalidate(name)
 
     def _forbidden(*a, **k):  # pragma: no cover - failure path
         raise AssertionError("fit/growth work ran on the cold grown path")

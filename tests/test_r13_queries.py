@@ -140,18 +140,14 @@ def test_grown_maintenance_cold_mount_serves_without_fit_or_growth(
     cleared; signers, the index builder AND the growth stream forbidden)
     reproduces the audit entirely from mounted parquet — the maintenance
     contract provably applies to durable state."""
+    from vmhub_data_pipeline_spark.operators.caching import invalidate
     from vmhub_data_pipeline_spark.queries import streaming_queries as sq
-    from vmhub_data_pipeline_spark.queries.dedup import (
-        _LSH_DISK_CACHE,
-        _LSH_INDEX_CACHE,
-    )
 
     warm = sorted(
         tuple(r) for r in Q["dedup_lsh_grown_maintenance"].fn(spark, sf_dir).collect()
     )
-    sq._GROWN_PROBE_CACHE.clear()
-    _LSH_INDEX_CACHE.clear()
-    _LSH_DISK_CACHE.clear()
+    for name in ("grown_probe", "lsh_index", "lsh_persisted"):
+        invalidate(name)
 
     def _forbidden(*a, **k):  # pragma: no cover - failure path
         raise AssertionError("fit/growth work ran on the cold maintenance path")
@@ -237,8 +233,7 @@ def test_compact_grown_lsh_dir_preserves_probe_without_reencode(
         tuple(r)
         for r in Q["streaming_lsh_index_growth"].fn(spark, sf_dir).collect()
     }
-    key = (spark.sparkContext.applicationId, sf_dir)
-    grown = sq._GROWN_LSH[key]
+    grown = sq._lsh_growth_dir(spark, sf_dir)
 
     def _forbidden(*a, **k):  # pragma: no cover - failure path
         raise AssertionError("compaction re-encoded index rows")

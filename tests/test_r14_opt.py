@@ -77,12 +77,10 @@ def test_lsh_index_mine_side_is_narrow(spark):
     """The maintained LSH index hands its consumers corpus-width frames:
     banded and toks must read at the byte-derived width, not the build's
     full-cores spread (the r13 lsh_pairs_build pathology)."""
-    from vmhub_data_pipeline_spark.queries.dedup import (
-        _LSH_INDEX_CACHE,
-        lsh_index_cached,
-    )
+    from vmhub_data_pipeline_spark.operators.caching import invalidate
+    from vmhub_data_pipeline_spark.queries.dedup import lsh_index_cached
 
-    _LSH_INDEX_CACHE.clear()
+    invalidate("lsh_index")
     banded, toks = lsh_index_cached(spark, SF)
     k = _expected_width(SF)
     assert banded.rdd.getNumPartitions() <= k

@@ -139,12 +139,11 @@ def test_streamed_growth_is_stateless_pure_append(spark, sf_dir):
     import os
 
     from vmhub_data_pipeline_spark.queries.streaming_queries import (
-        _GROWN_IVFPQ,
+        _ivfpq_growth_dir,
     )
 
     Q["streaming_index_growth"].fn(spark, sf_dir).count()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    grown = _GROWN_IVFPQ[key]
+    grown = _ivfpq_growth_dir(spark, sf_dir)
     n1 = spark.read.parquet(f"{grown}/lists").count()
     Q["streaming_index_growth"].fn(spark, sf_dir).count()
     n2 = spark.read.parquet(f"{grown}/lists").count()

@@ -366,8 +366,8 @@ def test_order_statistic_preamble_cache_reuse(spark):
     invocations (the drift monitors' fitted-model contract): a second
     call must return identical results without inserting a new entry,
     and entries from other applicationIds are evicted on insert."""
+    from vmhub_data_pipeline_spark.operators.caching import invalidate, store
     from vmhub_data_pipeline_spark.operators.sampling import (
-        _PREAMBLE_CACHE,
         distributed_prefix_sums,
         global_order_values,
     )
@@ -375,19 +375,20 @@ def test_order_statistic_preamble_cache_reuse(spark):
     df = spark.range(100).selectExpr(
         "id AS k", "CAST((id * 37) % 50 AS BIGINT) AS metric", "CAST(1 AS BIGINT) AS one"
     )
-    _PREAMBLE_CACHE.clear()
+    preambles = store("order_preamble")
+    invalidate("order_preamble")
     app = spark.sparkContext.applicationId
     # stale-session entry must be evicted on the first insert
-    _PREAMBLE_CACHE[("dead-app", "x")] = ("stale", "stale")
+    preambles[("dead-app", "x")] = ("stale", "stale")
     key = (app, "fixture", "m")
     got1 = global_order_values(df, "metric", "k", [0, 50, 99], num_partitions=4,
                                cache_key=key)
-    assert ("dead-app", "x") not in _PREAMBLE_CACHE
-    n_entries = len(_PREAMBLE_CACHE)
+    assert ("dead-app", "x") not in preambles
+    n_entries = len(preambles)
     got2 = global_order_values(df, "metric", "k", [0, 50, 99], num_partitions=4,
                                cache_key=key)
     assert got1 == got2
-    assert len(_PREAMBLE_CACHE) == n_entries  # warm call: no new entry
+    assert len(preambles) == n_entries  # warm call: no new entry
     # prefix sums: cached preamble + return_totals match the uncached path
     cum, totals = distributed_prefix_sums(
         df, "metric", "k", ["one"], num_partitions=4,

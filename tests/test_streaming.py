@@ -144,8 +144,9 @@ def test_streaming_catalog_caches_fixture_landing(spark, monkeypatch):
     no write job (VERDICT r1 #6: bench/driver double-runs must not be
     dominated by fixture rewrites)."""
     import vmhub_data_pipeline_spark.queries.streaming_queries as sq
+    from vmhub_data_pipeline_spark.operators.caching import invalidate
 
-    sq._LANDED.clear()
+    invalidate("landed_events")
     calls = {"n": 0}
     real = sq.tempfile.mkdtemp
 

@@ -252,3 +252,20 @@ def publish_artifact(path: str, build_into: Callable[[str], None]) -> str:
     finally:
         shutil.rmtree(staging, ignore_errors=True)
     return path
+
+
+def published(name: str, spark, path: str, build_into: Callable[[str], None]) -> str:
+    """The session's handle on the durable artifact at ``path``: publish
+    it via ``build_into`` if absent, then return ``path``. The publish
+    runs as the registry build of ``name``, so every upstream artifact
+    ``build_into`` fetches (a resident index) is recorded as built-from,
+    and invalidating that upstream drops this entry and the plans built
+    over it. A path deleted since this session published it is published
+    again; plans over it key on its ``dir_fingerprint``, which the
+    rebuild changes."""
+    from .caching import get
+
+    get(name, spark, (path,), lambda: publish_artifact(path, build_into))
+    if not artifact_complete(path):
+        publish_artifact(path, build_into)
+    return path

@@ -34,17 +34,7 @@ from typing import Iterator, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from .caching import session_cache_put
-
-# (applicationId, *caller key, fn, order/tiebreak/sum cols, partitions) ->
-# (ranged localCheckpointed frame, per-partition driver rows). The
-# range-repartition + eager localCheckpoint preamble is the fitted-model
-# state of the order-statistic operators; before r8 every drift monitor
-# paid a private checkpoint pass PER INVOCATION (VERDICT r7 what's-wrong
-# #1) — now invocations against the same corpus share one, exactly like
-# the ANN index caches. Entries for stopped sessions are evicted on
-# insert (session_cache_put).
-_PREAMBLE_CACHE: dict[tuple, tuple] = {}
+from .caching import get
 
 
 def _ranged_preamble(
@@ -68,25 +58,28 @@ def _ranged_preamble(
     sharing a corpus label but passing differently-FILTERED frames
     (e.g. two baseline periods) can never be served each other's
     materialized data — key misuse becomes a cache miss, never a wrong
-    answer."""
-    key = None
-    if cache_key is not None:
-        plan_hash = df._jdf.queryExecution().analyzed().semanticHash()
-        key = (cache_key[0],) + tag + tuple(cache_key[1:]) + (plan_hash,)
-        hit = _PREAMBLE_CACHE.get(key)
-        if hit is not None:
-            return hit
-    ranged = (
-        df.repartitionByRange(num_partitions, F.col(order_col), F.col(tiebreak_col))
-        .sortWithinPartitions(order_col, tiebreak_col)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    answer. The entry lives in the artifact registry as
+    ``order_preamble``: the drift monitors' fitted-model state, shared by
+    every invocation against the same corpus."""
+
+    def build():
+        ranged = (
+            df.repartitionByRange(num_partitions, F.col(order_col), F.col(tiebreak_col))
+            .sortWithinPartitions(order_col, tiebreak_col)
+            .withColumn("__pid", F.spark_partition_id())
+            .localCheckpoint(eager=True)
+        )
+        return ranged, ranged.groupBy("__pid").agg(*agg_cols).collect()
+
+    if cache_key is None:
+        return build()
+    plan_hash = df._jdf.queryExecution().analyzed().semanticHash()
+    return get(
+        "order_preamble",
+        df.sparkSession,
+        tag + tuple(cache_key[1:]) + (plan_hash,),
+        build,
     )
-    rows = ranged.groupBy("__pid").agg(*agg_cols).collect()
-    out = (ranged, rows)
-    if key is not None:
-        session_cache_put(_PREAMBLE_CACHE, key, out)
-    return out
 
 
 def derived_hash(seed: str, key_col: str) -> F.Column:

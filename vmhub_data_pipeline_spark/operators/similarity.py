@@ -19,9 +19,9 @@ doubles — no Python, no UDF.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
-from .caching import bounded_cache_put
+from .caching import get
 
 
 def _as_double(vec: Column) -> Column:
@@ -115,13 +115,13 @@ def spread_small_input(
     ROUND pays the task floor again (measured: one k-means round over a
     sub-MB corpus at 32 slices costs 1.5-1.8x the 4-slice round, both
     sfs). Sizing is data-derived (input bytes, cores), never a fixed
-    local count; when the input's file set is unknown (unions with
-    synthetic legs, upstream checkpoints) the full-cores behavior is
-    kept."""
+    local count. A union is sized by its file-backed legs (synthetic
+    legs add no bytes, so their rows are undercounted); only a plan with
+    no file source at all, such as a resident checkpoint, is unsized and
+    keeps its layout (below)."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if bytes_per_slice:
         import math
-        import os
 
         nbytes = _input_bytes(df)
         if nbytes > 0:
@@ -144,10 +144,12 @@ def spread_small_input(
 
 
 def _input_bytes(df: DataFrame) -> int:
-    """Total on-disk bytes of ``df``'s file sources, 0 when unknown.
-    Any failure to size the input (non-file relations, unions with
-    synthetic legs, streaming plans — inputFiles itself can raise there)
-    degrades to 0 so callers keep their full-cores / no-op behavior."""
+    """Total on-disk bytes of ``df``'s file sources, 0 when it has none.
+    A union counts only its file-backed legs, so rows from synthetic legs
+    (``spark.range``, literals) are not sized. Plans with no file source
+    (resident checkpoints) and plans where ``inputFiles`` raises
+    (streaming) come back 0, and callers keep their full-cores / no-op
+    behavior."""
     import os
 
     try:
@@ -173,8 +175,8 @@ def narrow_resident(
     blocks at read time — no shuffle, the build's parallelism is
     untouched — so mine-side jobs run ceil(source_bytes / slice) tasks.
     At scale the source has >= cores x slice bytes and this is a no-op;
-    when the source cannot be sized (synthetic unions) the frame is
-    returned unchanged. Row values are untouched — partitioning only."""
+    a union source is sized by its file-backed legs, and a source with
+    no file at all (a resident checkpoint) returns the frame unchanged. Row values are untouched — partitioning only."""
     if bytes_per_slice is None:
         bytes_per_slice = _FIT_BYTES_PER_SLICE
     import math
@@ -996,12 +998,15 @@ def _adc_shortlist_rerank(
     )
 
 
-# Prepared model-constant Column expressions, keyed on the model values
-# themselves: a Column is an immutable UNRESOLVED expression tree, safely
-# reusable across plans, and re-parsing the m*k literal matrices costs
-# ~0.3-0.5 s of driver time per probe — a server compiles its query-prep
-# expressions once per model, so cache them with the model.
-_PREP_EXPR_CACHE: dict[tuple, Column] = {}
+def _prep_expr(key: tuple, build) -> Column:
+    """Prepared model-constant Column expressions, keyed on the model
+    values themselves: a Column is an immutable UNRESOLVED expression
+    tree, safely reusable across plans, and re-parsing the m*k literal
+    matrices costs ~0.3-0.5 s of driver time per probe — a server
+    compiles its query-prep expressions once per model, so they are
+    registered with the model (``prep_expr``, under the active
+    session)."""
+    return get("prep_expr", SparkSession.active(), key, build)
 
 
 def _model_key(*parts) -> tuple:
@@ -1020,9 +1025,8 @@ def _query_lut_col(books: list[list[list[float]]], sub: int) -> Column:
     cached helpers: the cache key covers only the model, so a
     caller-supplied column would bind the first caller's tree for
     everyone)."""
-    key = ("lut", sub, _model_key(books))
-    col = _PREP_EXPR_CACHE.get(key)
-    if col is None:
+
+    def build() -> Column:
         lut_terms = []
         for j, cents in enumerate(books):
             qj = F.slice(F.col("qv"), j * sub + 1, sub)
@@ -1033,9 +1037,9 @@ def _query_lut_col(books: list[list[list[float]]], sub: int) -> Column:
                     mat, norms2, lambda c, n2: n2 - F.lit(2.0) * dot_expr(qj, c)
                 )
             )
-        col = F.array(*lut_terms)
-        bounded_cache_put(_PREP_EXPR_CACHE, key, col)
-    return col
+        return F.array(*lut_terms)
+
+    return _prep_expr(("lut", sub, _model_key(books)), build)
 
 
 def ivfpq_knn(
@@ -1142,19 +1146,18 @@ def _probe_cells_col(cents: list[list[float]], nprobe: int) -> Column:
     its whole plan JVM-side, so the probe path budgets ONE plan carrying
     the model literals — the r6-measured "probe constant" was exactly
     these repeated analyses."""
-    key = ("probes", nprobe, _model_key(cents))
-    col = _PREP_EXPR_CACHE.get(key)
-    if col is None:
+
+    def build() -> Column:
         ranked = F.transform(
             _centroid_scores(cents, F.col("qv")),
             lambda s, i: F.struct(s.alias("s"), i.alias("c")),
         )
-        col = F.transform(
+        return F.transform(
             F.slice(F.reverse(F.array_sort(ranked)), 1, nprobe),
             lambda st: st["c"],
         )
-        bounded_cache_put(_PREP_EXPR_CACHE, key, col)
-    return col
+
+    return _prep_expr(("probes", nprobe, _model_key(cents)), build)
 
 
 def _cent_matrix_col(cents: list[list[float]]) -> Column:
@@ -1162,12 +1165,7 @@ def _cent_matrix_col(cents: list[list[float]]) -> Column:
     ``element_at(mat, bucket + 1)`` fetches a row per assigned/probed
     cell (residual subtraction needs the centroid VALUES at execution
     time, not just the argmax)."""
-    key = ("centmat", _model_key(cents))
-    col = _PREP_EXPR_CACHE.get(key)
-    if col is None:
-        col = F.expr(_mat_sql(cents))
-        bounded_cache_put(_PREP_EXPR_CACHE, key, col)
-    return col
+    return _prep_expr(("centmat", _model_key(cents)), lambda: F.expr(_mat_sql(cents)))
 
 
 def _residual_expr(vec: Column, cents: list[list[float]], bucket: Column) -> Column:
@@ -1186,9 +1184,8 @@ def _residual_lut_col(books: list[list[list[float]]], sub: int) -> Column:
     residuals — both sides subtract the same cell centroid, so ADC
     approximates the original distance with the coarse component
     removed. Cached with the model."""
-    key = ("rlut", sub, _model_key(books))
-    col = _PREP_EXPR_CACHE.get(key)
-    if col is None:
+
+    def build() -> Column:
         lut_terms = []
         for j, cbook in enumerate(books):
             qj = F.slice(F.col("__qr"), j * sub + 1, sub)
@@ -1199,9 +1196,9 @@ def _residual_lut_col(books: list[list[list[float]]], sub: int) -> Column:
                     mat, norms2, lambda c, n2: n2 - F.lit(2.0) * dot_expr(qj, c)
                 )
             )
-        col = F.array(*lut_terms)
-        bounded_cache_put(_PREP_EXPR_CACHE, key, col)
-    return col
+        return F.array(*lut_terms)
+
+    return _prep_expr(("rlut", sub, _model_key(books)), build)
 
 
 def ivfpq_residual_knn(

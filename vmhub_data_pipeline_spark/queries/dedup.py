@@ -20,9 +20,9 @@ from ..operators.dedup import (
     minhash_neardup_pairs,
     simhash_neardup_pairs,
 )
+from ..operators.caching import get, store
 from ..tables import load
 from . import register
-from ..operators.caching import session_cache_put
 
 _EXACT_ORACLE = """
 SELECT
@@ -611,9 +611,6 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup_minhash_lsh itself stays UNCACHED so its bench entry keeps
 # timing the full mining cost honestly; dedup_cluster_lsh times
 # pair-set -> clusters, its actual marginal job.
-_LSH_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def lsh_pairs_artifact_dir(sf_dir: str, threshold: float, cap: int | None) -> str:
     """Stable content-keyed path of the verified pair-set artifact — a
     pure function of the corpus files + the mining config, so any process
@@ -643,34 +640,34 @@ def lsh_pairs_cached(
     Built once per (corpus, config) and PUBLISHED to the stable artifact
     store (publish-atomic, durable — the index-artifact discipline
     applied to the derived pair set); the returned frame reads the
-    published parquet, with the compiled handle cached per session keyed
-    on the artifact's file fingerprint so a rebuilt artifact can never
-    serve a plan bound to deleted files."""
-    from ..operators.artifacts import artifact_complete, publish_artifact
+    published parquet, with the compiled handle registered per session
+    keyed on the artifact's file fingerprint so a rebuilt artifact can
+    never serve a plan bound to deleted files. A pair set published from
+    the resident index is recorded as built from it."""
+    from ..operators.artifacts import published
     from ..operators.caching import dir_fingerprint
     from ..operators.dedup import minhash_pairs_from_index
 
-    path = lsh_pairs_artifact_dir(sf_dir, threshold, max_bucket_occupancy)
-    if not artifact_complete(path):
+    def _build(staging: str) -> None:
         banded, toks = lsh_index_cached(spark, sf_dir)
-        pairs = minhash_pairs_from_index(
+        minhash_pairs_from_index(
             banded, toks, threshold=threshold,
             max_bucket_occupancy=max_bucket_occupancy,
-        )
+        ).write.mode("overwrite").parquet(f"{staging}/pairs")
 
-        def _build(staging: str) -> None:
-            pairs.write.mode("overwrite").parquet(f"{staging}/pairs")
-
-        publish_artifact(path, _build)
-    key = (
-        spark.sparkContext.applicationId, sf_dir, threshold,
-        max_bucket_occupancy, dir_fingerprint(path),
+    path = published(
+        "lsh_pairs_published", spark,
+        lsh_pairs_artifact_dir(sf_dir, threshold, max_bucket_occupancy), _build,
     )
-    cached = _LSH_PAIRS_CACHE.get(key)
-    if cached is None:
-        cached = spark.read.parquet(f"{path}/pairs")
-        session_cache_put(_LSH_PAIRS_CACHE, key, cached)
-    return cached
+
+    def build() -> DataFrame:
+        published("lsh_pairs_published", spark, path, _build)  # records the edge
+        return spark.read.parquet(f"{path}/pairs")
+
+    return get(
+        "lsh_pairs", spark,
+        (sf_dir, threshold, max_bucket_occupancy, dir_fingerprint(path)), build,
+    )
 
 
 @register(
@@ -1129,16 +1126,17 @@ WHERE d.doc_id >= cut.cut
 # incremental probe consumes it; bench reports the build as its own
 # detail line (lsh_index_build) so the probe entry measures the daily
 # marginal cost, the lsh_pairs_build / ann_*_fit convention.
-_LSH_INDEX_CACHE: dict[tuple, tuple] = {}
+# _LSH_INDEX_CACHE and _LSH_PROBE_FRAME_CACHE (below) are the registry's
+# own stores, bound here because perfbench clears them by name to force
+# a cold rebuild.
+_LSH_INDEX_CACHE = store("lsh_index")
 
 
 def lsh_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
     from ..operators.dedup import banded_from_sig, minhash_signed_sets
     from ..operators.similarity import checkpoint_index, narrow_resident
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LSH_INDEX_CACHE.get(key)
-    if cached is None:
+    def build() -> tuple:
         (docs,) = load(spark, sf_dir, "documents")
         # r13 (guide §2.3/§2.4): the banded signatures and the hashed
         # shingle sets used to be two independent corpus materializations
@@ -1162,10 +1160,9 @@ def lsh_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
             docs,
         )
         banded = checkpoint_index(banded_from_sig(joint, portable=True))
-        toks = joint.select("id", "ws")
-        cached = (banded, toks)
-        session_cache_put(_LSH_INDEX_CACHE, key, cached)
-    return cached
+        return banded, joint.select("id", "ws")
+
+    return get("lsh_index", spark, (sf_dir,), build)
 
 
 def _incremental_probe(
@@ -1264,9 +1261,8 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-new-doc rollup and best-match window run at candidate grain.
     md5-portable hashing end to end, so the oracle replays candidates,
     verification, and the best-match choice exactly."""
-    key = (spark.sparkContext.applicationId, sf_dir, "resident")
-    probe = _LSH_PROBE_FRAME_CACHE.get(key)
-    if probe is None:
+
+    def build() -> DataFrame:
         (docs,) = load(spark, sf_dir, "documents")
         banded_idx, toks = lsh_index_cached(spark, sf_dir)
         # r13 opt: the batch boundary rides as the session-cached LITERAL
@@ -1276,23 +1272,12 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exchanges on EVERY probe execution; the literal pays one tiny
         # build-time job and lets the new-docs scan push doc_id >= cut
         # into the parquet reader. Same cut value -> identical output.
-        probe = _incremental_probe(
+        return _incremental_probe(
             docs, banded_idx, toks, cut=_lsh_batch_cut(spark, sf_dir)
         )
-        session_cache_put(_LSH_PROBE_FRAME_CACHE, key, probe)
-    return probe
 
+    return get("lsh_probe_frame", spark, (sf_dir, "resident"), build)
 
-# (app_id, sf_dir) -> the resolved STABLE artifact dir of the persisted
-# dedup index (banded/ the band-signature rows, toks/ the hashed shingle
-# sets) — the durable handoff between the offline signature job and the
-# daily probe job, mirroring the ANN tier's ivfpq_index_persisted artifact.
-# Since r11 (VERDICT r10 task 3) the dir is CONTENT-KEYED and durable
-# (operators/artifacts.py): no exit sweep, no per-session mkdtemp — a
-# fresh session over the same corpus+config resolves and mounts the same
-# path instead of silently re-fitting. The dict only caches the resolved
-# path per session.
-_LSH_DISK_CACHE: dict[tuple, str] = {}
 
 # model parameters baked into the artifact key: 32 md5-portable minhash
 # functions, 8 bands, 3-word shingles, 13-hex-char shingle digests
@@ -1307,6 +1292,28 @@ def lsh_artifact_dir(sf_dir: str) -> str:
 
     return stable_artifact_dir(
         "lshidx", sf_dir, _LSH_MODEL_PARAMS, tables=("documents",)
+    )
+
+
+def _lsh_persisted_dir(
+    spark: SparkSession, sf_dir: str, artifact_dir: str | None = None
+) -> str:
+    """The persisted dedup index's STABLE artifact dir (banded/ the
+    band-signature rows, toks/ the hashed shingle sets), published from
+    the resident index if absent — the durable handoff between the
+    offline signature job and the daily probe job, mirroring the ANN
+    tier's ivfpq_index_persisted artifact. Content-keyed and durable
+    since r11 (operators/artifacts.py): a fresh session over the same
+    corpus+config mounts the same path instead of silently re-fitting."""
+    from ..operators.artifacts import published
+
+    def _build(staging: str) -> None:
+        banded, toks = lsh_index_cached(spark, sf_dir)
+        banded.write.mode("overwrite").parquet(f"{staging}/banded")
+        toks.write.mode("overwrite").parquet(f"{staging}/toks")
+
+    return published(
+        "lsh_persisted", spark, artifact_dir or lsh_artifact_dir(sf_dir), _build
     )
 
 
@@ -1332,25 +1339,10 @@ def lsh_index_persisted(
     fetched for candidate rows only. Probing from the reloaded frames
     keeps parquet's filter pushdown (the frozen-side ``id < cut`` cut
     reaches the reader, which the resident checkpoint scan cannot do)."""
-    from ..operators.artifacts import artifact_complete, publish_artifact
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    scratch = _LSH_DISK_CACHE.get(key) if artifact_dir is None else artifact_dir
-    if scratch is None or not artifact_complete(scratch):
-        scratch = artifact_dir or lsh_artifact_dir(sf_dir)
-        if not artifact_complete(scratch):
-            banded, toks = lsh_index_cached(spark, sf_dir)
-
-            def _build(staging: str) -> None:
-                banded.write.mode("overwrite").parquet(f"{staging}/banded")
-                toks.write.mode("overwrite").parquet(f"{staging}/toks")
-
-            publish_artifact(scratch, _build)
-        if artifact_dir is None:
-            session_cache_put(_LSH_DISK_CACHE, key, scratch)
+    path = _lsh_persisted_dir(spark, sf_dir, artifact_dir)
     return (
-        spark.read.parquet(f"{scratch}/banded"),
-        spark.read.parquet(f"{scratch}/toks"),
+        spark.read.parquet(f"{path}/banded"),
+        spark.read.parquet(f"{path}/toks"),
     )
 
 
@@ -1379,20 +1371,18 @@ def dedup_lsh_persist_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates only."""
     from ..operators.caching import dir_fingerprint
 
-    banded_idx, toks = lsh_index_persisted(spark, sf_dir)
-    art = _LSH_DISK_CACHE[(spark.sparkContext.applicationId, sf_dir)]
-    key = (
-        spark.sparkContext.applicationId, sf_dir, "persisted",
-        dir_fingerprint(art),
-    )
-    probe = _LSH_PROBE_FRAME_CACHE.get(key)
-    if probe is None:
+    art = _lsh_persisted_dir(spark, sf_dir)
+
+    def build() -> DataFrame:
+        banded_idx, toks = lsh_index_persisted(spark, sf_dir)
         (docs,) = load(spark, sf_dir, "documents")
-        probe = _incremental_probe(
+        return _incremental_probe(
             docs, banded_idx, toks, cut=_lsh_batch_cut(spark, sf_dir)
         )
-        session_cache_put(_LSH_PROBE_FRAME_CACHE, key, probe)
-    return probe
+
+    return get(
+        "lsh_probe_frame", spark, (sf_dir, "persisted", dir_fingerprint(art)), build
+    )
 
 
 @register(
@@ -1424,21 +1414,19 @@ def dedup_lsh_cold_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = lsh_artifact_dir(sf_dir)
     if not artifact_complete(path):
         lsh_index_persisted(spark, sf_dir)  # bootstrap once, publish-atomic
-    key = (
-        spark.sparkContext.applicationId, sf_dir, "cold",
-        dir_fingerprint(path),
-    )
-    probe = _LSH_PROBE_FRAME_CACHE.get(key)
-    if probe is None:
+
+    def build() -> DataFrame:
         (docs,) = load(spark, sf_dir, "documents")
-        probe = _incremental_probe(
+        return _incremental_probe(
             docs,
             spark.read.parquet(f"{path}/banded"),
             spark.read.parquet(f"{path}/toks"),
             cut=_lsh_batch_cut(spark, sf_dir),
         )
-        session_cache_put(_LSH_PROBE_FRAME_CACHE, key, probe)
-    return probe
+
+    return get(
+        "lsh_probe_frame", spark, (sf_dir, "cold", dir_fingerprint(path)), build
+    )
 
 
 # LSH index APPEND (r9, VERDICT r8 task 4): the dedup analog of the FAISS
@@ -1501,15 +1489,7 @@ LEFT JOIN coll USING (band_id)
 """
 
 
-# (app_id, sf_dir) -> the collected batch boundary. The cut is a pure
-# function of the corpus, and every index-lifecycle entry (append audit,
-# persist probe, streamed growth) needs it — uncached, each warm
-# invocation paid one MAX-aggregate Spark job plus its plan analysis
-# (the per-invocation driver-cost class _CENTS_CUM_CACHE closes for the
-# drift monitors).
-_LSH_CUT_CACHE: dict[tuple, int] = {}
-
-# (app_id, sf_dir, source_tag[, source_fingerprint]) -> the COMPILED
+# (sf_dir, source_tag[, source_fingerprint]) -> the COMPILED
 # incremental-probe frame. The ``_probe_frame`` lesson applied to the LSH
 # probe family (r11): rebuilding the probe plan per invocation costs
 # ~0.3-0.5 s of driver analysis at sf0.1 on top of execution — a serving
@@ -1518,7 +1498,7 @@ _LSH_CUT_CACHE: dict[tuple, int] = {}
 # persisted/cold entries key on a ``dir_fingerprint`` of the artifact
 # dir, so a rebuilt artifact (new part-file UUIDs at the same path) can
 # never serve a plan bound to deleted files.
-_LSH_PROBE_FRAME_CACHE: dict[tuple, DataFrame] = {}
+_LSH_PROBE_FRAME_CACHE = store("lsh_probe_frame")
 
 
 def _lsh_batch_cut(spark: SparkSession, sf_dir: str) -> int:
@@ -1527,17 +1507,19 @@ def _lsh_batch_cut(spark: SparkSession, sf_dir: str) -> int:
     (session, corpus): a production append job KNOWS its batch boundary,
     and the literal lets the batch scan push ``doc_id >= cut`` into the
     parquet reader before any signature work runs. O(1) driver state
-    (one long) — same legitimacy class as the kmeans centroid pulls."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cut = _LSH_CUT_CACHE.get(key)
-    if cut is None:
+    (one long) — same legitimacy class as the kmeans centroid pulls.
+    Every index-lifecycle entry (append audit, persist probe, streamed
+    growth) needs it; unregistered, each warm invocation paid one
+    MAX-aggregate job plus its plan analysis."""
+
+    def build() -> int:
         (docs,) = load(spark, sf_dir, "documents")
-        cut = int(
+        return int(
             docs.agg(F.floor(F.max("doc_id") * 0.8).cast("long").alias("c"))
             .collect()[0]["c"]
         )
-        session_cache_put(_LSH_CUT_CACHE, key, cut)
-    return cut
+
+    return get("lsh_batch_cut", spark, (sf_dir,), build)
 
 
 def lsh_batch_signed(spark: SparkSession, sf_dir: str, cut: int) -> tuple:
@@ -1565,9 +1547,6 @@ def lsh_batch_signed(spark: SparkSession, sf_dir: str, cut: int) -> tuple:
 # recomputed) plus the batch's freshly-signed rows. What the daily
 # pipeline persists after the probe+append cycle; the next day's
 # dedup_incremental_lsh probes THIS.
-_LSH_GROWN_CACHE: dict[tuple, tuple] = {}
-
-
 def lsh_index_appended(spark: SparkSession, sf_dir: str) -> tuple:
     """Append the new batch's band rows and hashed shingle sets to the
     frozen index; returns the grown ``(banded, toks)``. Batch signatures
@@ -1578,13 +1557,11 @@ def lsh_index_appended(spark: SparkSession, sf_dir: str) -> tuple:
     tests/test_r9_queries.py (append(frozen, batch) ≡ rebuild(corpus))."""
     from ..operators.similarity import checkpoint_index
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LSH_GROWN_CACHE.get(key)
-    if cached is None:
+    def build() -> tuple:
         banded_idx, toks_idx = lsh_index_cached(spark, sf_dir)
         cut = _lsh_batch_cut(spark, sf_dir)
         batch_banded, batch_toks = lsh_batch_signed(spark, sf_dir, cut)
-        cached = (
+        return (
             checkpoint_index(
                 banded_idx.filter(F.col("id") < cut).unionByName(batch_banded)
             ),
@@ -1592,8 +1569,8 @@ def lsh_index_appended(spark: SparkSession, sf_dir: str) -> tuple:
                 toks_idx.filter(F.col("id") < cut).unionByName(batch_toks)
             ),
         )
-        session_cache_put(_LSH_GROWN_CACHE, key, cached)
-    return cached
+
+    return get("lsh_grown", spark, (sf_dir,), build)
 
 
 @register(
@@ -1798,28 +1775,24 @@ def boilerplate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", "text").unionByName(boiler)
 
 
-# (app_id, sf_dir) -> checkpointed (banded, toks) over the AUGMENTED
-# corpus — the maintained-index artifact for the capped miner and the
+# Checkpointed (banded, toks) over the AUGMENTED corpus per (session,
+# sf_dir) — the maintained-index artifact for the capped miner and the
 # re-band repair (the lsh_index_cached discipline; bench times the build
 # as its own detail line so both consumers measure warm marginal cost).
-_LSH_AUG_CACHE: dict[tuple, tuple] = {}
-
-
 def lsh_aug_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
     from ..operators.dedup import banded_from_sig, minhash_signed_sets
     from ..operators.similarity import checkpoint_index, narrow_resident
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LSH_AUG_CACHE.get(key)
-    if cached is None:
+    def build() -> tuple:
         (docs,) = load(spark, sf_dir, "documents")
         aug = boilerplate_corpus(spark, sf_dir)
         # r13: one joint scan for banded + toks (the lsh_index_cached
         # single-scan build — see minhash_signed_sets; values unchanged)
         # r14: resident index narrowed to corpus-bytes width for the
-        # mine-side jobs (see lsh_index_cached) — the union's synthetic
-        # leg defeats inputFiles, so the parquet side sizes the width
-        # (the 150-template slice is noise next to it).
+        # mine-side jobs (see lsh_index_cached), sized from the parquet
+        # side: the union would size to the same bytes, since its
+        # synthetic leg has no input files (the 150-template slice is
+        # noise next to the corpus either way).
         joint = narrow_resident(
             checkpoint_index(
                 minhash_signed_sets(aug, "doc_id", "text", portable=True)
@@ -1827,10 +1800,9 @@ def lsh_aug_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
             docs,
         )
         banded = checkpoint_index(banded_from_sig(joint, portable=True))
-        toks = joint.select("id", "ws")
-        cached = (banded, toks)
-        session_cache_put(_LSH_AUG_CACHE, key, cached)
-    return cached
+        return banded, joint.select("id", "ws")
+
+    return get("lsh_aug_index", spark, (sf_dir,), build)
 
 
 _MINHASH_CAPPED_ORACLE = f"""
@@ -2112,9 +2084,6 @@ def multi_family_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_LSH_MULTI_CACHE: dict[tuple, DataFrame] = {}
-
-
 def lsh_multi_index_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed banded index over the multi-family corpus (the
     ``lsh_aug_index_cached`` discipline; only the band rows — the
@@ -2122,17 +2091,15 @@ def lsh_multi_index_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import minhash_banded
     from ..operators.similarity import checkpoint_index
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LSH_MULTI_CACHE.get(key)
-    if cached is None:
-        cached = checkpoint_index(
+    return get(
+        "lsh_multi_index", spark, (sf_dir,),
+        lambda: checkpoint_index(
             minhash_banded(
                 multi_family_corpus(spark, sf_dir), "doc_id", "text",
                 portable=True,
             )
-        )
-        session_cache_put(_LSH_MULTI_CACHE, key, cached)
-    return cached
+        ),
+    )
 
 
 def _lsh_repair_all_oracle(
@@ -2331,9 +2298,6 @@ LEFT JOIN sb USING (band_id)
 # pipeline serves after processing a retraction batch. The model (hash
 # family, band structure) stays frozen: deleting rows never changes how
 # future documents are signed, exactly FAISS remove_ids.
-_LSH_DELETED_CACHE: dict[tuple, tuple] = {}
-
-
 def lsh_index_deleted(
     spark: SparkSession, sf_dir: str, modulus: int = 97
 ) -> tuple:
@@ -2348,15 +2312,14 @@ def lsh_index_deleted(
     serving system materializes the compacted table on its own
     compaction cadence). A post-delete probe no longer surfaces the
     retracted documents (pinned in tests/test_r10_queries.py)."""
-    key = (spark.sparkContext.applicationId, sf_dir, modulus)
-    cached = _LSH_DELETED_CACHE.get(key)
-    if cached is None:
+
+    def build() -> tuple:
         banded, toks = lsh_index_cached(spark, sf_dir)
         (docs,) = load(spark, sf_dir, "documents")
         tomb = docs.filter(F.col("doc_id") % modulus == 0).select(
             F.col("doc_id").alias("__tomb_id")
         )
-        cached = (
+        return (
             banded.join(
                 F.broadcast(tomb),
                 banded["id"] == F.col("__tomb_id"),
@@ -2368,8 +2331,8 @@ def lsh_index_deleted(
                 "left_anti",
             ),
         )
-        session_cache_put(_LSH_DELETED_CACHE, key, cached)
-    return cached
+
+    return get("lsh_deleted", spark, (sf_dir, modulus), build)
 
 
 @register(

@@ -912,7 +912,7 @@ def pipeline_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import streaming_queries as sq
 
     sq.streaming_lsh_index_growth(spark, sf_dir)
-    grown = sq._GROWN_LSH[(spark.sparkContext.applicationId, sf_dir)]
+    grown = sq._lsh_growth_dir(spark, sf_dir)
     metrics = compact_grown_index(spark, grown, ("banded", "toks"))
     compact_rows = int(sum(m["rows"] for m in metrics))
 

@@ -20,7 +20,7 @@ from ..operators.sampling import (
 )
 from ..tables import load
 from . import register
-from ..operators.caching import session_cache_put
+from ..operators.caching import get
 
 _SPLIT_ORACLE = """
 WITH s AS (
@@ -749,21 +749,18 @@ FROM documents d LEFT JOIN agg a USING (doc_id)""")
     return "\n".join(parts)
 
 
-# The learned merge list per (session, sf_dir) — O(rounds) driver state,
-# the tokenizer model a real pipeline ships to every executor. Learned
-# once via bpe_learn_merges, then applied scan-side as string literals.
-_BPE_MERGES_CACHE: dict[tuple, list] = {}
-
-
 def bpe_merges_cached(spark: SparkSession, sf_dir: str, rounds: int = _BPE_ROUNDS) -> list:
-    key = (spark.sparkContext.applicationId, sf_dir, rounds)
-    cached = _BPE_MERGES_CACHE.get(key)
-    if cached is None:
+    """The learned merge list per (session, sf_dir) — O(rounds) driver
+    state, the tokenizer model a real pipeline ships to every executor.
+    Learned once via bpe_learn_merges, then applied scan-side as string
+    literals."""
+
+    def build() -> list:
         (docs,) = load(spark, sf_dir, "documents")
         rows = bpe_learn_merges(docs, rounds=rounds).orderBy("merge_rank").collect()
-        cached = [(r["left_sym"], r["right_sym"]) for r in rows]
-        session_cache_put(_BPE_MERGES_CACHE, key, cached)
-    return cached
+        return [(r["left_sym"], r["right_sym"]) for r in rows]
+
+    return get("bpe_merges", spark, (sf_dir, rounds), build)
 
 
 @register("curation_bpe_encode", oracle=_bpe_encode_oracle(_BPE_ROUNDS), tags=("curation", "text"))

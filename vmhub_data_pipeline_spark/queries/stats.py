@@ -14,6 +14,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions import quant
+from ..operators.caching import get
 from ..tables import load
 from . import register
 
@@ -1248,19 +1249,6 @@ def ntile_end_ranks(n: int, k: int = 10) -> list[int]:
     return sorted({t * (n // k) + min(t, n % k) - 1 for t in range(1, k)} - {-1})
 
 
-# (app_id, sf_dir) -> (cum frame handle, total_base, total_cur). The
-# HANDLE cache over the shared artifact: even with the materialized
-# preamble cached in _PREAMBLE_CACHE, rebuilding the orders->value-grain
-# plan and computing its semanticHash cache key costs ~0.24 s of
-# driver-side analysis PER warm invocation (sf-independent — the same
-# constant the r9 _probe_frame fix shaved off the ANN probes). The cum
-# frame is a deterministic lazy plan over the checkpointed ranged frame,
-# so caching the handle is the _UNIT_CORPUS_CACHE legitimacy class.
-# bench.py clears this together with _PREAMBLE_CACHE (a retained handle
-# must never outlive a cleared preamble, the _PROBE_FRAME_CACHE rule).
-_CENTS_CUM_CACHE: dict[tuple, tuple] = {}
-
-
 def _orders_cents_cum(spark: SparkSession, sf_dir: str):
     """The SHARED baseline artifact of the numeric drift monitors: order
     totals collapsed to DISTINCT-VALUE grain (cents, n_base, n_cur) with
@@ -1273,14 +1261,16 @@ def _orders_cents_cum(spark: SparkSession, sf_dir: str):
     paying a private one (VERDICT r7 what's-wrong #1). Totals ride out
     of the subtotal job for free (``return_totals``); the assembled
     (cum, totals) handle is itself cached per (session, corpus) so the
-    warm path skips plan rebuild + analysis entirely (r10)."""
-    from ..operators.caching import session_cache_put
-    from ..operators.sampling import distributed_prefix_sums
+    warm path skips plan rebuild + analysis entirely (r10): rebuilding
+    the value-grain plan and its semanticHash preamble key costs ~0.24 s
+    of driver-side analysis per invocation. The handle is registered as
+    ``cents_cum``; its build fetches the ``order_preamble`` checkpoint,
+    so invalidating the preamble drops the handle with it."""
+    return get("cents_cum", spark, (sf_dir,), lambda: _build_cents_cum(spark, sf_dir))
 
-    ckey = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CENTS_CUM_CACHE.get(ckey)
-    if hit is not None:
-        return hit
+
+def _build_cents_cum(spark: SparkSession, sf_dir: str):
+    from ..operators.sampling import distributed_prefix_sums
 
     (orders,) = load(spark, sf_dir, "orders")
     c = orders.select(
@@ -1303,21 +1293,10 @@ def _orders_cents_cum(spark: SparkSession, sf_dir: str):
         cache_key=(spark.sparkContext.applicationId, sf_dir, "orders-cents"),
         return_totals=True,
     )
-    return session_cache_put(_CENTS_CUM_CACHE, ckey, (cum, int(tb), int(tc)))
+    return cum, int(tb), int(tc)
 
 
-# The FITTED baseline binner: 9 decile boundaries per (session, corpus) —
-# O(9) driver longs, the centroid-pull legitimacy class. Production PSI
-# freezes the baseline bin edges when the monitor is commissioned and
-# applies them to every scoring batch; before r9 each invocation re-pulled
-# the boundary row (one extra driver job on the warm path — the constant
-# VERDICT r8 task 7 asks to shave).
-_PSI_BOUNDS_CACHE: dict[tuple, list] = {}
-
-
-def psi_bounds_cached(
-    spark: SparkSession, sf_dir: str, _cum_tb: tuple | None = None
-) -> list:
+def psi_bounds_cached(spark: SparkSession, sf_dir: str) -> list:
     """Fit (or fetch) the frozen PSI baseline binner: the 9 decile
     boundaries over the baseline period, derived from the shared
     ``_orders_cents_cum`` artifact (built here if cold). This is the
@@ -1327,21 +1306,15 @@ def psi_bounds_cached(
     ``lsh_index_build`` convention) and the psi/ks entries measure
     warm-marginal monitoring cost.
 
-    The cache probe runs BEFORE any artifact derivation, and a caller
-    that already holds the shared artifact passes ``(cum, tb)`` via
-    ``_cum_tb`` — ``stats_psi_drift`` does — so the warm path performs
-    exactly one ``_orders_cents_cum`` per invocation (each call pays a
-    plan-analysis round trip for its cache key even on a hit; the r10
-    extraction initially doubled it and cost the warm entry +0.2 s)."""
-    from ..operators.caching import session_cache_put
+    The boundaries are O(9) driver longs, frozen per (session, corpus)
+    the way production PSI freezes its baseline bin edges when the
+    monitor is commissioned; a warm invocation pulls no boundary row.
+    The build fetches ``_orders_cents_cum`` through the registry (a hit
+    when the caller already holds it), so the binner is recorded as
+    built from that handle."""
 
-    bkey = (spark.sparkContext.applicationId, sf_dir, "psi-bounds")
-    bs = _PSI_BOUNDS_CACHE.get(bkey)
-    if bs is None:
-        if _cum_tb is not None:
-            cum, tb = _cum_tb
-        else:
-            cum, tb, _tc = _orders_cents_cum(spark, sf_dir)
+    def build() -> list:
+        cum, tb, _tc = _orders_cents_cum(spark, sf_dir)
         ranks = ntile_end_ranks(tb, 10)
         brow = (
             cum.agg(
@@ -1355,9 +1328,9 @@ def psi_bounds_cached(
             if ranks
             else []
         )
-        bs = sorted(v for v in brow if v is not None)
-        session_cache_put(_PSI_BOUNDS_CACHE, bkey, bs)
-    return bs
+        return sorted(v for v in brow if v is not None)
+
+    return get("psi_bounds", spark, (sf_dir,), build)
 
 
 @register("stats_psi_drift", oracle=_PSI_ORACLE, tags=("stats", "quality", "drift"))
@@ -1385,11 +1358,11 @@ def stats_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange, and the full-row orders rescan of the r6 shape is gone.
     Grand totals are driver literals from the shared subtotal job.
     The fitted decile boundaries are cached per (session, corpus)
-    (``_PSI_BOUNDS_CACHE`` — a commissioned monitor freezes its baseline
+    (``psi_bounds_cached`` — a commissioned monitor freezes its baseline
     bin edges), so a warm invocation runs ONE job: the bin rollup.
     Micro-nat ln quantization keeps every output BIGINT."""
     cum, tb, tc = _orders_cents_cum(spark, sf_dir)
-    bs = psi_bounds_cached(spark, sf_dir, _cum_tb=(cum, tb))
+    bs = psi_bounds_cached(spark, sf_dir)
     cnt = (
         cum.select(
             (

@@ -23,36 +23,40 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import dsum, sql_dsum
-from ..operators.caching import (
-    bounded_cache_put,
-    session_cache_put,
-    sweep_at_exit,
-)
+from ..operators.caching import dir_fingerprint, get, invalidate, store
 from ..streaming.events import TS_FORMAT, events_file_stream
 from ..tables import load
 from . import register
 
-# (spark_app_id, sf_dir) -> NDJSON scratch dir. Keyed by app id so a fresh
-# SparkSession (new test run, new driver process) never trusts a stale
-# tempdir another process may have cleaned up.
-_LANDED: dict[tuple[str, str], str] = sweep_at_exit(
-    {}, lambda p: shutil.rmtree(p, ignore_errors=True)
-)
+
+def _rmtree(path: str) -> None:
+    shutil.rmtree(path, ignore_errors=True)
+
+
+# Every landed fixture and growth dir is a per-(session, sf_dir) scratch
+# dir owned by its registry entry: eviction, invalidation and the exit
+# sweep remove it from disk. Keyed by app id so a fresh SparkSession never
+# trusts a stale tempdir another process may have cleaned up.
+for _name in (
+    "landed_events", "landed_replay", "landed_docs", "landed_queries",
+    "landed_arrivals", "landed_adds", "landed_batch_docs",
+    "ivfpq_growth_dir", "lsh_growth_dir",
+):
+    store(_name, on_evict=_rmtree)
 
 
 def _landed_events(spark: SparkSession, sf_dir: str) -> str:
     """Land events.parquet as NDJSON once per app+sf_dir; reuse afterwards."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LANDED:
+
+    def build() -> str:
         (events,) = load(spark, sf_dir, "events")
         scratch = tempfile.mkdtemp(prefix="vmhub_stream_")
         events.repartition(4).write.mode("overwrite").option(
             "timestampFormat", TS_FORMAT
         ).json(scratch)
-        session_cache_put(
-            _LANDED, key, scratch, on_evict=lambda p: shutil.rmtree(p, ignore_errors=True)
-        )
-    return _LANDED[key]
+        return scratch
+
+    return get("landed_events", spark, (sf_dir,), build)
 
 
 _STREAM_TUMBLE_ORACLE = f"""
@@ -169,19 +173,13 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(spark, stream, "stream_sess")
 
 
-# (spark_app_id, sf_dir) -> scratch dir holding fixture + replayed files
-_LANDED_REPLAY: dict[tuple[str, str], str] = sweep_at_exit(
-    {}, lambda p: shutil.rmtree(p, ignore_errors=True)
-)
-
-
 def _landed_events_with_replay(spark: SparkSession, sf_dir: str) -> str:
     """Land events once, then APPEND a deterministic subset (user_id % 7
     == 0) as extra files — simulating the reference's duplicate page
     delivery on retry (its replay risk is why the warehouse load dedups;
     reference src/utils/bigquery_helper.py truncate-reload semantics)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LANDED_REPLAY:
+
+    def build() -> str:
         (events,) = load(spark, sf_dir, "events")
         scratch = tempfile.mkdtemp(prefix="vmhub_stream_replay_")
         w = events.repartition(4).write.option("timestampFormat", TS_FORMAT)
@@ -189,10 +187,9 @@ def _landed_events_with_replay(spark: SparkSession, sf_dir: str) -> str:
         events.filter(F.col("user_id") % 7 == 0).repartition(2).write.option(
             "timestampFormat", TS_FORMAT
         ).mode("append").json(scratch)
-        session_cache_put(
-            _LANDED_REPLAY, key, scratch, on_evict=lambda p: shutil.rmtree(p, ignore_errors=True)
-        )
-    return _LANDED_REPLAY[key]
+        return scratch
+
+    return get("landed_replay", spark, (sf_dir,), build)
 
 
 _STREAM_DEDUP_ORACLE = """
@@ -282,15 +279,14 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _landed_docs(spark: SparkSession, sf_dir: str) -> str:
     """Land documents.parquet as NDJSON once per app+sf_dir (same caching
     contract as _landed_events)."""
-    key = (spark.sparkContext.applicationId, f"{sf_dir}#docs")
-    if key not in _LANDED:
+
+    def build() -> str:
         (docs,) = load(spark, sf_dir, "documents")
         scratch = tempfile.mkdtemp(prefix="vmhub_stream_docs_")
         docs.repartition(4).write.mode("overwrite").json(scratch)
-        session_cache_put(
-            _LANDED, key, scratch, on_evict=lambda p: shutil.rmtree(p, ignore_errors=True)
-        )
-    return _LANDED[key]
+        return scratch
+
+    return get("landed_docs", spark, (sf_dir,), build)
 
 
 from .text import _PII_ORACLE as _BATCH_PII_ORACLE  # noqa: E402  (registered before this module in _load_all)
@@ -542,22 +538,15 @@ def streaming_psi_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(spark, stream, "stream_psi")
 
 
-# (app_id, sf_dir) -> NDJSON scratch dir holding the query-vector batch
-# (query_id, v DOUBLE[]) — the online half of the ANN serving story. Same
-# lifecycle/keying discipline as _LANDED.
-_LANDED_QUERIES: dict[tuple[str, str], str] = sweep_at_exit(
-    {}, lambda p: shutil.rmtree(p, ignore_errors=True)
-)
-
-
 def _landed_queries(spark: SparkSession, sf_dir: str) -> str:
     """Land the fixture's query vectors (vec_id < 10, the catalog-wide ANN
     query-set convention) as NDJSON once per app+sf_dir. Vectors are cast
     to double BEFORE landing: Spark's JSON writer emits shortest
     round-trip decimals for doubles, so the streamed ``v`` is bit-equal
-    to the batch path's ``_as_double(embedding)``."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LANDED_QUERIES:
+    to the batch path's ``_as_double(embedding)``. The scratch dir holds
+    the online half of the ANN serving story."""
+
+    def build() -> str:
         (emb,) = load(spark, sf_dir, "embeddings")
         scratch = tempfile.mkdtemp(prefix="vmhub_annq_")
         (
@@ -570,10 +559,9 @@ def _landed_queries(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .json(scratch)
         )
-        session_cache_put(
-            _LANDED_QUERIES, key, scratch, on_evict=lambda p: shutil.rmtree(p, ignore_errors=True)
-        )
-    return _LANDED_QUERIES[key]
+        return scratch
+
+    return get("landed_queries", spark, (sf_dir,), build)
 
 
 def _ann_route_oracle() -> str:
@@ -654,14 +642,6 @@ def streaming_ann_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (app_id, sf_dir) -> scratch dir holding the three ARRIVAL files of the
-# late-data demonstration, mtime-ordered: on-time cohort, watermark
-# sentinel, late cohort. Same lifecycle/keying discipline as _LANDED.
-_LANDED_ARRIVALS: dict[tuple[str, str], str] = sweep_at_exit(
-    {}, lambda p: shutil.rmtree(p, ignore_errors=True)
-)
-
-
 def _landed_arrivals(spark: SparkSession, sf_dir: str) -> str:
     """Land events as THREE mtime-ordered NDJSON arrival files so the file
     source replays a fixed arrival history (maxFilesPerTrigger=1, one
@@ -681,8 +661,7 @@ def _landed_arrivals(spark: SparkSession, sf_dir: str) -> str:
     import os
     import time as _time
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LANDED_ARRIVALS:
+    def build() -> str:
         (events,) = load(spark, sf_dir, "events")
         scratch = tempfile.mkdtemp(prefix="vmhub_arrivals_")
         late_pred = F.col("user_id") % 7 == 3
@@ -703,10 +682,9 @@ def _landed_arrivals(spark: SparkSession, sf_dir: str) -> str:
             shutil.move(part, dst)
             os.utime(dst, (base + 30 * i, base + 30 * i))
             shutil.rmtree(sub, ignore_errors=True)
-        session_cache_put(
-            _LANDED_ARRIVALS, key, scratch, on_evict=lambda p: shutil.rmtree(p, ignore_errors=True)
-        )
-    return _LANDED_ARRIVALS[key]
+        return scratch
+
+    return get("landed_arrivals", spark, (sf_dir,), build)
 
 
 # The oracle replays Spark's late-record filter exactly: a late-cohort row
@@ -783,40 +761,32 @@ def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(spark, stream, "stream_late", output_mode="append")
 
 
-# growth-dir parquet path -> its schema. The growth streams read the base
-# schema only to cast each micro-batch's append rows to the exact base
-# types; appends never change the schema, so one footer read per
-# directory suffices — uncached, every warm invocation re-paid a
-# DataFrameReader footer job. Keyed by the (mkdtemp-unique) path;
-# bounded FIFO since paths are session-independent strings.
-_DIR_SCHEMA_CACHE: dict = {}
-
-
 def _dir_schema(spark: SparkSession, path: str):
-    schema = _DIR_SCHEMA_CACHE.get((path,))
-    if schema is None:
-        schema = bounded_cache_put(
-            _DIR_SCHEMA_CACHE, (path,), spark.read.parquet(path).schema
+    """A growth-dir parquet's schema. The growth streams read the base
+    schema only to cast each micro-batch's append rows to the exact base
+    types; appends never change the schema, so one footer read per
+    directory suffices — unregistered, every warm invocation re-paid a
+    DataFrameReader footer job."""
+    return get("dir_schema", spark, (path,), lambda: spark.read.parquet(path).schema)
+
+
+def _ivfpq_growth_dir(spark: SparkSession, sf_dir: str) -> str:
+    """Scratch dir of the GROWING serving index: lists/ starts as a copy
+    of the persisted artifact's inverted lists (partition ``__sb=-1``)
+    and is foreachBatch-appended to; _ckpt/ is the stream's checkpoint
+    (exactly-once appends across re-invocations — a restarted
+    availableNow run replays nothing)."""
+    from .vector import _ivfpq_persisted_dir
+
+    def build() -> str:
+        base_dir = _ivfpq_persisted_dir(spark, sf_dir)
+        grown = tempfile.mkdtemp(prefix="vmhub_ivfpq_grow_")
+        shutil.copytree(
+            f"{base_dir}/lists", f"{grown}/lists/__sb=-1", dirs_exist_ok=True
         )
-    return schema
+        return grown
 
-
-# (app_id, sf_dir) -> scratch dir of the GROWING serving index: lists/ is
-# initialized as a copy of the persisted artifact's inverted lists and
-# foreachBatch-appended to; _ckpt/ is the stream's checkpoint (exactly-once
-# appends across re-invocations — a restarted availableNow run replays
-# nothing). Same lifecycle/keying discipline as _LANDED.
-_GROWN_IVFPQ: dict[tuple, str] = sweep_at_exit(
-    {}, lambda p: shutil.rmtree(p, ignore_errors=True)
-)
-
-# (app_id, sf_dir) -> NDJSON scratch dir holding the add-vector batch as
-# TWO arrival files (so the growth stream runs >1 micro-batch): the
-# held-out UNIT vectors with their filterable label — what an ingest
-# pipeline hands the index-maintenance stream.
-_LANDED_ADDS: dict[tuple, str] = sweep_at_exit(
-    {}, lambda p: shutil.rmtree(p, ignore_errors=True)
-)
+    return get("ivfpq_growth_dir", spark, (sf_dir,), build)
 
 
 def _landed_add_vectors(spark: SparkSession, sf_dir: str) -> str:
@@ -824,11 +794,13 @@ def _landed_add_vectors(spark: SparkSession, sf_dir: str) -> str:
     batch convention) as unit-normalized NDJSON — the SAME vectors the
     frozen model never saw and ``ann_ivfpq_add_batch`` encodes. Doubles
     round-trip exactly through Spark's JSON writer (shortest round-trip
-    decimals), so the streamed rows are bit-equal to the batch path's."""
+    decimals), so the streamed rows are bit-equal to the batch path's.
+    Two arrival files, so the growth stream runs >1 micro-batch: the
+    held-out UNIT vectors with their filterable label — what an ingest
+    pipeline hands the index-maintenance stream."""
     from .vector import _pq_unit_corpus
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LANDED_ADDS:
+    def build() -> str:
         q, _ = _pq_unit_corpus(spark, sf_dir)
         scratch = tempfile.mkdtemp(prefix="vmhub_annadd_")
         (
@@ -839,11 +811,9 @@ def _landed_add_vectors(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .json(scratch)
         )
-        session_cache_put(
-            _LANDED_ADDS, key, scratch,
-            on_evict=lambda p: shutil.rmtree(p, ignore_errors=True),
-        )
-    return _LANDED_ADDS[key]
+        return scratch
+
+    return get("landed_adds", spark, (sf_dir,), build)
 
 
 def _grown_probe_oracle() -> str:
@@ -903,25 +873,15 @@ def streaming_index_growth(
         _pq_code_expr,
         ivfpq_knn,
     )
-    from .vector import _IVFPQ_DISK_CACHE, _pq_unit_corpus, ivfpq_index_persisted
+    from .vector import _ivfpq_persisted_dir, _pq_unit_corpus, ivfpq_index_persisted
 
     cents, books, _base_lists = ivfpq_index_persisted(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    base_dir = _IVFPQ_DISK_CACHE[key]
+    base_dir = _ivfpq_persisted_dir(spark, sf_dir)
     # schema from the immutable persisted artifact (the growth dir itself
     # carries the __sb partition column, which is sink bookkeeping — the
     # serving schema is the artifact's)
     base_schema = _dir_schema(spark, f"{base_dir}/lists")
-    grown = _GROWN_IVFPQ.get(key)
-    if grown is None:
-        grown = tempfile.mkdtemp(prefix="vmhub_ivfpq_grow_")
-        shutil.copytree(
-            f"{base_dir}/lists", f"{grown}/lists/__sb=-1", dirs_exist_ok=True
-        )
-        session_cache_put(
-            _GROWN_IVFPQ, key, grown,
-            on_evict=lambda p: shutil.rmtree(p, ignore_errors=True),
-        )
+    grown = _ivfpq_growth_dir(spark, sf_dir)
     lists_dir = f"{grown}/lists"
 
     adds = _landed_add_vectors(spark, sf_dir)
@@ -957,8 +917,7 @@ def streaming_index_growth(
         # same-session retry to serve: rebuild from the immutable
         # persisted artifact instead (ADVICE r10: the discard must cover
         # the exception path, not just the timeout)
-        _GROWN_IVFPQ.pop(key, None)
-        shutil.rmtree(grown, ignore_errors=True)
+        invalidate("ivfpq_growth_dir")
         raise RuntimeError(
             f"streaming_index_growth: {reason}; discarding the growth dir "
             f"before probing a partially-grown index"
@@ -1006,67 +965,65 @@ def streaming_index_growth(
 
         publish_artifact(art, _publish)
 
-    probe_key = (
-        spark.sparkContext.applicationId, sf_dir, grown,
-        _sink_fingerprint(lists_dir),
-    )
-    probe = _GROWN_PROBE_CACHE.get(probe_key)
-    if probe is None:
+    # The compiled post-growth probe frame. Rebuilding the literal-heavy
+    # probe plan per invocation costs ~1-1.5 s of driver analysis at sf0.1
+    # (r11) — a serving system re-plans only when the index actually
+    # changed, so the key carries a fingerprint of the sink's data files
+    # (an appended batch or a replay that rewrites part-files in place
+    # both change it) and the growth dir itself (a discarded-and-rebuilt
+    # dir must never serve a stale frame bound to deleted files).
+    def probe() -> DataFrame:
+        # re-fetched so the probe is recorded as built from the growth dir
+        grown_lists = f"{_ivfpq_growth_dir(spark, sf_dir)}/lists"
         qdf, c = _pq_unit_corpus(spark, sf_dir)
-        lists = spark.read.parquet(lists_dir).select(
+        lists = spark.read.parquet(grown_lists).select(
             *[F.col(f.name) for f in base_schema.fields]
         )
-        probe = ivfpq_knn(
+        return ivfpq_knn(
             qdf.unionByName(c), qdf, id_col="vec_id", vec_col="embedding",
             k=5, dim=64, cents=cents, books=books, nprobe=4,
             rerank_shortlist=40, index=lists,
         )
-        session_cache_put(_GROWN_PROBE_CACHE, probe_key, probe)
-    return probe
+
+    return get(
+        "grown_probe", spark, (sf_dir, grown, dir_fingerprint(lists_dir)), probe
+    )
 
 
-# (app_id, sf_dir) -> scratch dir of the GROWING dedup index: banded/ and
-# toks/ start as the FROZEN (pre-cut) slice of the persisted LSH artifact
-# and are foreachBatch-appended to; _ckpt/ is the stream's checkpoint.
-# Same lifecycle/keying discipline as _GROWN_IVFPQ.
-_GROWN_LSH: dict[tuple, str] = sweep_at_exit(
-    {}, lambda p: shutil.rmtree(p, ignore_errors=True)
-)
+def _lsh_growth_dir(spark: SparkSession, sf_dir: str) -> str:
+    """Scratch dir of the GROWING dedup index: banded/ and toks/ start as
+    the FROZEN (pre-cut) slice of the persisted LSH artifact (partition
+    ``__sb=-1``) and are foreachBatch-appended to; _ckpt/ is the
+    stream's checkpoint."""
+    from .dedup import _lsh_batch_cut, _lsh_persisted_dir
 
-# (app_id, sf_dir, grown_dir, sink_fingerprint) -> the compiled
-# post-growth probe frame. The ``_probe_frame`` lesson applied to the
-# growth streams (r11): rebuilding the literal-heavy probe plan per
-# invocation costs ~1-1.5 s of driver analysis at sf0.1 — a serving
-# system re-plans only when the index actually changed, so the cache key
-# carries a fingerprint of the sink's data files (an appended batch or a
-# replay that rewrites part-files in place both change it) and the growth
-# dir itself (a discarded-and-rebuilt dir must never serve a stale frame
-# bound to deleted files).
-_GROWN_PROBE_CACHE: dict[tuple, DataFrame] = {}
+    def build() -> str:
+        base_dir = _lsh_persisted_dir(spark, sf_dir)
+        cut = _lsh_batch_cut(spark, sf_dir)
+        grown = tempfile.mkdtemp(prefix="vmhub_lsh_grow_")
+        for leg in ("banded", "toks"):
+            (
+                spark.read.parquet(f"{base_dir}/{leg}")
+                .filter(F.col("id") < F.lit(cut))
+                .write.mode("overwrite")
+                .parquet(f"{grown}/{leg}/__sb=-1")
+            )
+        return grown
 
-
-# the sink-file fingerprint that keys the probe-frame cache — shared with
-# the LSH probe family (operators/caching.py since r11)
-from ..operators.caching import dir_fingerprint as _sink_fingerprint  # noqa: E402
-
-# (app_id, sf_dir) -> NDJSON scratch dir holding the new-document batch as
-# TWO arrival files (so the growth stream runs >1 micro-batch): the
-# raw (doc_id, text) rows an ingest pipeline hands the index-maintenance
-# stream — signing happens IN the stream, against the frozen hash family.
-_LANDED_DOCS: dict[tuple, str] = sweep_at_exit(
-    {}, lambda p: shutil.rmtree(p, ignore_errors=True)
-)
+    return get("lsh_growth_dir", spark, (sf_dir,), build)
 
 
 def _landed_batch_docs(spark: SparkSession, sf_dir: str) -> str:
     """Land the document batch (doc_id >= cut — the catalog-wide
     incremental-batch convention) as NDJSON. Text round-trips exactly
     through Spark's JSON writer, so the streamed rows sign identically
-    to the batch path's."""
+    to the batch path's. Two arrival files, so the growth stream runs >1
+    micro-batch: the raw (doc_id, text) rows an ingest pipeline hands the
+    index-maintenance stream — signing happens IN the stream, against
+    the frozen hash family."""
     from .dedup import _lsh_batch_cut
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LANDED_DOCS:
+    def build() -> str:
         cut = _lsh_batch_cut(spark, sf_dir)
         (docs,) = load(spark, sf_dir, "documents")
         scratch = tempfile.mkdtemp(prefix="vmhub_docadd_")
@@ -1077,11 +1034,9 @@ def _landed_batch_docs(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .json(scratch)
         )
-        session_cache_put(
-            _LANDED_DOCS, key, scratch,
-            on_evict=lambda p: shutil.rmtree(p, ignore_errors=True),
-        )
-    return _LANDED_DOCS[key]
+        return scratch
+
+    return get("landed_batch_docs", spark, (sf_dir,), build)
 
 
 def _lsh_grown_probe_oracle(
@@ -1205,32 +1160,17 @@ def streaming_lsh_index_growth(
         jaccard_verify,
         minhash_banded,
     )
-    from .dedup import _LSH_DISK_CACHE, _lsh_batch_cut, lsh_index_persisted
+    from .dedup import _lsh_batch_cut, _lsh_persisted_dir
     from pyspark.sql import Window
 
-    # materialize the persisted artifact (and its scratch dir) first
-    lsh_index_persisted(spark, sf_dir)
+    # materialize the persisted artifact first
+    base_dir = _lsh_persisted_dir(spark, sf_dir)
     cut = _lsh_batch_cut(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    base_dir = _LSH_DISK_CACHE[key]
     # serving schemas come from the immutable persisted artifact; the
     # growth dir adds the __sb partition column (sink bookkeeping only)
     banded_schema = _dir_schema(spark, f"{base_dir}/banded")
     toks_schema = _dir_schema(spark, f"{base_dir}/toks")
-    grown = _GROWN_LSH.get(key)
-    if grown is None:
-        grown = tempfile.mkdtemp(prefix="vmhub_lsh_grow_")
-        for leg in ("banded", "toks"):
-            (
-                spark.read.parquet(f"{base_dir}/{leg}")
-                .filter(F.col("id") < F.lit(cut))
-                .write.mode("overwrite")
-                .parquet(f"{grown}/{leg}/__sb=-1")
-            )
-        session_cache_put(
-            _GROWN_LSH, key, grown,
-            on_evict=lambda p: shutil.rmtree(p, ignore_errors=True),
-        )
+    grown = _lsh_growth_dir(spark, sf_dir)
 
     docs_dir = _landed_batch_docs(spark, sf_dir)
     stream = (
@@ -1265,8 +1205,7 @@ def streaming_lsh_index_growth(
         # same loud-failure contract as streaming_index_growth, and the
         # discard covers the exception path too (ADVICE r10): a retry
         # rebuilds from the immutable persisted artifact
-        _GROWN_LSH.pop(key, None)
-        shutil.rmtree(grown, ignore_errors=True)
+        invalidate("lsh_growth_dir")
         raise RuntimeError(
             f"streaming_lsh_index_growth: {reason}; discarding the growth "
             f"dir before probing a partially-grown index"
@@ -1310,22 +1249,22 @@ def streaming_lsh_index_growth(
 
         publish_artifact(art, _publish)
 
-    probe_key = (
-        spark.sparkContext.applicationId, sf_dir, grown,
-        _sink_fingerprint(f"{grown}/banded", f"{grown}/toks"),
+    def probe() -> DataFrame:
+        # re-fetched so the probe is recorded as built from the growth dir
+        grown_dir = _lsh_growth_dir(spark, sf_dir)
+        grown_banded = spark.read.parquet(f"{grown_dir}/banded").select(
+            *[F.col(f.name) for f in banded_schema.fields]
+        )
+        grown_toks = spark.read.parquet(f"{grown_dir}/toks").select(
+            *[F.col(f.name) for f in toks_schema.fields]
+        )
+        return _grown_lsh_probe(spark, sf_dir, grown_banded, grown_toks, cut)
+
+    return get(
+        "grown_probe", spark,
+        (sf_dir, grown, dir_fingerprint(f"{grown}/banded", f"{grown}/toks")),
+        probe,
     )
-    probe = _GROWN_PROBE_CACHE.get(probe_key)
-    if probe is not None:
-        return probe
-    grown_banded = spark.read.parquet(f"{grown}/banded").select(
-        *[F.col(f.name) for f in banded_schema.fields]
-    )
-    grown_toks = spark.read.parquet(f"{grown}/toks").select(
-        *[F.col(f.name) for f in toks_schema.fields]
-    )
-    probe = _grown_lsh_probe(spark, sf_dir, grown_banded, grown_toks, cut)
-    session_cache_put(_GROWN_PROBE_CACHE, probe_key, probe)
-    return probe
 
 
 def _grown_lsh_probe(
@@ -1425,27 +1364,21 @@ def dedup_lsh_grown_cold_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate-grain verify, query-grain windows) — the only difference is
     WHERE the index comes from, which is the entry's whole claim."""
     from ..operators.artifacts import artifact_complete
-    from ..operators.caching import dir_fingerprint
     from .dedup import _lsh_batch_cut
 
     path = lsh_grown_artifact_dir(sf_dir)
     if not artifact_complete(path):
         # bootstrap once: run the growth stream, which publishes on commit
         streaming_lsh_index_growth(spark, sf_dir)
-    key = (
-        spark.sparkContext.applicationId, sf_dir, "lsh-grown-cold",
-        dir_fingerprint(path),
-    )
-    probe = _GROWN_PROBE_CACHE.get(key)
-    if probe is None:
-        probe = _grown_lsh_probe(
+    return get(
+        "grown_probe", spark, (sf_dir, "lsh-grown-cold", dir_fingerprint(path)),
+        lambda: _grown_lsh_probe(
             spark, sf_dir,
             spark.read.parquet(f"{path}/banded"),
             spark.read.parquet(f"{path}/toks"),
             cut=_lsh_batch_cut(spark, sf_dir),
-        )
-        session_cache_put(_GROWN_PROBE_CACHE, key, probe)
-    return probe
+        ),
+    )
 
 
 @register(
@@ -1468,7 +1401,6 @@ def ann_ivfpq_grown_cold_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan literals, the grown lists feed the celled ADC join, raw vectors
     touched only for the shortlist re-rank."""
     from ..operators.artifacts import artifact_complete
-    from ..operators.caching import dir_fingerprint
     from ..operators.similarity import ivfpq_knn
     from .vector import _pq_unit_corpus
 
@@ -1476,23 +1408,22 @@ def ann_ivfpq_grown_cold_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not artifact_complete(path):
         # bootstrap once: run the growth stream, which publishes on commit
         streaming_index_growth(spark, sf_dir)
-    key = (
-        spark.sparkContext.applicationId, sf_dir, "ivfpq-grown-cold",
-        dir_fingerprint(path),
-    )
-    probe = _GROWN_PROBE_CACHE.get(key)
-    if probe is None:
+
+    def build() -> DataFrame:
         row = spark.read.parquet(f"{path}/model").collect()[0]
         cents = [[float(x) for x in c] for c in row["cents"]]
         books = [[[float(x) for x in c2] for c2 in b] for b in row["books"]]
         qdf, c = _pq_unit_corpus(spark, sf_dir)
-        probe = ivfpq_knn(
+        return ivfpq_knn(
             qdf.unionByName(c), qdf, id_col="vec_id", vec_col="embedding",
             k=5, dim=64, cents=cents, books=books, nprobe=4,
             rerank_shortlist=40, index=spark.read.parquet(f"{path}/lists"),
         )
-        session_cache_put(_GROWN_PROBE_CACHE, key, probe)
-    return probe
+
+    return get(
+        "grown_probe", spark, (sf_dir, "ivfpq-grown-cold", dir_fingerprint(path)),
+        build,
+    )
 
 
 def lsh_grown_maint_artifact_dir(sf_dir: str, modulus: int = 97) -> str:
@@ -1547,7 +1478,6 @@ def dedup_lsh_grown_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature expression anywhere: maintenance edits rows, never the
     frozen signer."""
     from ..operators.artifacts import artifact_complete, publish_artifact
-    from ..operators.caching import dir_fingerprint
 
     path = lsh_grown_artifact_dir(sf_dir)
     if not artifact_complete(path):
@@ -1576,12 +1506,7 @@ def dedup_lsh_grown_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         publish_artifact(mart, _publish)
 
-    key = (
-        spark.sparkContext.applicationId, sf_dir, "lsh-grown-maint",
-        dir_fingerprint(path), dir_fingerprint(mart),
-    )
-    audit = _GROWN_PROBE_CACHE.get(key)
-    if audit is None:
+    def build() -> DataFrame:
         banded_before = spark.read.parquet(f"{path}/banded")
         banded_after = spark.read.parquet(f"{mart}/banded")
         fb = banded_before.groupBy("band_id").agg(
@@ -1592,7 +1517,7 @@ def dedup_lsh_grown_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("rows_after"),
             F.countDistinct("band_hash").cast("long").alias("buckets_after"),
         )
-        audit = (
+        return (
             fb.join(sb, "band_id", "left")
             .select(
                 F.col("band_id").cast("long").alias("band_id"),
@@ -1612,5 +1537,9 @@ def dedup_lsh_grown_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("buckets_emptied"),
             )
         )
-        session_cache_put(_GROWN_PROBE_CACHE, key, audit)
-    return audit
+
+    return get(
+        "grown_probe", spark,
+        (sf_dir, "lsh-grown-maint", dir_fingerprint(path), dir_fingerprint(mart)),
+        build,
+    )

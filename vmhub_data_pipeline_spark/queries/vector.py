@@ -20,9 +20,9 @@ from ..operators.similarity import (
     lsh_bucketed_knn,
     norm_expr,
 )
+from ..operators.caching import get, store
 from ..tables import load
 from . import register
-from ..operators.caching import session_cache_put
 
 _KNN_ORACLE = """
 WITH q AS (
@@ -265,14 +265,6 @@ SELECT query_id, neighbor_id, ROUND(cosine, 4) AS cosine_r, rank FROM (
 """
 
 
-# The resident flat-IVF serving index, built once per (session, sf_dir,
-# params): coarse centroids + the localCheckpointed bucketed corpus
-# (neighbor_id, cv, bucket). Same legitimacy class and lifecycle as
-# _PQ_FIT_CACHE / _IVFPQ_INDEX_CACHE (session-keyed — ADVICE r6); lets
-# bench report the Lloyd fit (paid once per corpus) apart from the probe
-# (what a query actually costs against the resident lists).
-_IVF_INDEX_CACHE: dict[tuple, tuple] = {}
-
 # COMPILED probe-plan handles per (session, sf_dir, entry): an ANN server
 # compiles its probe plan once per model and serves every request from
 # it; rebuilding the literal-heavy query-prep tree per invocation paid
@@ -281,12 +273,9 @@ _IVF_INDEX_CACHE: dict[tuple, tuple] = {}
 # plan compilation doesn't scale with data). The cached value is a lazy
 # DataFrame handle (no data pinned; the query-prep localCheckpoint
 # inside it materializes once on first execution and is then resident,
-# like the index) — the _UNIT_CORPUS_CACHE legitimacy class. Repeat
+# like the index) — the resident unit-corpus legitimacy class. Repeat
 # invocations therefore measure EXECUTION against the resident index,
 # the serving-loop steady state.
-_PROBE_FRAME_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _probe_frame(spark: SparkSession, sf_dir: str, entry: str, build, fingerprint: str | None = None):
     """``fingerprint`` (ADVICE r11): entries that serve from a DURABLE
     on-disk artifact must key their compiled plan on a digest of the
@@ -295,12 +284,7 @@ def _probe_frame(spark: SparkSession, sf_dir: str, entry: str, build, fingerprin
     externally deletable, a mid-session wipe+rebuild would otherwise
     leave the cached plan bound to deleted part-files. Session-resident
     indexes (checkpointed in-memory) keep the plain key."""
-    key = (spark.sparkContext.applicationId, sf_dir, entry, fingerprint)
-    df = _PROBE_FRAME_CACHE.get(key)
-    if df is None:
-        df = build()
-        session_cache_put(_PROBE_FRAME_CACHE, key, df)
-    return df
+    return get("ann_probe_frame", spark, (sf_dir, entry, fingerprint), build)
 
 
 def ivf_index_cached(
@@ -313,7 +297,9 @@ def ivf_index_cached(
     -mean k-means centroids and the bucketed inverted lists. Fit work is
     O(corpus x iters) distributed with O(model) driver state; the lists
     are checkpointed executor-side (constraint-stripped, see
-    ``checkpoint_index``)."""
+    ``checkpoint_index``). Resident per (session, sf_dir, params), so
+    bench reports the Lloyd fit (paid once per corpus) apart from the
+    probe (what a query actually costs against the resident lists)."""
     from ..operators.similarity import (
         _as_double,
         _nearest_centroid_expr,
@@ -321,9 +307,7 @@ def ivf_index_cached(
         kmeans_fit,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_clusters, max_iter)
-    cached = _IVF_INDEX_CACHE.get(key)
-    if cached is None:
+    def build() -> tuple:
         (emb,) = load(spark, sf_dir, "embeddings")
         c = emb.filter(F.col("vec_id") >= 10)
         cents = kmeans_fit(
@@ -338,9 +322,9 @@ def ivf_index_cached(
                 _nearest_centroid_expr(cents, v).alias("bucket"),
             )
         )
-        cached = (cents, index)
-        session_cache_put(_IVF_INDEX_CACHE, key, cached)
-    return cached
+        return cents, index
+
+    return get("ivf_index", spark, (sf_dir, n_clusters, max_iter), build)
 
 
 @register("ann_ivf_topk", oracle=_ivf_ann_oracle(), tags=("vector", "ivf"))
@@ -771,9 +755,6 @@ def ivf_multi_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
-_IVF_MULTI_CACHE: dict[tuple, tuple] = {}
-
-
 def ivf_multi_index_cached(
     spark: SparkSession, sf_dir: str, n_clusters: int = 16, max_iter: int = 3
 ) -> tuple:
@@ -788,9 +769,7 @@ def ivf_multi_index_cached(
         kmeans_fit,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_clusters, max_iter)
-    cached = _IVF_MULTI_CACHE.get(key)
-    if cached is None:
+    def build() -> tuple:
         c = ivf_multi_corpus(spark, sf_dir)
         cents = kmeans_fit(
             c, "vec_id", "embedding", k=n_clusters, max_iter=max_iter,
@@ -804,9 +783,9 @@ def ivf_multi_index_cached(
                 _nearest_centroid_expr(cents, v).alias("bucket"),
             )
         )
-        cached = (cents, index)
-        session_cache_put(_IVF_MULTI_CACHE, key, cached)
-    return cached
+        return cents, index
+
+    return get("ivf_multi_index", spark, (sf_dir, n_clusters, max_iter), build)
 
 
 def _ivf_rebalance_all_oracle(
@@ -1464,16 +1443,6 @@ SELECT query_id, corpus_id, ROUND(cosine, 4) AS cosine, rank FROM (
 """
 
 
-# Codebooks fitted once per sf_dir (keyed on fit params too, so a config
-# change can't serve stale books): a serving system trains the PQ index
-# offline and answers queries against it — re-fitting per query run both
-# misrepresents query latency in BENCH and wastes O(corpus x iter) work
-# (VERDICT r5 task 4). The cached value is O(m*k*dim) driver-side floats,
-# the same legitimacy class as the k-means centroid pulls. bench.py times
-# a cold fit (ann_pq_fit) and warm probes (ann_pq_probe) separately.
-_PQ_FIT_CACHE: dict[tuple, list] = {}
-
-
 # The RESIDENT unit-normalized vector store per (session, sf_dir): one
 # parquet scan + normalize pass, localCheckpointed, then (queries,
 # corpus) are filters over the checkpointed rows. This is the serving
@@ -1487,16 +1456,11 @@ _PQ_FIT_CACHE: dict[tuple, list] = {}
 # checkpoint is O(corpus x dim) executor-side doubles, the same
 # residency class as the inverted lists themselves; its one-time
 # materialization is paid inside the first fit (bench's ann_*_fit
-# build lines). Session-keyed lifecycle as the index caches.
-_UNIT_CORPUS_CACHE: dict[tuple, tuple] = {}
-
-
+# build lines). Session-keyed lifecycle as the index artifacts.
 def _pq_unit_corpus(spark: SparkSession, sf_dir: str):
     from ..operators.similarity import checkpoint_index, dot_expr
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _UNIT_CORPUS_CACHE.get(key)
-    if cached is None:
+    def build() -> tuple:
         (emb,) = load(spark, sf_dir, "embeddings")
         # L2-normalize first: squared-L2 over unit vectors ranks identically
         # to cosine, so the PQ index answers the same question
@@ -1513,12 +1477,12 @@ def _pq_unit_corpus(spark: SparkSession, sf_dir: str):
                 "label",
             )
         )
-        cached = (
+        return (
             unit.filter(F.col("vec_id") < 10),
             unit.filter(F.col("vec_id") >= 10),
         )
-        session_cache_put(_UNIT_CORPUS_CACHE, key, cached)
-    return cached
+
+    return get("unit_corpus", spark, (sf_dir,), build)
 
 
 # The PQ sub-codebooks over the UNIT corpus are IDENTICAL for the flat
@@ -1526,11 +1490,8 @@ def _pq_unit_corpus(spark: SparkSession, sf_dir: str):
 # exact-integer-mean fit on the same corpus with the same hyperparams
 # (bit-identity pinned by test_ivfpq_fit_fused_bit_identical_to_
 # sequential) — so, like the coarse quantizer, they are a shared model
-# artifact: whichever index fits first publishes them here (bench
-# reports the fit as its own ann_books_fit line).
-_PQ_BOOKS_CACHE: dict[tuple, list] = {}
-
-
+# artifact: whichever index fits first publishes them (bench reports the
+# fit as its own ann_books_fit line).
 def pq_books_cached(
     spark: SparkSession, sf_dir: str, dim: int = 64, m: int = 8, k: int = 16,
     max_iter: int = 3,
@@ -1538,14 +1499,12 @@ def pq_books_cached(
     """Fit (or fetch) the shared unit-corpus PQ sub-codebooks."""
     from ..operators.similarity import pq_fit
 
-    key = (spark.sparkContext.applicationId, sf_dir, dim, m, k, max_iter)
-    books = _PQ_BOOKS_CACHE.get(key)
-    if books is None:
+    def build() -> list:
         _, c = _pq_unit_corpus(spark, sf_dir)
-        books = pq_fit(c, "vec_id", "embedding", dim=dim, m=m, k=k,
-                       max_iter=max_iter, exact_mean=True)
-        session_cache_put(_PQ_BOOKS_CACHE, key, books)
-    return books
+        return pq_fit(c, "vec_id", "embedding", dim=dim, m=m, k=k,
+                      max_iter=max_iter, exact_mean=True)
+
+    return get("pq_books", spark, (sf_dir, dim, m, k, max_iter), build)
 
 
 def pq_index_cached(
@@ -1559,20 +1518,18 @@ def pq_index_cached(
     index's books); this builds and localCheckpoints the encoded codes
     frame — storage-resident m-byte rows in a serving system — so probes
     score without re-encoding the corpus. Driver state stays O(model):
-    the checkpoint blocks live on executors."""
+    the checkpoint blocks live on executors. A serving system trains the
+    PQ index offline and answers queries against it — re-fitting per
+    query run both misrepresents query latency in BENCH and wastes
+    O(corpus x iter) work (VERDICT r5 task 4); bench.py times a cold fit
+    (ann_pq_fit) and warm probes (ann_pq_probe) separately."""
     from ..operators.similarity import (
         _as_double,
         _pq_code_expr,
         checkpoint_index,
     )
 
-    # Keyed on the session's applicationId too (ADVICE r6): the cached
-    # codes frame is a localCheckpointed DataFrame bound to the session
-    # that built it — a new SparkSession in the same process must not be
-    # served another session's (dead) checkpoint blocks.
-    key = (spark.sparkContext.applicationId, sf_dir, dim, m, k, max_iter)
-    cached = _PQ_FIT_CACHE.get(key)
-    if cached is None:
+    def build() -> tuple:
         _, c = _pq_unit_corpus(spark, sf_dir)
         books = pq_books_cached(spark, sf_dir, dim, m, k, max_iter)
         codes = checkpoint_index(
@@ -1583,9 +1540,9 @@ def pq_index_cached(
                 ).alias("codes"),
             )
         )
-        cached = (books, codes)
-        session_cache_put(_PQ_FIT_CACHE, key, cached)
-    return cached
+        return books, codes
+
+    return get("pq_index", spark, (sf_dir, dim, m, k, max_iter), build)
 
 
 @register("ann_pq_topk", oracle=_pq_ann_oracle(), tags=("vector", "pq"))
@@ -1750,12 +1707,6 @@ def _opq_ann_oracle(
     )
 
 
-# The OPQ transform model per (session, sf_dir, params): the Householder
-# direction w and the permutation (old pos -> new pos) — O(dim) driver
-# floats, the kmeans-centroid legitimacy class.
-_OPQ_MODEL_CACHE: dict[tuple, tuple] = {}
-
-
 def opq_model_fit(e: DataFrame, dim: int = 64, m: int = 8, iters: int = 48) -> tuple:
     """Fit the OPQ rotation model ``(w, perm)`` over a ``(vec_id, v)``
     frame: the Householder direction from the corpus's top PC, and the
@@ -1782,7 +1733,7 @@ def opq_model_fit(e: DataFrame, dim: int = 64, m: int = 8, iters: int = 48) -> t
     # 48 sequential power-iteration rounds pay the spread width as a
     # per-round task floor, which dominated the one heavy scatter pass
     # (driver: 1.66 -> 2.83 s; capped/unspread fit measured 1.79 s,
-    # model bit-identical — scripts/ab_fit_spread.py).
+    # model bit-identical — OPTIMIZATION_r14.md).
     e = checkpoint_index(spread_small_input(e, "vec_id", _FIT_BYTES_PER_SLICE))
     _mu, v1, _lam = _power_top_pc(e, dim, iters)
     # Householder direction w = normalize(v1 - e1): H = I - 2ww^T
@@ -1845,15 +1796,14 @@ def opq_model_cached(
 ) -> tuple:
     """Fit (or fetch) the OPQ rotation model over the unit corpus — the
     session-cached view of :func:`opq_model_fit` (O(dim) driver floats,
-    the kmeans-centroid legitimacy class)."""
-    key = (spark.sparkContext.applicationId, sf_dir, dim, m, iters)
-    cached = _OPQ_MODEL_CACHE.get(key)
-    if cached is None:
+    the kmeans-centroid legitimacy class): the Householder direction w
+    and the permutation (old pos -> new pos)."""
+
+    def build() -> tuple:
         _, c = _pq_unit_corpus(spark, sf_dir)
-        e = c.select("vec_id", F.col("embedding").alias("v"))
-        cached = opq_model_fit(e, dim, m, iters)
-        session_cache_put(_OPQ_MODEL_CACHE, key, cached)
-    return cached
+        return opq_model_fit(c.select("vec_id", F.col("embedding").alias("v")), dim, m, iters)
+
+    return get("opq_model", spark, (sf_dir, dim, m, iters), build)
 
 
 def _opq_transform(df: DataFrame, w: list, perm: list, dim: int) -> DataFrame:
@@ -1888,10 +1838,6 @@ def _opq_transform(df: DataFrame, w: list, perm: list, dim: int) -> DataFrame:
     )
 
 
-# The resident OPQ serving index — same lifecycle as _PQ_FIT_CACHE.
-_OPQ_INDEX_CACHE: dict[tuple, tuple] = {}
-
-
 def opq_index_cached(
     spark: SparkSession, sf_dir: str, dim: int = 64, m: int = 8, k: int = 16,
     pq_iter: int = 3, iters: int = 48,
@@ -1909,9 +1855,7 @@ def opq_index_cached(
         spread_small_input,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, dim, m, k, pq_iter, iters)
-    cached = _OPQ_INDEX_CACHE.get(key)
-    if cached is None:
+    def build() -> tuple:
         q, c = _pq_unit_corpus(spark, sf_dir)
         w, perm = opq_model_cached(spark, sf_dir, dim, m, iters)
         # r13 opt: spread (byte-capped) BEFORE the one checkpoint; the
@@ -1936,9 +1880,9 @@ def opq_index_cached(
                 ).alias("codes"),
             )
         )
-        cached = (w, perm, books, rot_q, rot_c, codes)
-        session_cache_put(_OPQ_INDEX_CACHE, key, cached)
-    return cached
+        return w, perm, books, rot_q, rot_c, codes
+
+    return get("opq_index", spark, (sf_dir, dim, m, k, pq_iter, iters), build)
 
 
 @register("ann_opq_topk", oracle=_opq_ann_oracle(), tags=("vector", "pq", "opq"))
@@ -2257,21 +2201,12 @@ SELECT query_id, corpus_id, ROUND(cosine, 4) AS cosine, rank FROM (
 """
 
 
-# The resident IVF-PQ serving index, built once per (session, sf_dir,
-# params): coarse centroids + PQ codebooks + the localCheckpointed
-# inverted lists (corpus_id, bucket, codes). Same legitimacy class and
-# lifecycle as _PQ_FIT_CACHE (session-keyed — ADVICE r6).
-_IVFPQ_INDEX_CACHE: dict[tuple, tuple] = {}
-
 # The coarse quantizer over the UNIT corpus is IDENTICAL for the plain
 # and residual IVF-PQ variants (same corpus, seeds, iterations), exactly
 # as FAISS shares one coarse quantizer across index types — so it is a
 # model artifact of its own: whichever variant fits first publishes the
-# centroids here and the other reuses them (bench reports the coarse fit
-# as its own ann_coarse_fit line, the VERDICT r7 task-5 convention).
-_COARSE_FIT_CACHE: dict[tuple, list] = {}
-
-
+# centroids and the other reuses them (bench reports the coarse fit as its
+# own ann_coarse_fit line, the VERDICT r7 task-5 convention).
 def coarse_cents_cached(
     spark: SparkSession,
     sf_dir: str,
@@ -2282,16 +2217,14 @@ def coarse_cents_cached(
     """Fit (or fetch) the shared unit-corpus coarse quantizer."""
     from ..operators.similarity import kmeans_fit
 
-    key = (spark.sparkContext.applicationId, sf_dir, dim, n_cells, coarse_iter)
-    cents = _COARSE_FIT_CACHE.get(key)
-    if cents is None:
+    def build() -> list:
         _, c = _pq_unit_corpus(spark, sf_dir)
-        cents = kmeans_fit(
+        return kmeans_fit(
             c, "vec_id", "embedding", k=n_cells, max_iter=coarse_iter,
             exact_mean=True,
         )
-        session_cache_put(_COARSE_FIT_CACHE, key, cents)
-    return cents
+
+    return get("coarse_cents", spark, (sf_dir, dim, n_cells, coarse_iter), build)
 
 
 def ivfpq_index_cached(
@@ -2313,8 +2246,8 @@ def ivfpq_index_cached(
     across the coarse level and all m subspaces) and publishes BOTH
     shared model artifacts (coarse quantizer + PQ sub-codebooks — the
     flat PQ index trains the identical books, bit-parity pinned); when
-    one of them is already cached only the other's rounds run, and when
-    both are warm the fit is the encode scan alone."""
+    one of them is already resident only the other's rounds run, and
+    when both are warm the fit is the encode scan alone."""
     from ..operators.similarity import (
         _as_double,
         _nearest_centroid_expr,
@@ -2323,32 +2256,26 @@ def ivfpq_index_cached(
         ivfpq_fit_fused,
     )
 
-    key = (
-        spark.sparkContext.applicationId, sf_dir, dim, n_cells, coarse_iter,
-        m, k, pq_iter,
-    )
-    cached = _IVFPQ_INDEX_CACHE.get(key)
-    if cached is None:
+    coarse_key = (sf_dir, dim, n_cells, coarse_iter)
+    books_key = (sf_dir, dim, m, k, pq_iter)
+
+    def build() -> tuple:
         _, c = _pq_unit_corpus(spark, sf_dir)
-        coarse_key = (
-            spark.sparkContext.applicationId, sf_dir, dim, n_cells, coarse_iter,
-        )
-        books_key = (spark.sparkContext.applicationId, sf_dir, dim, m, k, pq_iter)
-        cents = _COARSE_FIT_CACHE.get(coarse_key)
-        books = _PQ_BOOKS_CACHE.get(books_key)
-        if cents is None and books is None:
+        app = spark.sparkContext.applicationId
+        if (app, *coarse_key) in store("coarse_cents") or (
+            app, *books_key
+        ) in store("pq_books"):
+            cents = coarse_cents_cached(spark, sf_dir, dim, n_cells, coarse_iter)
+            books = pq_books_cached(spark, sf_dir, dim, m, k, pq_iter)
+        else:
             # cold session: the fused recursion fits BOTH shared models
             # in one job per Lloyd round and publishes each
-            cents, books = ivfpq_fit_fused(
+            fused = ivfpq_fit_fused(
                 c, "vec_id", "embedding", dim=dim, n_cells=n_cells, m=m, k=k,
                 coarse_iter=coarse_iter, pq_iter=pq_iter, exact_mean=True,
             )
-            session_cache_put(_COARSE_FIT_CACHE, coarse_key, cents)
-            session_cache_put(_PQ_BOOKS_CACHE, books_key, books)
-        elif cents is None:
-            cents = coarse_cents_cached(spark, sf_dir, dim, n_cells, coarse_iter)
-        elif books is None:
-            books = pq_books_cached(spark, sf_dir, dim, m, k, pq_iter)
+            cents = get("coarse_cents", spark, coarse_key, lambda: fused[0])
+            books = get("pq_books", spark, books_key, lambda: fused[1])
         v = _as_double(F.col("embedding"))
         # label rides in the inverted-list rows — filterable attributes
         # are STORED with the codes in a serving table, so filtered
@@ -2362,9 +2289,12 @@ def ivfpq_index_cached(
                 "label",
             )
         )
-        cached = (cents, books, index)
-        session_cache_put(_IVFPQ_INDEX_CACHE, key, cached)
-    return cached
+        return cents, books, index
+
+    return get(
+        "ivfpq_index", spark,
+        (sf_dir, dim, n_cells, coarse_iter, m, k, pq_iter), build,
+    )
 
 
 @register("ann_ivfpq_topk", oracle=_ivfpq_ann_oracle(), tags=("vector", "ivf", "pq"))
@@ -2402,16 +2332,6 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _probe_frame(spark, sf_dir, "ann_ivfpq_topk", build)
 
 
-# (app_id, sf_dir) -> the resolved STABLE artifact dir of the persisted
-# serving artifact (model/ one-row parquet of centroids+codebooks, lists/
-# the inverted-list rows) — the durable handoff between the offline fit
-# job and the serving job. Since r11 (VERDICT r10 task 3) the dir is
-# CONTENT-KEYED and durable (operators/artifacts.py): no exit sweep, no
-# per-session mkdtemp — a fresh session over the same corpus+config
-# resolves and mounts the same path instead of silently re-fitting. The
-# dict only caches the resolved path per session.
-_IVFPQ_DISK_CACHE: dict[tuple, str] = {}
-
 # model parameters baked into the artifact key (the registered entries'
 # frozen config: 64-dim unit vectors, 16 coarse cells x 3 Lloyd rounds,
 # 8x16 sub-codebooks x 3 rounds, exact-integer means)
@@ -2431,6 +2351,34 @@ def ivfpq_artifact_dir(sf_dir: str) -> str:
     )
 
 
+def _ivfpq_persisted_dir(
+    spark: SparkSession, sf_dir: str, artifact_dir: str | None = None
+) -> str:
+    """The persisted serving artifact's STABLE dir (model/ one-row
+    parquet of centroids+codebooks, lists/ the inverted-list rows),
+    published from the resident index if absent — the durable handoff
+    between the offline fit job and the serving job. Content-keyed and
+    durable since r11 (operators/artifacts.py): a fresh session over the
+    same corpus+config mounts the same path instead of silently
+    re-fitting."""
+    from ..operators.artifacts import published
+
+    def _build(staging: str) -> None:
+        cents, books, index = ivfpq_index_cached(
+            spark, sf_dir, dim=64, n_cells=16, coarse_iter=3, m=8, k=16,
+            pq_iter=3,
+        )
+        index.write.mode("overwrite").parquet(f"{staging}/lists")
+        spark.createDataFrame(
+            [(cents, books)],
+            "cents array<array<double>>, books array<array<array<double>>>",
+        ).write.mode("overwrite").parquet(f"{staging}/model")
+
+    return published(
+        "ivfpq_persisted", spark, artifact_dir or ivfpq_artifact_dir(sf_dir), _build
+    )
+
+
 def ivfpq_index_persisted(
     spark: SparkSession, sf_dir: str, artifact_dir: str | None = None
 ) -> tuple:
@@ -2444,28 +2392,7 @@ def ivfpq_index_persisted(
     the path and serves without any fit work (``ann_ivfpq_cold_reload``;
     fit-forbidden pin in tests/test_r11_queries.py). ``artifact_dir``
     overrides the resolved path for callers managing their own store."""
-    from ..operators.artifacts import artifact_complete, publish_artifact
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    scratch = _IVFPQ_DISK_CACHE.get(key) if artifact_dir is None else artifact_dir
-    if scratch is None or not artifact_complete(scratch):
-        scratch = artifact_dir or ivfpq_artifact_dir(sf_dir)
-        if not artifact_complete(scratch):
-            cents, books, index = ivfpq_index_cached(
-                spark, sf_dir, dim=64, n_cells=16, coarse_iter=3, m=8, k=16,
-                pq_iter=3,
-            )
-
-            def _build(staging: str) -> None:
-                index.write.mode("overwrite").parquet(f"{staging}/lists")
-                spark.createDataFrame(
-                    [(cents, books)],
-                    "cents array<array<double>>, books array<array<array<double>>>",
-                ).write.mode("overwrite").parquet(f"{staging}/model")
-
-            publish_artifact(scratch, _build)
-        if artifact_dir is None:
-            session_cache_put(_IVFPQ_DISK_CACHE, key, scratch)
+    scratch = _ivfpq_persisted_dir(spark, sf_dir, artifact_dir)
     row = spark.read.parquet(f"{scratch}/model").collect()[0]
     cents = [[float(x) for x in c] for c in row["cents"]]
     books = [[[float(x) for x in c] for c in b] for b in row["books"]]
@@ -2500,17 +2427,13 @@ def ann_ivfpq_persist_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit-vector store (``_pq_unit_corpus`` — since r10 a checkpointed
     artifact, the FAISS vectors-live-in-the-index posture). Probe plan
     compiled once per session+model (``_probe_frame``)."""
-    from ..operators.artifacts import artifact_complete
     from ..operators.caching import dir_fingerprint
     from ..operators.similarity import ivfpq_knn
 
     # resolve (and if needed publish) the artifact path WITHOUT paying the
     # model rehydration per invocation — the O(model) collect lives inside
-    # build(), which the fingerprint-keyed probe-frame cache amortizes
-    art = _IVFPQ_DISK_CACHE.get((spark.sparkContext.applicationId, sf_dir))
-    if art is None or not artifact_complete(art):
-        ivfpq_index_persisted(spark, sf_dir)
-        art = _IVFPQ_DISK_CACHE[(spark.sparkContext.applicationId, sf_dir)]
+    # build(), which the fingerprint-keyed probe frame amortizes
+    art = _ivfpq_persisted_dir(spark, sf_dir)
 
     def build() -> DataFrame:
         q, c = _pq_unit_corpus(spark, sf_dir)
@@ -2737,9 +2660,6 @@ def ann_ivfpq_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rotated space; the oracle splices the two existing replay prefixes
 # (_opq_rotation_ctes into _ivfpq_fit_ctes) so no new SQL semantics exist
 # to drift.
-_IVFOPQ_INDEX_CACHE: dict[tuple, tuple] = {}
-
-
 def ivfopq_index_cached(
     spark: SparkSession,
     sf_dir: str,
@@ -2771,12 +2691,7 @@ def ivfopq_index_cached(
         kmeans_fit,
     )
 
-    key = (
-        spark.sparkContext.applicationId, sf_dir, dim, n_cells, coarse_iter,
-        m, k, pq_iter, iters,
-    )
-    cached = _IVFOPQ_INDEX_CACHE.get(key)
-    if cached is None:
+    def build() -> tuple:
         w, perm, books, rot_q, rot_c, _codes = opq_index_cached(
             spark, sf_dir, dim=dim, m=m, k=k, pq_iter=pq_iter, iters=iters
         )
@@ -2794,9 +2709,12 @@ def ivfopq_index_cached(
                 "label",
             )
         )
-        cached = (w, perm, cents, books, rot_q, rot_c, index)
-        session_cache_put(_IVFOPQ_INDEX_CACHE, key, cached)
-    return cached
+        return w, perm, cents, books, rot_q, rot_c, index
+
+    return get(
+        "ivfopq_index", spark,
+        (sf_dir, dim, n_cells, coarse_iter, m, k, pq_iter, iters), build,
+    )
 
 
 @register(
@@ -3059,10 +2977,6 @@ SELECT query_id, corpus_id, ROUND(cosine, 4) AS cosine, rank FROM (
 """
 
 
-# Residual IVF-PQ serving index — same lifecycle as _IVFPQ_INDEX_CACHE.
-_IVFPQR_INDEX_CACHE: dict[tuple, tuple] = {}
-
-
 def ivfpqr_index_cached(
     spark: SparkSession,
     sf_dir: str,
@@ -3093,12 +3007,7 @@ def ivfpqr_index_cached(
         pq_fit,
     )
 
-    key = (
-        spark.sparkContext.applicationId, sf_dir, dim, n_cells, coarse_iter,
-        m, k, pq_iter, "residual",
-    )
-    cached = _IVFPQR_INDEX_CACHE.get(key)
-    if cached is None:
+    def build() -> tuple:
         _, c = _pq_unit_corpus(spark, sf_dir)
         cents = coarse_cents_cached(spark, sf_dir, dim, n_cells, coarse_iter)
         v = _as_double(F.col("embedding"))
@@ -3139,9 +3048,12 @@ def ivfpqr_index_cached(
                 _pq_code_expr(F.col("resid"), books, dim // m).alias("codes"),
             )
         )
-        cached = (cents, books, index)
-        session_cache_put(_IVFPQR_INDEX_CACHE, key, cached)
-    return cached
+        return cents, books, index
+
+    return get(
+        "ivfpqr_index", spark,
+        (sf_dir, dim, n_cells, coarse_iter, m, k, pq_iter), build,
+    )
 
 
 @register(
