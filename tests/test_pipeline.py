@@ -202,6 +202,111 @@ def test_refresh_incremental_touches_only_new_days(spark, tmp_path):
     assert set((tmp_path / "warehouse" / "vendas" / "ds=2024-01-01").glob("part-*")) == old_files
 
 
+def test_read_lake_partition_columns_are_strings(spark, tmp_path):
+    """Partition columns read as strings with and without a declared
+    schema: an inferred type would read this CNPJ as 1234567000189."""
+    layout = LakeLayout(str(tmp_path / "lake"))
+    write_lake(_records(spark).withColumn("cnpj", F.lit("01234567000189")), layout)
+    schema = compile_schema([{"name": "id", "type": "INTEGER"}])
+    for back in (read_lake(spark, layout), read_lake(spark, layout, schema)):
+        types = dict(back.dtypes)
+        assert [types[c] for c in ("cnpj", "endpoint", "ds")] == ["string"] * 3
+        assert [r["cnpj"] for r in back.select("cnpj").distinct().collect()] == [
+            "01234567000189"
+        ]
+
+
+def _group_stage_names(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return (job count, stage names)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group, False)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    return len(jobs), [st.getStageInfo(s).name for j in jobs for s in st.getJobInfo(j).stageIds]
+
+
+def test_refresh_incremental_declared_schema_runs_no_inference(spark, tmp_path):
+    """With ``schema=`` the lake is read with it: the same warehouse rows
+    as conforming an inferred read (TIMESTAMP column included), and no
+    JSON schema-inference job."""
+    from vmhub_data_pipeline_spark.pipeline import refresh_incremental
+
+    layout = LakeLayout(str(tmp_path / "lake"))
+    for ds in ("2024-01-01", "2024-01-02"):
+        write_lake(
+            _records(spark, ds=ds, ts=f"{ds}T00:00:00Z").withColumn(
+                "sold_at", F.lit(f"{ds}T05:06:07Z")
+            ),
+            layout,
+        )
+    schema = compile_schema(
+        [
+            {"name": "id", "type": "INTEGER", "mode": "REQUIRED"},
+            {"name": "name", "type": "STRING"},
+            {"name": "amount", "type": "FLOAT"},
+            {"name": "sold_at", "type": "TIMESTAMP"},
+            {"name": "ingestion_timestamp", "type": "STRING"},
+        ]
+    )
+    inferred_tbl, declared_tbl = str(tmp_path / "inferred"), str(tmp_path / "declared")
+    inferred_jobs, inferred_stages = _group_stage_names(
+        spark, "refresh-inferred",
+        lambda: refresh_table(
+            read_lake(spark, layout).filter(F.col("ds") >= "2024-01-02"),
+            inferred_tbl, schema=schema, dedup_keys=["id"],
+        ),
+    )
+    declared_jobs, declared_stages = _group_stage_names(
+        spark, "refresh-declared",
+        lambda: refresh_incremental(
+            spark, layout, declared_tbl, since_ds="2024-01-02", schema=schema,
+            dedup_keys=["id"],
+        ),
+    )
+    # inference is a job of its own, named after the DataFrameReader call
+    assert any(n.startswith("json at") for n in inferred_stages), inferred_stages
+    assert not any(n.startswith("json at") for n in declared_stages), declared_stages
+    assert 0 < declared_jobs < inferred_jobs
+
+    inferred, declared = spark.read.parquet(inferred_tbl), spark.read.parquet(declared_tbl)
+    assert dict(declared.dtypes)["sold_at"] == "timestamp"
+    assert declared.dtypes == inferred.dtypes
+    assert sorted(declared.collect()) == sorted(inferred.collect())
+    assert declared.count() == 6
+
+
+def test_compaction_keeps_lines_byte_for_byte(spark, tmp_path):
+    """Compaction copies lake lines verbatim, including lines a JSON round
+    trip would rewrite (key order, number format, spacing, escapes)."""
+    from collections import Counter
+
+    from vmhub_data_pipeline_spark.pipeline import compact_partition
+
+    layout = LakeLayout(str(tmp_path / "lake"))
+    for i in range(3):
+        write_lake(_records(spark, n=5, ts=f"2024-01-0{i+1}T00:00:00Z"), layout)
+    part = tmp_path / "lake" / "cnpj=12345678000190" / "endpoint=vendas" / "ds=2024-01-01"
+    (part / "part-99999-raw.json").write_text(
+        '{"b":1,"a":2.50}\n{"id": 7, "name": "caf\\u00e9", "amount": 1e2}\n'
+    )
+
+    def lines():
+        return Counter(ln for f in part.glob("part-*") for ln in f.read_bytes().splitlines())
+
+    before = lines()
+    assert compact_partition(
+        spark, layout, "12345678000190", "vendas", "2024-01-01",
+        target_file_bytes=10_000_000,
+    ) == 1
+    assert lines() == before
+    assert [f.suffix for f in part.glob("part-*")] == [".json"]
+
+
 def test_daily_ranges():
     r = daily_ranges(date(2024, 1, 1), date(2024, 1, 3))
     assert r == [

@@ -240,3 +240,31 @@ def test_distributed_fetch_stripes_pages_and_threads_dates(spark):
     # striping is real: both slots contributed pages (slot 0 -> 0,2; slot 1 -> 1)
     pages = {r["page"] for r in rows}
     assert pages == {0, 1, 2}
+
+
+@pytest.mark.parametrize("tasks_per_date", [2, 4])  # 4 and 8 specs
+def test_distributed_fetch_gives_each_task_one_spec(spark, tasks_per_date):
+    """Every fetch task receives exactly one (date, slot) spec. A task
+    holding two would fetch both slices one after the other."""
+    cfg = EndpointConfig("vendas", page_size=10, requires_date_range=True)
+    dates = ["2024-01-01", "2024-01-02"]
+    records = [{"id": i} for i in range(10 * tasks_per_date)]  # a page per slot
+
+    class PartitionRecordingFactory:
+        def __call__(self, date_str=None):
+            from pyspark import TaskContext
+
+            pid = TaskContext.get().partitionId()
+            return MockVMHubAPI({"vendas": [dict(r, task=pid) for r in records]}).get
+
+    rows = fetch_endpoint_distributed(
+        spark, cfg, PartitionRecordingFactory(), dates=dates,
+        tasks_per_date=tasks_per_date,
+    ).collect()
+    tasks_by_spec: dict[tuple[str, int], set[int]] = {}
+    for r in rows:
+        spec = (r["date"], r["page"] % tasks_per_date)  # slot s fetches pages s, s+N, ...
+        tasks_by_spec.setdefault(spec, set()).add(json.loads(r["record"])["task"])
+    assert len(tasks_by_spec) == len(dates) * tasks_per_date
+    assert all(len(tasks) == 1 for tasks in tasks_by_spec.values())
+    assert len(set().union(*tasks_by_spec.values())) == len(tasks_by_spec), tasks_by_spec

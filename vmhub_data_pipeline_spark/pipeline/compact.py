@@ -42,13 +42,13 @@ def compact_partition(
     """Rewrite one (cnpj, endpoint, ds) partition into
     ceil(bytes/target) files. Returns the new file count (0 = skipped).
 
-    Read -> coalesce (no shuffle: coalesce only merges read splits) ->
-    stage to a temp subtree -> swap. The swap renames the live partition
-    aside BEFORE moving the replacement in, so a crash at any point leaves
-    either the old data (at the original or __old path, recoverable) or the
-    new data — never neither. Local-filesystem paths only (shutil); an
-    object-store lake would route the same two-phase swap through Hadoop
-    FileSystem rename().
+    Read lines as text -> coalesce (no shuffle: coalesce only merges read
+    splits) -> stage to a temp subtree -> swap. The swap renames the live
+    partition aside BEFORE moving the replacement in, so a crash at any
+    point leaves either the old data (at the original or __old path,
+    recoverable) or the new data — never neither. Local-filesystem paths
+    only (shutil); an object-store lake would route the same two-phase swap
+    through Hadoop FileSystem rename().
     """
     n_files, total_bytes = partition_stats(layout, cnpj, endpoint, ds)
     if n_files < min_files_to_compact:
@@ -58,14 +58,22 @@ def compact_partition(
         return 0  # already at/below target granularity
     parent = f"{layout.root}/cnpj={cnpj}/endpoint={endpoint}"
     part_path = f"{parent}/ds={ds}"
-    df = spark.read.json(part_path)
     # stage through a temp subtree then swap — Spark can't overwrite a path
     # it is currently reading. Staging dirs are DOT-prefixed: Spark's file
     # listing skips names starting with '.' or '_', so a concurrent lake
     # read (or one after a crash mid-swap) never discovers the staging
     # trees as bogus `ds=...__compacting` partitions with duplicate rows.
     tmp_path = f"{parent}/.ds={ds}__compacting"
-    df.coalesce(n_out).write.mode("overwrite").json(tmp_path)
+    # lines are copied as text: no schema inference and no JSON parse, and
+    # each line stays byte-for-byte (a JSON round trip reorders keys and
+    # reformats numbers)
+    spark.read.text(part_path).coalesce(n_out).write.mode("overwrite").text(tmp_path)
+    for f in Path(tmp_path).glob("part-*.txt"):
+        # keep the lake's NDJSON file names, each checksum beside its file
+        crc = f.with_name(f".{f.name}.crc")
+        f.rename(f.with_suffix(".json"))
+        if crc.exists():
+            crc.rename(crc.with_name(f".{f.stem}.json.crc"))
     import shutil
 
     old_path = f"{parent}/.ds={ds}__old"

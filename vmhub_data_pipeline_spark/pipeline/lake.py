@@ -69,22 +69,26 @@ def read_lake(
     ``path_glob`` filters files by basename pattern at the file index — the
     reference's fnmatch-on-blob-name filter (S7,
     src/utils/gcs_helper.py:139-175) without listing a single extra file.
+
+    Undeclared partition columns read as strings on both paths. Without a
+    ``schema`` the payload schema is inferred (one job over every file)
+    and the partition columns' inferred types are dropped: Spark would
+    read ``cnpj=01234567000189`` as the bigint 1234567000189.
     """
-    reader = spark.read
+    reader = spark.read.option("mode", "PERMISSIVE")
     if path_glob is not None:
         reader = reader.option("pathGlobFilter", path_glob)
-    if schema is not None:
-        part_fields = [
-            T.StructField("cnpj", T.StringType()),
-            T.StructField("endpoint", T.StringType()),
-            T.StructField("ds", T.StringType()),
-        ]
-        declared = T.StructType(
+    part_cols = layout.partition_cols
+    if schema is None:
+        inferred = reader.json(layout.root).schema
+        schema = T.StructType([f for f in inferred.fields if f.name not in part_cols])
+    declared = {f.name for f in schema.fields}
+    df = reader.schema(
+        T.StructType(
             list(schema.fields)
-            + [f for f in part_fields if f.name not in {x.name for x in schema.fields}]
+            + [T.StructField(c, T.StringType()) for c in part_cols if c not in declared]
         )
-        reader = reader.schema(declared)
-    df = reader.option("mode", "PERMISSIVE").json(layout.root)
+    ).json(layout.root)
     for col, val in predicates.items():
         df = df.filter(F.col(col) == val)
     return df

@@ -93,10 +93,17 @@ def refresh_incremental(
     reference truncate-reloads ALL history every run
     (src/utils/bigquery_helper.py:120, src/main.py:254-255), this touches
     O(new days) regardless of table age.
+
+    That bound holds only when ``schema=`` is declared: the lake is then
+    read with it, and no job runs before the ``ds`` filter prunes. Without
+    one, Spark first infers the JSON schema from every file in the lake,
+    a job that grows with the lake's age.
     """
     import pyspark.sql.functions as F
 
     from .lake import read_lake, refresh_table
 
-    lake_df = read_lake(spark, layout).filter(F.col("ds") >= since_ds)
+    lake_df = read_lake(spark, layout, refresh_kwargs.get("schema")).filter(
+        F.col("ds") >= since_ds
+    )
     refresh_table(lake_df, table_path, **refresh_kwargs)

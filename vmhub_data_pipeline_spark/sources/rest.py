@@ -239,8 +239,16 @@ def fetch_endpoint_distributed(
     s, s+N, s+2N, ... (see fetch_all), so one hot date parallelizes across
     N tasks instead of one sequential loop — valid under the
     empty-page-EOF protocol since every page past the true end is empty.
+
+    The spec frame comes from ``spark.range`` with one partition per spec,
+    so each (date, slot) is exactly one task and the frame is built in the
+    JVM. A ``createDataFrame(list).repartition(n)`` frame would be a Python
+    RDD: an extra job of Python tasks per call just to re-pickle the specs,
+    and a round-robin deal that gives some tasks two specs (fetched one
+    after the other) and others none.
     """
     import pandas as pd
+    import pyspark.sql.functions as F
 
     # Executors need RestIngestor/EndpointConfig; a library caller may not
     # have this package on the worker PYTHONPATH (sys.path edits are
@@ -251,11 +259,13 @@ def fetch_endpoint_distributed(
     ship_module_by_value(__name__)
 
     n_slots = max(1, tasks_per_date)
-    spec_rows = [
-        (d, s) for d in (dates or ["__nodate__"]) for s in range(n_slots)
-    ]
-    specs = spark.createDataFrame(spec_rows, "date string, slot int").repartition(
-        len(spec_rows)
+    spec_dates = dates or ["__nodate__"]
+    n_specs = len(spec_dates) * n_slots
+    # spec i is (date i // n_slots, slot i % n_slots), alone in partition i
+    spec_id = F.col("id")
+    specs = spark.range(0, n_specs, 1, n_specs).select(
+        F.array(*map(F.lit, spec_dates))[(spec_id / n_slots).cast("int")].alias("date"),
+        (spec_id % n_slots).cast("int").alias("slot"),
     )
 
     import dataclasses
