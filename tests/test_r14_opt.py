@@ -1,76 +1,145 @@
-"""Round-14 OPTIMIZATION pins: partitioning gates for the mine-side
-narrowing of the resident LSH index (VERDICT r13 task 3).
+"""Resident-frame width and plan pins.
 
-The r13 single-scan build spreads the signature hash work across every
-core (right — it halved the index build), but the checkpointed index then
-carried that full-cores layout into every cheap downstream job: the band
-self-join, the verify join and the pair publish each paid a full-cores
-task floor for sub-slice work, which is exactly the driver's
-lsh_pairs_build 1.89 -> 3.30 s regression. ``narrow_resident`` coalesces
-the RESIDENT blocks (no shuffle, the build's spread untouched) down to
-ceil(source_bytes / 256 KB) — a no-op at scale. Values are oracle-covered;
-these pins hold the width so a refactor cannot silently reintroduce the
-full-cores mine.
+One width rule holds for every resident frame: the build runs wide
+(``spread_small_input`` fans a small input out to the core count) and
+the eager ``checkpoint_index`` stores it narrow, coalesced to
+ceil(sizeInBytes / slice) partitions from the frame's own Catalyst
+statistics, never widened. The r13 full-cores checkpoint made every
+cheap downstream job (band self-join, verify join, pair publish, Lloyd
+round) pay a full-cores task floor — the lsh_pairs_build 1.89 -> 3.30 s
+regression. These pins hold the width, the kept statistics and the
+constraint strip, and that no call site sizes its own frames again.
 """
 
 from __future__ import annotations
 
+import ast
 import math
 import os
+from pathlib import Path
 
 import pyspark.sql.functions as F
+import pytest
 
+from vmhub_data_pipeline_spark.operators import similarity
 from vmhub_data_pipeline_spark.operators.similarity import (
-    _FIT_BYTES_PER_SLICE,
+    _BYTES_PER_SLICE,
     checkpoint_index,
-    narrow_resident,
+    spread_small_input,
 )
 
 SF = "/root/testdata/sf0.001"
+PKG = Path(similarity.__file__).resolve().parents[1]
+LONG_MAX = 2**63 - 1
 
 
 def _expected_width(sf_dir: str) -> int:
     nbytes = os.path.getsize(f"{sf_dir}/documents.parquet")
-    return max(1, math.ceil(nbytes / _FIT_BYTES_PER_SLICE))
+    return max(1, math.ceil(nbytes / _BYTES_PER_SLICE))
 
 
-def test_narrow_resident_widths(spark):
-    """Parquet-sourced frames narrow to the byte-derived width; unsized
-    sources (synthetic ranges) leave the frame untouched."""
+def _size(df) -> int:
+    return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+
+def _fingerprint(df) -> tuple:
+    """(count, order-insensitive row hash)."""
+    row = df.agg(
+        F.count(F.lit(1)),
+        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")),
+    ).first()
+    return row[0], row[1]
+
+
+def _spread_docs(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    wide = checkpoint_index(docs.repartition(16, F.col("doc_id")))
-    narrowed = narrow_resident(wide, docs)
-    assert narrowed.rdd.getNumPartitions() == _expected_width(SF)
-    # values untouched — partitioning only
-    assert narrowed.count() == docs.count()
-    synthetic = spark.range(0, 100, 1, 4)
-    wide2 = checkpoint_index(synthetic.repartition(16))
-    assert narrow_resident(wide2, synthetic).rdd.getNumPartitions() == 16
+    spread = spread_small_input(docs, "doc_id")
+    # an input narrower than the cores fans out to the core count
+    assert docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    return spread
 
 
-def test_capped_spread_keeps_resident_layout(spark):
-    """A byte-capped spread over an UNSIZEABLE input (resident/
-    checkpointed frames have no inputFiles) must keep the input's own
-    layout, not fall back to a full-cores repartition: the sequential
-    fit rounds (Lloyd, power iteration) pay the width as a per-round
-    task floor (the r13 ann_opq_rotation_fit / ann_coarse_fit
-    regression — the cap was inert exactly where it was written for)."""
-    from vmhub_data_pipeline_spark.operators.similarity import (
-        spread_small_input,
+def _range(spark):
+    return spark.range(0, 100, 1, 4).repartition(16)
+
+
+def _grown_union(spark):
+    # the grown-index shape of lsh_index_appended: a frozen resident leg
+    # and a resident batch leg, unioned, then checkpointed
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "n_chars")
+    cut = docs.agg(F.percentile_approx("doc_id", 0.5)).first()[0]
+    frozen = checkpoint_index(docs.repartition(8, "doc_id"))
+    batch = checkpoint_index(docs.filter(F.col("doc_id") >= cut).repartition(8))
+    return frozen.filter(F.col("doc_id") < cut).unionByName(batch)
+
+
+def _lsh_aug_joint(spark):
+    from vmhub_data_pipeline_spark.operators.dedup import minhash_signed_sets
+    from vmhub_data_pipeline_spark.queries.dedup import boilerplate_corpus
+
+    return minhash_signed_sets(
+        boilerplate_corpus(spark, SF), "doc_id", "text", portable=True
     )
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    resident = checkpoint_index(docs.select("doc_id", "n_chars"))
-    before = resident.rdd.getNumPartitions()
-    spread = spread_small_input(resident, "doc_id", _FIT_BYTES_PER_SLICE)
-    assert spread.rdd.getNumPartitions() == before
-    # an UNCAPPED spread of the same frame still fans out (the hash-chain
-    # builders' contract is unchanged)
-    wide = spread_small_input(resident, "doc_id")
-    assert (
-        wide.rdd.getNumPartitions()
-        == spark.sparkContext.defaultParallelism
+
+@pytest.mark.parametrize(
+    "build", [_spread_docs, _range, _grown_union, _lsh_aug_joint],
+    ids=["spread_docs", "range", "grown_union", "lsh_aug_joint"],
+)
+def test_checkpoint_stores_at_its_own_size(spark, build):
+    """An eager checkpoint reads at min(width, ceil(sizeInBytes/slice)),
+    sized from its own statistics (synthetic ranges and unions included),
+    with the rows unchanged."""
+    df = build(spark)
+    plain = df.localCheckpoint()
+    width = plain.rdd.getNumPartitions()
+    resident = checkpoint_index(df)
+    size = _size(resident)
+    assert 0 < size < LONG_MAX
+    assert size == _size(plain)
+    assert resident.rdd.getNumPartitions() == min(
+        width, max(1, math.ceil(size / _BYTES_PER_SLICE))
     )
+    assert _fingerprint(resident) == _fingerprint(df)
+
+
+def test_lazy_checkpoint_keeps_its_width(spark):
+    """A lazy checkpoint is not narrowed: the coalesce would run the
+    build itself narrow."""
+    df = spark.range(0, 100, 1, 4).repartition(16)
+    assert checkpoint_index(df, eager=False).rdd.getNumPartitions() == 16
+
+
+def test_small_resident_frame_plans_as_broadcast(spark):
+    """A resident frame keeps its statistics, so a 10-row checkpoint
+    joined to a checkpointed corpus is a broadcast in the initial
+    (pre-AQE) physical plan, not a runtime rescue."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    corpus = checkpoint_index(docs.select("doc_id", "text"))
+    ten = checkpoint_index(docs.select("doc_id", "n_chars").orderBy("doc_id").limit(10))
+    plan = corpus.join(ten, "doc_id")._jdf.queryExecution().sparkPlan().toString()
+    assert "BroadcastHashJoin" in plan, plan
+
+
+def test_resident_frame_drops_origin_constraints(spark):
+    """The origin plan's constraints do not ride into later plans: a
+    predicate on a derived column would otherwise be re-inferred into a
+    later equi-join over attributes the resident frame does not have
+    (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND at execution)."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    derived = docs.select(
+        "doc_id", (F.col("n_chars") % 7).alias("bucket")
+    ).filter(F.col("bucket") == 3)
+    plain = derived.localCheckpoint()
+    assert not plain._jdf.queryExecution().optimizedPlan().constraints().isEmpty()
+    resident = checkpoint_index(derived)
+    assert resident._jdf.queryExecution().optimizedPlan().constraints().isEmpty()
+    other = checkpoint_index(
+        docs.select("doc_id", (F.col("n_chars") % 7).alias("bucket"))
+    )
+    joined = other.join(resident, ["bucket", "doc_id"])
+    assert joined.count() == derived.count() > 0
 
 
 def test_lsh_index_mine_side_is_narrow(spark):
@@ -85,3 +154,38 @@ def test_lsh_index_mine_side_is_narrow(spark):
     k = _expected_width(SF)
     assert banded.rdd.getNumPartitions() <= k
     assert toks.rdd.getNumPartitions() <= k
+
+
+# The width names outside operators/similarity.py, each with its reason.
+WIDTH_EXEMPT = {
+    # the Levenshtein verify's input is a join output: rdd.getNumPartitions
+    # reads the pre-AQE shuffle width there, so spread_small_input would
+    # be a no-op where AQE folds the CPU-heavy DP onto one task
+    ("queries/text.py", "defaultParallelism"),
+}
+
+
+def test_partition_width_is_chosen_in_one_place():
+    """Only operators/similarity.py reads the core count, a partition
+    count or the slice constant; every other module gets its widths from
+    spread_small_input and checkpoint_index."""
+    names = {"defaultParallelism", "getNumPartitions", "_BYTES_PER_SLICE"}
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        if rel == "operators/similarity.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.alias):
+                name = node.name
+            else:
+                continue
+            if name in names:
+                found.append((rel, name))
+    offenders = [f for f in found if f not in WIDTH_EXEMPT]
+    assert not offenders, offenders
+    assert WIDTH_EXEMPT <= set(found), "stale exemption"

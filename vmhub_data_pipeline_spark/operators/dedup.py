@@ -631,15 +631,12 @@ def minhash_neardup_pairs(
     # _spread_small_input, across every core instead of the scan's one
     # split. Signatures, band keys, candidates and verified pairs are
     # all unchanged.
-    from .similarity import checkpoint_index, narrow_resident
+    from .similarity import checkpoint_index
 
-    joint = narrow_resident(
-        checkpoint_index(
-            minhash_signed_sets(
-                df, id_col, text_col, num_hashes, shingle_size, portable=portable
-            )
-        ),
-        df,
+    joint = checkpoint_index(
+        minhash_signed_sets(
+            df, id_col, text_col, num_hashes, shingle_size, portable=portable
+        )
     )
     banded = banded_from_sig(joint, num_hashes, bands, portable=portable)
     cands = band_candidates(

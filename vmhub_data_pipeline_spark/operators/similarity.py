@@ -18,6 +18,8 @@ doubles — no Python, no UDF.
 
 from __future__ import annotations
 
+import math
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
@@ -93,135 +95,83 @@ def brute_force_knn(
     )
 
 
-def spread_small_input(
-    df: DataFrame, id_col: str, bytes_per_slice: int | None = None
-) -> DataFrame:
-    """CPU-heavy projections (hash chains, shingle explodes, outer
-    products) ride their input's scan partitioning, and a small corpus
-    (one parquet split) runs them on ONE core (r13, guide §2.5
-    input-skew): spread the input across the session's cores FIRST when —
-    and only when — the scan has fewer splits than cores. The partition
-    count is pinned explicitly (``repartition(n, col)``) because AQE's
-    partition coalescing would otherwise fold a few-MB exchange right
-    back to one partition, re-serializing the CPU-bound work. At scale
-    the scan already has >= cores splits and this is a no-op — no
-    unconditional payload shuffle is introduced.
+def spread_small_input(df: DataFrame, id_col: str) -> DataFrame:
+    """Build wide: spread ``df`` across the session's cores when it has
+    fewer partitions than that, else return it unchanged.
 
-    ``bytes_per_slice`` (r13 opt, guide §2.2 fewer-larger-partitions):
-    consumers whose per-row work is LIGHT relative to the hash chains —
-    the Lloyd fits' argmin folds — additionally cap the spread at
-    ``ceil(input_bytes / bytes_per_slice)``: a task carrying well under
-    ~50 ms of work costs more to schedule than to run, and every fit
-    ROUND pays the task floor again (measured: one k-means round over a
-    sub-MB corpus at 32 slices costs 1.5-1.8x the 4-slice round, both
-    sfs). Sizing is data-derived (input bytes, cores), never a fixed
-    local count. A union is sized by its file-backed legs (synthetic
-    legs add no bytes, so their rows are undercounted); only a plan with
-    no file source at all, such as a resident checkpoint, is unsized and
-    keeps its layout (below)."""
+    CPU-heavy projections (hash chains, shingle explodes, outer
+    products) ride their input's partitioning, and a small corpus (one
+    parquet split) would run them on ONE core (r13, guide §2.5
+    input-skew). The count is pinned (``repartition(n, col)``) because
+    AQE's partition coalescing would otherwise fold a few-MB exchange
+    right back to one partition. At scale the input already has >= cores
+    partitions and no payload shuffle is introduced.
+
+    This is the first half of the one width rule for resident frames:
+    build wide here, then store narrow in :func:`checkpoint_index`."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    if bytes_per_slice:
-        import math
-
-        nbytes = _input_bytes(df)
-        if nbytes > 0:
-            target = min(target, max(1, math.ceil(nbytes / bytes_per_slice)))
-        else:
-            # r14 (VERDICT r13 task 6): a capped caller declared its
-            # per-row work LIGHT, and an unsizeable input here is a
-            # RESIDENT frame (checkpointed fit corpora have no
-            # inputFiles) — whose width its own builder already chose.
-            # Spreading it to full cores made every sequential fit round
-            # (Lloyd, power iteration: max_iter collect jobs) pay a
-            # full-cores task floor for sub-slice work; measured on the
-            # regressed driver lines (interleaved, models bit-identical):
-            # ann_opq_rotation_fit 2.42 -> 1.79 s, ann_coarse_fit
-            # 2.75 -> 1.32 s at sf0.01. Keep the input's layout.
-            return df
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target, F.col(id_col))
     return df
 
 
-def _input_bytes(df: DataFrame) -> int:
-    """Total on-disk bytes of ``df``'s file sources, 0 when it has none.
-    A union counts only its file-backed legs, so rows from synthetic legs
-    (``spark.range``, literals) are not sized. Plans with no file source
-    (resident checkpoints) and plans where ``inputFiles`` raises
-    (streaming) come back 0, and callers keep their full-cores / no-op
-    behavior."""
-    import os
-
-    try:
-        return sum(
-            os.path.getsize(f.removeprefix("file:")) for f in df.inputFiles()
-        )
-    except Exception:
-        return 0
-
-
-def narrow_resident(
-    df: DataFrame, source_df: DataFrame, bytes_per_slice: int | None = None
-) -> DataFrame:
-    """Coalesce a RESIDENT (checkpointed) index frame down to the width
-    its SOURCE bytes justify — the read-side twin of
-    :func:`spread_small_input` (guide §2.2 fewer-larger-partitions).
-
-    The heavy build projections (hash chains, shingle explodes) want the
-    full-cores spread, so the checkpoint materializes wide; but every
-    DOWNSTREAM job over the resident blocks (band self-join, verify join,
-    artifact write) then pays the per-task scheduling floor again for
-    per-task work far under it. ``coalesce`` after the checkpoint merges
-    blocks at read time — no shuffle, the build's parallelism is
-    untouched — so mine-side jobs run ceil(source_bytes / slice) tasks.
-    At scale the source has >= cores x slice bytes and this is a no-op;
-    a union source is sized by its file-backed legs, and a source with
-    no file at all (a resident checkpoint) returns the frame unchanged. Row values are untouched — partitioning only."""
-    if bytes_per_slice is None:
-        bytes_per_slice = _FIT_BYTES_PER_SLICE
-    import math
-
-    nbytes = _input_bytes(source_df)
-    if nbytes <= 0:
-        return df
-    k = max(1, math.ceil(nbytes / bytes_per_slice))
-    if k < df.rdd.getNumPartitions():
-        return df.coalesce(k)
-    return df
-
-
-# Fit-input slice size: the Lloyd rounds' per-row argmin is ~2k fused
-# interpreted ops per 0.5 KB row, so a 256 KB slice is ~1M ops — above
-# the task-scheduling floor, far below a scan split. Only ever binding
-# for corpora under cores x 256 KB; at scale the scan partitioning wins.
-_FIT_BYTES_PER_SLICE = 256 * 1024
+# One slice of a resident frame. A Lloyd round's per-row argmin is ~2k
+# fused interpreted ops per 0.5 KB row, so 256 KB is ~1M ops per task:
+# above the task-scheduling floor, far below a scan split.
+_BYTES_PER_SLICE = 256 * 1024
 
 
 def checkpoint_index(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``localCheckpoint`` + origin-constraint strip — the
-    materialization for INDEX frames that outlive the query that built
-    them (PQ codes, IVF-PQ inverted lists). ``eager=False`` defers the
+    """``localCheckpoint`` for frames that outlive the query that built
+    them (indexes, fit corpora, PQ codes). ``eager=False`` defers the
     materialization into the consumer's first action (one fewer
     synchronous driver job — right for per-probe query-batch prep, where
     the checkpoint exists only to truncate the literal-heavy builder
     plan, not to be shared across queries).
 
-    A plain localCheckpoint's ``LogicalRDD`` keeps the builder plan's
-    constraints; when a LATER query equi-joins the checkpointed frame,
+    The frame keeps the origin plan's Catalyst statistics but not its
+    constraints. A plain localCheckpoint's ``LogicalRDD`` keeps both;
+    when a LATER query equi-joins the checkpointed frame,
     ``InferFiltersFromConstraints`` can resurrect a constraint whose
     expression references the builder's (now nonexistent) scan
     attributes into the join condition — an executor-side
     ``INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND`` (observed on Spark 4.1 with
     the celled code join; the builder's ``bucket = argmax(...embedding...)``
-    projection constraint leaked into the probe plan). Rebuilding the
-    frame from the checkpointed internal RDD drops originConstraints
-    while reusing the SAME materialized blocks — zero extra compute."""
+    projection constraint leaked into the probe plan). The statistics
+    let a small resident frame plan as a broadcast. The new
+    ``LogicalRDD`` reuses the SAME materialized blocks — zero extra
+    compute.
+
+    Store narrow: an eager checkpoint is coalesced (no shuffle) to
+    ``ceil(sizeInBytes / _BYTES_PER_SLICE)`` partitions when that is
+    fewer than it has; it is never widened. Every job over the resident
+    blocks (Lloyd rounds, band self-joins, verify joins, artifact
+    writes) then runs tasks worth their scheduling floor, while the
+    build itself kept its width (see :func:`spread_small_input`). The
+    size is the Catalyst estimate, not block-manager bytes: the in-memory
+    rows of array-heavy frames run an order of magnitude larger than
+    the estimate and would leave small resident frames wide. A lazy
+    checkpoint is not narrowed: coalescing it would run the build narrow
+    too."""
     ck = df.localCheckpoint(eager=eager)
     spark = ck.sparkSession
-    jdf = spark._jsparkSession.internalCreateDataFrame(  # type: ignore[attr-defined]
-        ck._jdf.queryExecution().toRdd(), ck._jdf.schema(), False
+    jvm = spark._jvm  # type: ignore[attr-defined]
+    lp = ck._jdf.queryExecution().analyzed()
+    stats = lp.stats()
+    bare = lp.copy(
+        lp.output(), lp.rdd(), lp.outputPartitioning(), lp.outputOrdering(),
+        lp.isStreaming(), lp.stream(), spark._jsparkSession,  # type: ignore[attr-defined]
+        jvm.scala.Option.apply(stats), jvm.scala.Option.empty(),
+    ).newInstance()
+    out = DataFrame(
+        jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, bare),  # type: ignore[attr-defined]
+        spark,
     )
-    return DataFrame(jdf, spark)
+    if eager:
+        k = max(1, math.ceil(stats.sizeInBytes() / _BYTES_PER_SLICE))
+        if k < lp.rdd().getNumPartitions():
+            return out.coalesce(k)
+    return out
 
 
 def _dlit(x: float) -> str:
@@ -423,7 +373,7 @@ def kmeans_fit(
     """
     v = df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
     if materialize:
-        v = checkpoint_index(spread_small_input(v, "id", _FIT_BYTES_PER_SLICE))
+        v = checkpoint_index(spread_small_input(v, "id"))
     cents = [
         [float(x) for x in r["v"]]
         for r in v.orderBy("id").limit(k).collect()
@@ -702,7 +652,7 @@ def pq_fit(
     # r13: one materialization feeds every Lloyd round (see kmeans_fit)
     v = df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
     if materialize:
-        v = checkpoint_index(spread_small_input(v, "id", _FIT_BYTES_PER_SLICE))
+        v = checkpoint_index(spread_small_input(v, "id"))
     seed_rows = v.orderBy("id").limit(k).collect()
     if not seed_rows:
         raise ValueError("pq_fit: empty corpus")
@@ -790,7 +740,6 @@ def ivfpq_fit_fused(
         spread_small_input(
             df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")),
             "id",
-            _FIT_BYTES_PER_SLICE,
         )
     )
     seed_rows = v.orderBy("id").limit(max(n_cells, k)).collect()

@@ -1134,30 +1134,16 @@ _LSH_INDEX_CACHE = store("lsh_index")
 
 def lsh_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
     from ..operators.dedup import banded_from_sig, minhash_signed_sets
-    from ..operators.similarity import checkpoint_index, narrow_resident
+    from ..operators.similarity import checkpoint_index
 
     def build() -> tuple:
         (docs,) = load(spark, sf_dir, "documents")
-        # r13 (guide §2.3/§2.4): the banded signatures and the hashed
-        # shingle sets used to be two independent corpus materializations
-        # (two tokenize passes, 3 md5 evaluations per shingle). One scan
-        # now computes (id, ws, sig) jointly — h1 derives from the verify
-        # digests, see minhash_signed_sets — and the band explode runs
-        # over the checkpointed blocks, not the corpus. banded and toks
-        # row values are bit-identical to the old build.
-        # r14 (guide §2.2): the resident index is then NARROWED to the
-        # width the corpus bytes justify (narrow_resident) — the build's
-        # hash work keeps the full-cores spread, but the cheap mine-side
-        # jobs (band join, verify join, pair publish) no longer pay a
-        # full-cores task floor per job; no-op at scale. This is what the
-        # driver's lsh_pairs_build regression (r13: 1.89 -> 3.30 s) was:
-        # the r12 index rode the scan's 1-split layout into the mine,
-        # the r13 spread-wide checkpoint made the mine 32-wide.
-        joint = narrow_resident(
-            checkpoint_index(
-                minhash_signed_sets(docs, "doc_id", "text", portable=True)
-            ),
-            docs,
+        # r13 (guide §2.3/§2.4): one scan computes (id, ws, sig) jointly
+        # — h1 derives from the verify digests, see minhash_signed_sets —
+        # and the band explode runs over the checkpointed blocks, not the
+        # corpus (one tokenize pass, 2 md5 evaluations per shingle).
+        joint = checkpoint_index(
+            minhash_signed_sets(docs, "doc_id", "text", portable=True)
         )
         banded = checkpoint_index(banded_from_sig(joint, portable=True))
         return banded, joint.select("id", "ws")
@@ -1781,23 +1767,14 @@ def boilerplate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # as its own detail line so both consumers measure warm marginal cost).
 def lsh_aug_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
     from ..operators.dedup import banded_from_sig, minhash_signed_sets
-    from ..operators.similarity import checkpoint_index, narrow_resident
+    from ..operators.similarity import checkpoint_index
 
     def build() -> tuple:
-        (docs,) = load(spark, sf_dir, "documents")
         aug = boilerplate_corpus(spark, sf_dir)
         # r13: one joint scan for banded + toks (the lsh_index_cached
-        # single-scan build — see minhash_signed_sets; values unchanged)
-        # r14: resident index narrowed to corpus-bytes width for the
-        # mine-side jobs (see lsh_index_cached), sized from the parquet
-        # side: the union would size to the same bytes, since its
-        # synthetic leg has no input files (the 150-template slice is
-        # noise next to the corpus either way).
-        joint = narrow_resident(
-            checkpoint_index(
-                minhash_signed_sets(aug, "doc_id", "text", portable=True)
-            ),
-            docs,
+        # single-scan build — see minhash_signed_sets)
+        joint = checkpoint_index(
+            minhash_signed_sets(aug, "doc_id", "text", portable=True)
         )
         banded = checkpoint_index(banded_from_sig(joint, portable=True))
         return banded, joint.select("id", "ws")

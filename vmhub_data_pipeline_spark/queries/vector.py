@@ -1720,21 +1720,11 @@ def opq_model_fit(e: DataFrame, dim: int = 64, m: int = 8, iters: int = 48) -> t
     corpus."""
     import math
 
-    from ..operators.similarity import (
-        _FIT_BYTES_PER_SLICE,
-        checkpoint_index,
-        dot_expr,
-        spread_small_input,
-    )
+    from ..operators.similarity import checkpoint_index, dot_expr, spread_small_input
 
     # r13: one materialization feeds the scatter pass AND the rotated-
     # energy scan below (see vector_pca_power; values bit-identical)
-    # r14 (VERDICT r13 task 6): byte-capped like the Lloyd fits — the
-    # 48 sequential power-iteration rounds pay the spread width as a
-    # per-round task floor, which dominated the one heavy scatter pass
-    # (driver: 1.66 -> 2.83 s; capped/unspread fit measured 1.79 s,
-    # model bit-identical — OPTIMIZATION_r14.md).
-    e = checkpoint_index(spread_small_input(e, "vec_id", _FIT_BYTES_PER_SLICE))
+    e = checkpoint_index(spread_small_input(e, "vec_id"))
     _mu, v1, _lam = _power_top_pc(e, dim, iters)
     # Householder direction w = normalize(v1 - e1): H = I - 2ww^T
     # maps v1 onto coordinate 0 (left-to-right accumulation, matching
@@ -1848,7 +1838,6 @@ def opq_index_cached(
     ``OPQMatrix`` + ``IndexPQ`` chain stores rotated vectors/codes), and
     the encoded codes. Returns (w, perm, books, rot_q, rot_c, codes)."""
     from ..operators.similarity import (
-        _FIT_BYTES_PER_SLICE,
         _pq_code_expr,
         checkpoint_index,
         pq_fit,
@@ -1858,14 +1847,11 @@ def opq_index_cached(
     def build() -> tuple:
         q, c = _pq_unit_corpus(spark, sf_dir)
         w, perm = opq_model_cached(spark, sf_dir, dim, m, iters)
-        # r13 opt: spread (byte-capped) BEFORE the one checkpoint; the
-        # sub-codebook fit then consumes the resident rows directly
-        # (materialize=False) instead of re-spreading and re-checkpointing
-        # the same corpus a second time (see pq_fit).
+        # r13 opt: the sub-codebook fit consumes the resident rows
+        # directly (materialize=False) instead of re-spreading and
+        # re-checkpointing the same corpus a second time (see pq_fit).
         rot_c = checkpoint_index(
-            spread_small_input(
-                _opq_transform(c, w, perm, dim), "vec_id", _FIT_BYTES_PER_SLICE
-            )
+            spread_small_input(_opq_transform(c, w, perm, dim), "vec_id")
         )
         rot_q = _opq_transform(q, w, perm, dim)  # batch-sized, stays lazy
         books = pq_fit(
@@ -3019,7 +3005,7 @@ def ivfpqr_index_cached(
         # residuals for the same reason; the frame is corpus-sized and
         # fit-scoped (the encode below reuses it, then only the codes
         # index stays resident).
-        from ..operators.similarity import _FIT_BYTES_PER_SLICE, spread_small_input
+        from ..operators.similarity import spread_small_input
 
         res = checkpoint_index(
             spread_small_input(
@@ -3033,7 +3019,6 @@ def ivfpqr_index_cached(
                     _residual_expr(F.col("__v"), cents, F.col("bucket")).alias("resid"),
                 ),
                 "corpus_id",
-                _FIT_BYTES_PER_SLICE,
             )
         )
         books = pq_fit(
