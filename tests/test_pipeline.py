@@ -216,8 +216,8 @@ def test_read_lake_partition_columns_are_strings(spark, tmp_path):
         ]
 
 
-def _group_stage_names(spark, group, fn):
-    """Run ``fn`` under job group ``group``; return (job count, stage names)."""
+def _group_stages(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return (job count, stage infos)."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group, False)
     try:
@@ -227,7 +227,13 @@ def _group_stage_names(spark, group, fn):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     st = sc.statusTracker()
     jobs = st.getJobIdsForGroup(group)
-    return len(jobs), [st.getStageInfo(s).name for j in jobs for s in st.getJobInfo(j).stageIds]
+    return len(jobs), [st.getStageInfo(s) for j in jobs for s in st.getJobInfo(j).stageIds]
+
+
+def _group_stage_names(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return (job count, stage names)."""
+    n_jobs, stages = _group_stages(spark, group, fn)
+    return n_jobs, [s.name for s in stages]
 
 
 def test_refresh_incremental_declared_schema_runs_no_inference(spark, tmp_path):
@@ -278,6 +284,65 @@ def test_refresh_incremental_declared_schema_runs_no_inference(spark, tmp_path):
     assert declared.dtypes == inferred.dtypes
     assert sorted(declared.collect()) == sorted(inferred.collect())
     assert declared.count() == 6
+
+
+def test_refresh_incremental_cost_does_not_grow_with_lake_age(spark, tmp_path):
+    """The refresh lists the kept ``ds`` directories on the driver: a lake
+    of 40 days (past the 32-directory parallel-listing threshold) costs the
+    same jobs and tasks as one of 4, and gives the same warehouse rows."""
+    from datetime import date, timedelta
+
+    from vmhub_data_pipeline_spark.pipeline import refresh_incremental
+
+    schema = compile_schema(
+        [
+            {"name": "id", "type": "INTEGER", "mode": "REQUIRED"},
+            {"name": "name", "type": "STRING"},
+            {"name": "amount", "type": "FLOAT"},
+            {"name": "ingestion_timestamp", "type": "STRING"},
+        ]
+    )
+    day = lambda i: (date(2024, 1, 1) + timedelta(days=i)).isoformat()  # noqa: E731
+    kept = [day(40), day(41)]
+
+    def refresh(n_days):
+        layout = LakeLayout(str(tmp_path / f"lake{n_days}"))
+        old_days = [day(40 - n_days + i) for i in range(n_days - 2)]
+        write_lake(  # one file per old day
+            spark.range(len(old_days)).select(
+                F.col("id").cast("int").alias("id"),
+                F.lit("old").alias("name"),
+                F.lit("2023-12-31T00:00:00Z").alias("ingestion_timestamp"),
+                F.lit("12345678000190").alias("cnpj"),
+                F.lit("vendas").alias("endpoint"),
+                F.array(*map(F.lit, old_days))[F.col("id").cast("int")].alias("ds"),
+            ).coalesce(1),
+            layout,
+        )
+        for ds in kept:  # same files in both lakes
+            write_lake(_records(spark, ds=ds, ts=f"{ds}T00:00:00Z"), layout)
+        tbl = str(tmp_path / f"warehouse{n_days}")
+        n_jobs, stages = _group_stages(
+            spark, f"refresh-{n_days}-days",
+            lambda: refresh_incremental(
+                spark, layout, tbl, since_ds=kept[0], schema=schema, dedup_keys=["id"],
+            ),
+        )
+        rows = sorted(tuple(r) for r in spark.read.parquet(tbl).collect())
+        return n_jobs, sum(s.numTasks for s in stages), [s.name for s in stages], rows
+
+    young, aged = refresh(4), refresh(40)
+    assert not any(n.startswith("json at") for n in aged[2]), aged[2]
+    assert aged[:2] == young[:2]
+    assert aged[3] == young[3] and len(young[3]) == 6  # ids repeat across days
+
+    # nothing kept: nothing written
+    empty_tbl = tmp_path / "warehouse_none"
+    refresh_incremental(
+        spark, LakeLayout(str(tmp_path / "lake4")), str(empty_tbl), since_ds=day(99),
+        schema=schema,
+    )
+    assert not empty_tbl.exists()
 
 
 def test_compaction_keeps_lines_byte_for_byte(spark, tmp_path):

@@ -242,29 +242,105 @@ def test_distributed_fetch_stripes_pages_and_threads_dates(spark):
     assert pages == {0, 1, 2}
 
 
-@pytest.mark.parametrize("tasks_per_date", [2, 4])  # 4 and 8 specs
-def test_distributed_fetch_gives_each_task_one_spec(spark, tasks_per_date):
-    """Every fetch task receives exactly one (date, slot) spec. A task
-    holding two would fetch both slices one after the other."""
+@pytest.mark.parametrize("tasks_per_date", [2, 4])
+def test_distributed_fetch_runs_one_task_per_date(spark, tasks_per_date):
+    """Each date is one task whose stripes run at the same time: every
+    stripe's transport waits at its first call until all stripes of its
+    date are in flight, which only threads of one task can satisfy. All
+    stripes of a date share one lineage instant."""
+    import threading
+
+    import pyspark.sql.functions as F
+
     cfg = EndpointConfig("vendas", page_size=10, requires_date_range=True)
-    dates = ["2024-01-01", "2024-01-02"]
-    records = [{"id": i} for i in range(10 * tasks_per_date)]  # a page per slot
+    dates = ["2024-01-01", "2024-01-02", "2024-01-03"]
+    records = [{"id": i} for i in range(10 * tasks_per_date + 5)]  # a page per stripe, and then some
 
-    class PartitionRecordingFactory:
+    class BarrierFactory:
+        """One barrier per task: the factory is unpickled once per task."""
+
+        def __init__(self, parties):
+            self.parties = parties
+            self.barrier = threading.Barrier(parties, timeout=30)
+
+        def __getstate__(self):
+            return {"parties": self.parties}
+
+        def __setstate__(self, state):
+            self.__init__(state["parties"])
+
         def __call__(self, date_str=None):
-            from pyspark import TaskContext
+            api = MockVMHubAPI({"vendas": records})
+            waited = []
 
-            pid = TaskContext.get().partitionId()
-            return MockVMHubAPI({"vendas": [dict(r, task=pid) for r in records]}).get
+            def transport(endpoint, page, page_size):
+                if not waited:
+                    try:
+                        self.barrier.wait()
+                        waited.append(True)
+                    except threading.BrokenBarrierError:
+                        waited.append(False)
+                return [dict(r, together=waited[0]) for r in api.get(endpoint, page, page_size)]
 
-    rows = fetch_endpoint_distributed(
-        spark, cfg, PartitionRecordingFactory(), dates=dates,
-        tasks_per_date=tasks_per_date,
+            return transport
+
+    rows = (
+        fetch_endpoint_distributed(
+            spark, cfg, BarrierFactory(tasks_per_date), dates=dates,
+            tasks_per_date=tasks_per_date,
+        )
+        .withColumn("pid", F.spark_partition_id())
+        .collect()
+    )
+    recs = [(r["date"], r["pid"], json.loads(r["record"])) for r in rows]
+    assert all(rec["together"] for _, _, rec in recs)
+    got = sorted((d, rec["id"]) for d, _, rec in recs)
+    assert got == sorted((d, r["id"]) for d in dates for r in records)  # exactly once
+    pids = {d: {pid for dd, pid, _ in recs if dd == d} for d in dates}
+    assert all(len(p) == 1 for p in pids.values()), pids
+    assert len(set().union(*pids.values())) == len(dates), pids
+    instants = {d: {rec["ingestion_timestamp"] for dd, _, rec in recs if dd == d} for d in dates}
+    assert all(len(ts) == 1 for ts in instants.values()), instants
+    # rows come out in stripe order within each date
+    for d in dates:
+        pages = [r["page"] for r in rows if r["date"] == d]
+        slots = [p % tasks_per_date for p in pages]
+        assert slots == sorted(slots), pages
+
+
+def test_datasource_and_distributed_fetch_land_the_same_records(spark):
+    """The ``vmhub`` format and ``fetch_endpoint_distributed`` share one
+    stripe routine: the same pages give the same records, lineage envelope
+    included."""
+    from vmhub_data_pipeline_spark.sources.vmhub_datasource import VMHubDataSource
+
+    dates = ["2024-01-01", "2024-01-02"]
+    spark.dataSource.register(VMHubDataSource)
+    via_format = (
+        spark.read.format("vmhub")
+        .option("endpoint", "clientes")
+        .option("page_size", "10")
+        .option("dates", ",".join(dates))
+        .option("records_json", json.dumps(RECORDS))
+        .load()
+        .collect()
+    )
+    via_fetch = fetch_endpoint_distributed(
+        spark, EndpointConfig("clientes", page_size=10),
+        lambda: MockVMHubAPI({"clientes": RECORDS}).get, dates=dates,
     ).collect()
-    tasks_by_spec: dict[tuple[str, int], set[int]] = {}
-    for r in rows:
-        spec = (r["date"], r["page"] % tasks_per_date)  # slot s fetches pages s, s+N, ...
-        tasks_by_spec.setdefault(spec, set()).add(json.loads(r["record"])["task"])
-    assert len(tasks_by_spec) == len(dates) * tasks_per_date
-    assert all(len(tasks) == 1 for tasks in tasks_by_spec.values())
-    assert len(set().union(*tasks_by_spec.values())) == len(tasks_by_spec), tasks_by_spec
+
+    def landed(rows):
+        out = []
+        for r in rows:
+            rec = json.loads(r["record"])
+            assert rec.pop("source_system") == "VMHUB"
+            assert rec.pop("ingestion_timestamp")
+            out.append((r["date"], r["page"], json.dumps(rec, sort_keys=True)))
+        return sorted(out)
+
+    assert {tuple(sorted(json.loads(r["record"]))) for r in via_format} == {
+        tuple(sorted(json.loads(r["record"]))) for r in via_fetch
+    }
+    assert landed(via_format) == landed(via_fetch)
+    assert len(via_fetch) == len(dates) * len(RECORDS)

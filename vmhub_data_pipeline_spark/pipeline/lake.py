@@ -19,6 +19,8 @@ an outage.
 from __future__ import annotations
 
 import logging
+import os
+from collections.abc import Callable
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
@@ -51,11 +53,37 @@ def write_lake(df: DataFrame, layout: LakeLayout, mode: str = "append") -> None:
     df.write.mode(mode).partitionBy(*layout.partition_cols).json(layout.root)
 
 
+def partition_values(parent: str, col: str) -> list[str]:
+    """The values of the ``col=value`` directories directly under
+    ``parent`` (a local-filesystem path), or [] when ``parent`` is missing.
+    Only names that start with ``col=`` count, so hidden ('.'/'_'-prefixed)
+    names such as compaction's ``.ds=...__compacting`` staging trees are
+    skipped, matching Spark's own listing."""
+    prefix = f"{col}="
+    try:
+        names = os.listdir(parent)
+    except (FileNotFoundError, NotADirectoryError):
+        return []
+    return [n[len(prefix):] for n in names if n.startswith(prefix)]
+
+
+def partition_dirs(layout: LakeLayout, keep: Callable[[str, str], bool]) -> list[str]:
+    """The leaf partition directories whose every ``(column, value)`` passes
+    ``keep``, found by listing one directory level per partition column on
+    the driver — the reference's per-prefix blob listing
+    (src/utils/gcs_helper.py:177-201), with no Spark job."""
+    dirs = [layout.root]
+    for col in layout.partition_cols:
+        dirs = [f"{d}/{col}={v}" for d in dirs for v in partition_values(d, col) if keep(col, v)]
+    return dirs
+
+
 def read_lake(
     spark: SparkSession,
     layout: LakeLayout,
     schema: T.StructType | None = None,
     path_glob: str | None = None,
+    paths: list[str] | None = None,
     **predicates: str,
 ) -> DataFrame:
     """Read the NDJSON lake with an explicit schema (PERMISSIVE mode: bad
@@ -70,17 +98,27 @@ def read_lake(
     reference's fnmatch-on-blob-name filter (S7,
     src/utils/gcs_helper.py:139-175) without listing a single extra file.
 
+    ``paths`` reads only those partition directories (see
+    ``partition_dirs``), with the partition columns still taken from the
+    layout. Spark lists them on the driver; listing the whole root starts
+    a distributed listing job once it holds more partition directories
+    than ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32).
+
     Undeclared partition columns read as strings on both paths. Without a
-    ``schema`` the payload schema is inferred (one job over every file)
+    ``schema`` the payload schema is inferred (one job over every file read)
     and the partition columns' inferred types are dropped: Spark would
     read ``cnpj=01234567000189`` as the bigint 1234567000189.
     """
     reader = spark.read.option("mode", "PERMISSIVE")
     if path_glob is not None:
         reader = reader.option("pathGlobFilter", path_glob)
+    source: str | list[str] = layout.root
+    if paths is not None:
+        reader = reader.option("basePath", layout.root)
+        source = paths
     part_cols = layout.partition_cols
     if schema is None:
-        inferred = reader.json(layout.root).schema
+        inferred = reader.json(source).schema
         schema = T.StructType([f for f in inferred.fields if f.name not in part_cols])
     declared = {f.name for f in schema.fields}
     df = reader.schema(
@@ -88,7 +126,7 @@ def read_lake(
             list(schema.fields)
             + [T.StructField(c, T.StringType()) for c in part_cols if c not in declared]
         )
-    ).json(layout.root)
+    ).json(source)
     for col, val in predicates.items():
         df = df.filter(F.col(col) == val)
     return df

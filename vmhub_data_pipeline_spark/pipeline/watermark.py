@@ -17,7 +17,7 @@ from datetime import date, timedelta
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
-from .lake import LakeLayout
+from .lake import LakeLayout, partition_dirs, partition_values
 
 COLD_START_DAYS = 730  # reference src/main.py:204: 2 * 365
 
@@ -33,24 +33,17 @@ def lake_watermark(
     inference plus a row scan just to fold partition values the directory
     names already carry — the lake is NDJSON, which cannot column-prune.)
     Hidden ('.'/'_'-prefixed) names are skipped, matching Spark's own
-    listing; invalid ds values are skipped (reference's warn-and-skip,
-    src/utils/gcs_helper.py:213-218). Local-filesystem paths, like the
-    rest of the lake layer; an object-store lake would route the same
-    listing through the Hadoop FileSystem API.
+    listing (``partition_values``); invalid ds values are skipped
+    (reference's warn-and-skip, src/utils/gcs_helper.py:213-218).
+    Local-filesystem paths, like the rest of the lake layer; an
+    object-store lake would route the same listing through the Hadoop
+    FileSystem API.
     """
-    import os
-
     endpoint_dir = f"{layout.root}/cnpj={cnpj}/endpoint={endpoint}"
-    try:
-        names = os.listdir(endpoint_dir)
-    except (FileNotFoundError, NotADirectoryError):
-        return None
     best: date | None = None
-    for name in names:
-        if not name.startswith("ds=") or name.startswith((".", "_")):
-            continue
+    for value in partition_values(endpoint_dir, "ds"):
         try:
-            d = date.fromisoformat(name[3:])
+            d = date.fromisoformat(value)
         except ValueError:
             continue  # warn-and-skip semantics: malformed ds dirs ignored
         if best is None or d > best:
@@ -94,16 +87,19 @@ def refresh_incremental(
     (src/utils/bigquery_helper.py:120, src/main.py:254-255), this touches
     O(new days) regardless of table age.
 
-    That bound holds only when ``schema=`` is declared: the lake is then
-    read with it, and no job runs before the ``ds`` filter prunes. Without
-    one, Spark first infers the JSON schema from every file in the lake,
-    a job that grows with the lake's age.
+    The kept ``ds`` directories are listed on the driver and only they are
+    read, so no listing job runs however many days the lake holds; with
+    none kept, nothing is written. The bound also needs ``schema=``: the
+    lake is then read with it, and no job runs before the ``ds`` filter
+    prunes. Without one, Spark first infers the JSON schema from the kept
+    files.
     """
-    import pyspark.sql.functions as F
-
     from .lake import read_lake, refresh_table
 
-    lake_df = read_lake(spark, layout, refresh_kwargs.get("schema")).filter(
+    kept = partition_dirs(layout, lambda col, value: col != "ds" or value >= since_ds)
+    if not kept:
+        return
+    lake_df = read_lake(spark, layout, refresh_kwargs.get("schema"), paths=kept).filter(
         F.col("ds") >= since_ds
     )
     refresh_table(lake_df, table_path, **refresh_kwargs)

@@ -16,14 +16,15 @@ Re-expresses the reference's VMHub client semantics Spark-first:
 * skip-and-continue — a failed page/day never aborts the run
   (src/main.py:172-178, :231-251).
 
-Execution model: the DRIVER never fetches data. It enumerates (date, page)
-task specs as a DataFrame; ``mapInPandas`` workers execute the fetch loop
-with the full retry taxonomy, emitting one JSON string per record. At
-cluster scale that is N executors fetching concurrently with Spark's own
-task retry on top (spark.task.maxFailures) — replacing the reference's
-2-thread ThreadPoolExecutor (src/main.py:330) with real horizontal
-parallelism. The REST source's statefulness (retry budget, EOF sentinel)
-stays in worker code, outside Catalyst (SURVEY §7 decision 4).
+Execution model: the DRIVER never fetches data. It enumerates the dates
+as a DataFrame, one task per date; ``mapInPandas`` workers execute the
+fetch loop with the full retry taxonomy, emitting one JSON string per
+record. At cluster scale the dates spread over the executors with Spark's
+own task retry on top (spark.task.maxFailures), and within a task the
+date's page stripes run on a thread pool, as the reference's 2-thread
+ThreadPoolExecutor does (src/main.py:330). The REST source's statefulness
+(retry budget, EOF sentinel) stays in worker code, outside Catalyst
+(SURVEY §7 decision 4).
 
 MockVMHubAPI stands in for the network (no live endpoints in this
 environment); its failure injection reproduces the taxonomy above so tests
@@ -36,6 +37,7 @@ from __future__ import annotations
 import json
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
+from datetime import datetime, timezone
 
 
 class FatalHTTPError(Exception):
@@ -211,6 +213,31 @@ class RestIngestor:
             yield rows
 
 
+def lineage_instant() -> str:
+    """One ISO-8601Z ingest instant (reference src/main.py:35). The same
+    rule as ``pipeline.lineage.batch_instant``, defined here so the code
+    shipped to fetch workers imports nothing from the rest of the package."""
+    return datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ")
+
+
+def fetch_stripe(
+    ing: RestIngestor, date: str, instant: str, slot: int = 0, n_slots: int = 1
+) -> list[tuple[str, int, str]]:
+    """One stripe of one date as ``(date, page, record)`` rows: ``fetch_all``
+    over pages slot, slot+n_slots, ..., each record wrapped in the lineage
+    envelope the reference adds (src/main.py:33-40) and serialized with
+    sorted keys. Shared by the ``mapInPandas`` fetch and the ``vmhub`` data
+    source, so both land the same records."""
+    rows: list[tuple[str, int, str]] = []
+    pages = ing.fetch_all(start_page=slot, stride=n_slots)
+    for stripe_no, page_rows in enumerate(pages):
+        page_no = slot + stripe_no * n_slots
+        for rec in page_rows:
+            rec = {**rec, "ingestion_timestamp": instant, "source_system": "VMHUB"}
+            rows.append((date, page_no, json.dumps(rec, sort_keys=True)))
+    return rows
+
+
 def fetch_endpoint_distributed(
     spark,
     cfg: EndpointConfig,
@@ -218,34 +245,41 @@ def fetch_endpoint_distributed(
     dates: list[str] | None = None,
     tasks_per_date: int = 1,
 ):
-    """Distributed ingest: driver enumerates (date, worker-slot) task specs;
-    each Spark task runs the sequential fetch loop for its slice and emits
-    records as JSON strings (+ the lineage envelope fields the reference
-    adds per record, src/main.py:33-40).
+    """Distributed ingest: the driver enumerates the dates; each Spark task
+    fetches one date and emits its records as JSON strings (+ the lineage
+    envelope fields the reference adds per record, src/main.py:33-40).
 
     Returns a DataFrame[date string, page long, record string]. Callers
     parse ``record`` with an explicit schema (schema.spec.compile_schema +
     from_json) — same split as the reference's land-then-load.
 
-    ``transport_factory`` must be picklable and is invoked executor-side,
-    once per (date, slot) task; for a live API it builds an HTTP session
-    there — credentials resolve driver-side and travel as task data, never
-    as executor state (reference's credential flow, src/main.py:301-310).
-    Factories that accept an optional date argument (http_transport_factory
-    does) are called with the task's date so each slice fetches ITS day's
-    range; zero-arg factories keep working for date-agnostic endpoints.
-
-    ``tasks_per_date`` stripes the page space: slot s of N fetches pages
-    s, s+N, s+2N, ... (see fetch_all), so one hot date parallelizes across
-    N tasks instead of one sequential loop — valid under the
+    ``tasks_per_date`` stripes a date's page space: stripe s of N fetches
+    pages s, s+N, s+2N, ... (see fetch_all) — valid under the
     empty-page-EOF protocol since every page past the true end is empty.
+    The N stripes of a date run as N threads of the date's one task, as the
+    reference fetches on a thread pool (src/main.py:330): the fetches wait
+    on the network, so threads overlap those waits as well as separate
+    tasks would, and every Python task costs a fixed worker start-up
+    (a ``pyspark.zip`` re-import) before any fetch runs. Dates still spread
+    across executors, one task each, like the ``vmhub`` data source's one
+    partition per date. Rows come out in stripe order, and all stripes of
+    a date share one ``ingestion_timestamp``.
 
-    The spec frame comes from ``spark.range`` with one partition per spec,
-    so each (date, slot) is exactly one task and the frame is built in the
-    JVM. A ``createDataFrame(list).repartition(n)`` frame would be a Python
-    RDD: an extra job of Python tasks per call just to re-pickle the specs,
-    and a round-robin deal that gives some tasks two specs (fetched one
-    after the other) and others none.
+    ``transport_factory`` must be picklable and is invoked executor-side,
+    once per stripe on the stripe's thread (so calls may overlap), so no
+    client state is shared between threads; for a live API it builds an
+    HTTP session there — credentials resolve driver-side and travel as
+    task data, never as executor state (reference's credential flow,
+    src/main.py:301-310). Factories that accept an optional date argument
+    (http_transport_factory does) are called with the task's date so each
+    stripe fetches ITS day's range; zero-arg factories keep working for
+    date-agnostic endpoints.
+
+    The date frame comes from ``spark.range`` with one partition per date,
+    built in the JVM. A ``createDataFrame(list).repartition(n)`` frame
+    would be a Python RDD: an extra job of Python tasks per call just to
+    re-pickle the dates, and a round-robin deal that gives some tasks two
+    dates (fetched one after the other) and others none.
     """
     import pandas as pd
     import pyspark.sql.functions as F
@@ -260,12 +294,10 @@ def fetch_endpoint_distributed(
 
     n_slots = max(1, tasks_per_date)
     spec_dates = dates or ["__nodate__"]
-    n_specs = len(spec_dates) * n_slots
-    # spec i is (date i // n_slots, slot i % n_slots), alone in partition i
-    spec_id = F.col("id")
-    specs = spark.range(0, n_specs, 1, n_specs).select(
-        F.array(*map(F.lit, spec_dates))[(spec_id / n_slots).cast("int")].alias("date"),
-        (spec_id % n_slots).cast("int").alias("slot"),
+    n_dates = len(spec_dates)
+    # date i alone in partition i
+    specs = spark.range(0, n_dates, 1, n_dates).select(
+        F.array(*map(F.lit, spec_dates))[F.col("id").cast("int")].alias("date")
     )
 
     import dataclasses
@@ -273,12 +305,12 @@ def fetch_endpoint_distributed(
     cfg_dict = dataclasses.asdict(cfg)  # every field survives into tasks
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from datetime import datetime, timezone
+        from concurrent.futures import ThreadPoolExecutor
 
         worker_cfg = EndpointConfig(**cfg_dict)
 
         def make_ingestor(date_str: str) -> RestIngestor:
-            # date-aware factories get the task's date (each slice fetches
+            # date-aware factories get the task's date (each stripe fetches
             # its own day's range); zero-arg factories stay supported
             try:
                 transport = transport_factory(
@@ -288,24 +320,15 @@ def fetch_endpoint_distributed(
                 transport = transport_factory()
             return RestIngestor(worker_cfg, transport)
 
-        def batch_instant() -> str:
-            # one ISO instant per batch (reference src/main.py:35); inlined
-            # so the worker closure has no cross-module imports
-            return datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ")
-
         for pdf in batches:
-            for d, slot in zip(pdf["date"], pdf["slot"]):
-                ing = make_ingestor(d)
-                rows_out: list[tuple[str, int, str]] = []
-                ts = batch_instant()
-                pages = ing.fetch_all(start_page=int(slot), stride=n_slots)
-                for stripe_no, page_rows in enumerate(pages):
-                    page_no = int(slot) + stripe_no * n_slots
-                    for rec in page_rows:
-                        rec = dict(rec)
-                        rec["ingestion_timestamp"] = ts
-                        rec["source_system"] = "VMHUB"
-                        rows_out.append((d, page_no, json.dumps(rec, sort_keys=True)))
+            for d in pdf["date"]:
+                instant = lineage_instant()
+
+                def stripe(slot: int) -> list[tuple[str, int, str]]:
+                    return fetch_stripe(make_ingestor(d), d, instant, slot, n_slots)
+
+                with ThreadPoolExecutor(n_slots) as pool:
+                    rows_out = [r for rows in pool.map(stripe, range(n_slots)) for r in rows]
                 if rows_out:
                     yield pd.DataFrame(rows_out, columns=["date", "page", "record"])
 

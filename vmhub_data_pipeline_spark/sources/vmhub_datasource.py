@@ -19,10 +19,11 @@ pushdown-by-construction, matching how the reference pushes
 dataInicio/dataTermino into the HTTP query string
 (reference src/api/vmhub_client.py:126-131).
 
-The page loop inside each task is RestIngestor — the same retry/EOF/bisect
-taxonomy as the mapInPandas path (rest.py); this class only adds the
-catalog-integrated planning shell. A live HTTP backend replaces
-``_transport`` without touching the planning logic.
+Each task runs ``fetch_stripe`` — the same RestIngestor retry/EOF/bisect
+loop, lineage envelope and record serialization as the mapInPandas path
+(rest.py); this class only adds the catalog-integrated planning shell. A
+live HTTP backend replaces ``_transport`` without touching the planning
+logic.
 """
 
 from __future__ import annotations
@@ -43,6 +44,8 @@ from .rest import (
     MockVMHubAPI,
     NoMoreDataError,
     RestIngestor,
+    fetch_stripe,
+    lineage_instant,
 )
 
 
@@ -95,9 +98,7 @@ class VMHubReader(DataSourceReader):
         )
         api = MockVMHubAPI({self.endpoint: self.records})
         ing = RestIngestor(cfg, api.get)
-        for page_no, rows in enumerate(ing.fetch_all()):
-            for rec in rows:
-                yield (partition.date, page_no, json.dumps(rec, sort_keys=True))
+        yield from fetch_stripe(ing, partition.date, lineage_instant())
 
 
 class VMHubSimpleStreamReader(SimpleDataSourceStreamReader):
