@@ -176,6 +176,48 @@ def test_invalidate_lsh_index_drops_everything_built_from_it(
     assert sorted(tuple(r) for r in new_probe.collect()) == old_rows
 
 
+@pytest.mark.slow
+@pytest.mark.parametrize("family", ["lsh", "ivfpq"])
+def test_invalidating_persisted_index_drops_its_growth(spark, sf_dir, family):
+    """Invalidating a family's persisted artifact drops its growth-dir
+    entry, removes that directory from disk, and drops every grown probe
+    compiled over it; the next growth call re-seeds a new growth dir from
+    the artifact and serves the same rows."""
+    import os
+
+    from vmhub_data_pipeline_spark.queries import streaming_queries as sq
+    from vmhub_data_pipeline_spark.queries.dedup import LSH
+    from vmhub_data_pipeline_spark.queries.vector import IVFPQ
+
+    grow, growth_dir, spec = {
+        "lsh": (sq.streaming_lsh_index_growth, sq._lsh_growth_dir, LSH),
+        "ivfpq": (sq.streaming_index_growth, sq._ivfpq_growth_dir, IVFPQ),
+    }[family]
+    app = spark.sparkContext.applicationId
+
+    def probes_over(grown: str) -> list:
+        return [k for k in store("grown_probe") if k[:3] == (app, sf_dir, grown)]
+
+    ref = sorted(tuple(r) for r in grow(spark, sf_dir).collect())
+    old = growth_dir(spark, sf_dir)
+    assert (app, sf_dir) in store(f"{family}_growth_dir")
+    assert probes_over(old)
+
+    invalidate(f"{family}_persisted")
+    assert (app, sf_dir) not in store(f"{family}_growth_dir")
+    assert not os.path.exists(old)
+    assert not probes_over(old)
+
+    assert sorted(tuple(r) for r in grow(spark, sf_dir).collect()) == ref
+    new = growth_dir(spark, sf_dir)
+    assert new != old and probes_over(new)
+    for leg in spec.legs:
+        assert os.path.isdir(os.path.join(new, leg, "__sb=-1")), leg
+    # a fresh checkpoint: every arrival batch ran again on the new seed
+    commits = os.listdir(os.path.join(new, "_ckpt", "commits"))
+    assert {"0", "1"} <= {c for c in commits if not c.startswith(".")}
+
+
 def test_invalidating_drift_preamble_drops_cents_cum_handle(spark, sf_dir):
     """The cents-cum handle and the PSI binner are recorded as built from
     the preamble checkpoint, so invalidating the preamble drops both."""

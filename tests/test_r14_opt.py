@@ -189,3 +189,38 @@ def test_partition_width_is_chosen_in_one_place():
     offenders = [f for f in found if f not in WIDTH_EXEMPT]
     assert not offenders, offenders
     assert WIDTH_EXEMPT <= set(found), "stale exemption"
+
+
+# Calls that publish to the artifact store outside operators/artifacts.py
+# and operators/index_lifecycle.py, each with its reason.
+PUBLISH_EXEMPT = {
+    # the verified LSH pair set is a table derived from the resident index,
+    # published once per mining config; it is never grown or mounted cold
+    ("queries/dedup.py", "published"),
+}
+
+
+def test_index_lifecycle_is_written_once():
+    """No catalog module runs a foreachBatch stream of its own, and only
+    the artifact store and the index lifecycle publish artifacts, so the
+    persist -> grow -> publish -> mount chain cannot regrow a copy."""
+    lifecycle = {"operators/artifacts.py", "operators/index_lifecycle.py"}
+    streams, publishers = [], []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "foreachBatch"
+                and rel.startswith("queries/")
+            ):
+                streams.append(rel)
+            if isinstance(node, ast.Call) and rel not in lifecycle:
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name in ("publish_artifact", "published"):
+                    publishers.append((rel, name))
+    assert not streams, streams
+    offenders = [p for p in publishers if p not in PUBLISH_EXEMPT]
+    assert not offenders, offenders
+    assert PUBLISH_EXEMPT <= set(publishers), "stale exemption"

@@ -208,6 +208,11 @@ def test_streaming_datasource_pages_exactly_once(spark, tmp_path):
     assert got == list(range(37))  # every record exactly once
     pages = {r["page"] for r in out}
     assert pages == set(range(8))  # 37 records / page_size 5 -> pages 0..7
+    # the lineage envelope the batch sources add rides every streamed record
+    for r in out:
+        rec = _json.loads(r["record"])
+        assert rec["source_system"] == "VMHUB", rec
+        assert rec["ingestion_timestamp"], rec
 
 
 def test_distributed_fetch_stripes_pages_and_threads_dates(spark):

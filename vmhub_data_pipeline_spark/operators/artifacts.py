@@ -23,6 +23,11 @@ process mounts) needs three properties this module provides:
   wiping the shared one (ADVICE r11: a root wipe would destroy every
   published artifact for every corpus and yank files out from under a
   concurrently serving process).
+
+The serving indexes (LSH dedup, IVF-PQ) publish here through one
+lifecycle, ``operators/index_lifecycle.py``: the fitted, grown and
+maintained stages of every family are written, read and mounted by the
+same steps.
 """
 
 from __future__ import annotations

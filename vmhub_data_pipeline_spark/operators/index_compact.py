@@ -1,14 +1,14 @@
 """Grown-index compaction — the small-files problem for MAINTAINED
 serving tables (r13, VERDICT r12 task 2).
 
-The streamed index-growth sinks (``streaming_index_growth`` /
-``streaming_lsh_index_growth``) are crash-idempotent by construction:
-every micro-batch overwrites its own ``__sb=<batch_id>`` partition, so a
-replayed batch replaces its own rows instead of double-appending. The
-cost of that contract is one partition directory per micro-batch — at
-deployment cadence (thousands of appends between refits) the serving
-table becomes a small-files scan, the exact failure mode
-``pipeline/compact.py`` handles for the lake. This module is the OPTIMIZE
+A serving index's growth dir (``index_lifecycle.grow``, one stream for
+every index family) is crash-idempotent by construction: every
+micro-batch overwrites its own ``__sb=<batch_id>`` partition of every
+leg, so a replayed batch replaces its own rows instead of
+double-appending. The cost of that contract is one partition directory
+per micro-batch — at deployment cadence (thousands of appends between
+refits) the serving table becomes a small-files scan, the exact failure
+mode ``pipeline/compact.py`` handles for the lake. This module is the OPTIMIZE
 step for the index store: fold every committed ``__sb=*`` partition of a
 leg back into the canonical base partition (``__sb=-1``, the layout the
 growth dir is seeded with), preserving rows exactly and re-seeding the
@@ -16,8 +16,8 @@ directory so the stream keeps appending on top.
 
 Safety contract, in order:
 
-* **committed-only**: compaction runs between drains (the growth entries
-  call it only after ``availableNow`` termination). Batches recorded in
+* **committed-only**: compaction runs between drains (``grow`` returns
+  only after ``availableNow`` termination). Batches recorded in
   the stream's checkpoint never replay under that checkpoint, so folding
   them into the base can't collide with a future ``__sb=k`` overwrite;
   an IN-FLIGHT sink must not be compacted (the caller owns that
@@ -84,39 +84,32 @@ def compact_grown_index(
     for leg in legs:
         leg_dir = os.path.join(grown_dir, leg)
         parts, files, total = _leg_stats(leg_dir)
-        if parts < min_partitions_to_compact:
-            out.append(
-                {
-                    "leg": leg, "compacted": False,
-                    "partitions_before": parts, "partitions_after": parts,
-                    "files_before": files, "files_after": files,
-                    "rows": spark.read.parquet(leg_dir).count(),
-                }
+        compacted = parts >= min_partitions_to_compact
+        parts2, files2 = parts, files
+        if compacted:
+            df = spark.read.parquet(leg_dir)
+            cols = [F.col(f.name) for f in df.schema.fields if f.name != "__sb"]
+            n_out = max(1, math.ceil(total / target_file_bytes))
+            staging = os.path.join(grown_dir, f".{leg}__compacting")
+            shutil.rmtree(staging, ignore_errors=True)  # prior-crash leftover
+            (
+                df.select(*cols)
+                .coalesce(n_out)
+                .write.mode("overwrite")
+                .parquet(os.path.join(staging, "__sb=-1"))
             )
-            continue
-        df = spark.read.parquet(leg_dir)
-        cols = [F.col(f.name) for f in df.schema.fields if f.name != "__sb"]
-        n_out = max(1, math.ceil(total / target_file_bytes))
-        staging = os.path.join(grown_dir, f".{leg}__compacting")
-        shutil.rmtree(staging, ignore_errors=True)  # prior-crash leftover
-        (
-            df.select(*cols)
-            .coalesce(n_out)
-            .write.mode("overwrite")
-            .parquet(os.path.join(staging, "__sb=-1"))
-        )
-        old = os.path.join(grown_dir, f".{leg}__old")
-        shutil.rmtree(old, ignore_errors=True)  # prior-crash leftover
-        shutil.move(leg_dir, old)  # old data still intact
-        shutil.move(staging, leg_dir)  # new data in place
-        shutil.rmtree(old)  # only now discard the old copy
-        # compiled plans over the leg must re-list (the growth entries'
-        # REFRESH-after-commit contract applies to compaction too)
-        spark.catalog.refreshByPath(leg_dir)
-        parts2, files2, _ = _leg_stats(leg_dir)
+            old = os.path.join(grown_dir, f".{leg}__old")
+            shutil.rmtree(old, ignore_errors=True)  # prior-crash leftover
+            shutil.move(leg_dir, old)  # old data still intact
+            shutil.move(staging, leg_dir)  # new data in place
+            shutil.rmtree(old)  # only now discard the old copy
+            # compiled plans over the leg must re-list (grow's
+            # REFRESH-after-commit contract applies to compaction too)
+            spark.catalog.refreshByPath(leg_dir)
+            parts2, files2, _ = _leg_stats(leg_dir)
         out.append(
             {
-                "leg": leg, "compacted": True,
+                "leg": leg, "compacted": compacted,
                 "partitions_before": parts, "partitions_after": parts2,
                 "files_before": files, "files_after": files2,
                 "rows": spark.read.parquet(leg_dir).count(),

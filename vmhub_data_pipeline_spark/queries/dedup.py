@@ -21,6 +21,7 @@ from ..operators.dedup import (
     simhash_neardup_pairs,
 )
 from ..operators.caching import get, store
+from ..operators.index_lifecycle import IndexSpec, artifact_dir, mount, mounted, persisted
 from ..tables import load
 from . import register
 
@@ -1270,66 +1271,94 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LSH_MODEL_PARAMS = ("minhash32", "bands8", "shingle3", "md5portable", "t13")
 
 
+def _lsh_write(spark: SparkSession, staging: str, index: tuple) -> None:
+    for leg, df in zip(LSH.legs, index):
+        df.write.mode("overwrite").parquet(f"{staging}/{leg}")
+
+
+def _lsh_read(spark: SparkSession, path: str) -> tuple:
+    return tuple(spark.read.parquet(f"{path}/{leg}") for leg in LSH.legs)
+
+
+def _lsh_seed(spark: SparkSession, sf_dir: str, base: str, grown: str) -> None:
+    """A growth dir starts from the FROZEN (pre-cut) slice of each leg;
+    the batch arrives through the stream."""
+    cut = _lsh_batch_cut(spark, sf_dir)
+    for leg in LSH.legs:
+        (
+            spark.read.parquet(f"{base}/{leg}")
+            .filter(F.col("id") < F.lit(cut))
+            .write.mode("overwrite")
+            .parquet(f"{grown}/{leg}/__sb=-1")
+        )
+
+
+def _lsh_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The document batch (doc_id >= cut, the catalog-wide
+    incremental-batch convention) as the raw (doc_id, text) rows an
+    ingest pipeline hands the index-maintenance stream. Text round-trips
+    exactly through Spark's JSON writer, so the streamed rows sign
+    identically to the batch path's."""
+    cut = _lsh_batch_cut(spark, sf_dir)
+    (docs,) = load(spark, sf_dir, "documents")
+    return docs.filter(F.col("doc_id") >= F.lit(cut)).select("doc_id", "text")
+
+
+def _lsh_encode(index: tuple, batch: DataFrame) -> dict:
+    """Sign one micro-batch with the operators the index was built with
+    (looked up per batch): signature expressions ride the batch scan."""
+    from ..operators.dedup import hashed_token_sets, minhash_banded
+
+    return {
+        "banded": minhash_banded(batch, "doc_id", "text", portable=True),
+        "toks": hashed_token_sets(batch, "doc_id", "text", 3),
+    }
+
+
+# The maintained dedup index as a serving-index family: banded/ holds the
+# band-signature rows, toks/ the hashed shingle sets. Both are plain
+# BIGINT/STRING/array<string> columns, so parquet round-trips them
+# losslessly and a mounted index is row-identical to the resident one.
+LSH = IndexSpec(
+    family="lsh",
+    tables=("documents",),
+    params=_LSH_MODEL_PARAMS,
+    legs=("banded", "toks"),
+    resident=lambda spark, sf_dir: lsh_index_cached(spark, sf_dir),
+    write=_lsh_write,
+    read=_lsh_read,
+    seed=_lsh_seed,
+    arrivals=_lsh_arrivals,
+    arrivals_schema="doc_id BIGINT, text STRING",
+    encode_batch=_lsh_encode,
+)
+
+
 def lsh_artifact_dir(sf_dir: str) -> str:
-    """The stable, content-keyed path of the persisted dedup index — a
-    pure function of the documents files + model params (no session
-    state), so ANY process resolves the same artifact."""
-    from ..operators.artifacts import stable_artifact_dir
-
-    return stable_artifact_dir(
-        "lshidx", sf_dir, _LSH_MODEL_PARAMS, tables=("documents",)
-    )
+    return artifact_dir(LSH, sf_dir)
 
 
-def _lsh_persisted_dir(
-    spark: SparkSession, sf_dir: str, artifact_dir: str | None = None
-) -> str:
-    """The persisted dedup index's STABLE artifact dir (banded/ the
-    band-signature rows, toks/ the hashed shingle sets), published from
-    the resident index if absent — the durable handoff between the
-    offline signature job and the daily probe job, mirroring the ANN
-    tier's ivfpq_index_persisted artifact. Content-keyed and durable
-    since r11 (operators/artifacts.py): a fresh session over the same
-    corpus+config mounts the same path instead of silently re-fitting."""
-    from ..operators.artifacts import published
-
-    def _build(staging: str) -> None:
-        banded, toks = lsh_index_cached(spark, sf_dir)
-        banded.write.mode("overwrite").parquet(f"{staging}/banded")
-        toks.write.mode("overwrite").parquet(f"{staging}/toks")
-
-    return published(
-        "lsh_persisted", spark, artifact_dir or lsh_artifact_dir(sf_dir), _build
-    )
+def lsh_index_persisted(spark: SparkSession, sf_dir: str) -> tuple:
+    """The maintained LSH dedup index published to its STABLE
+    content-keyed artifact (the dedup ``write_index``) and read back as
+    ``(banded, toks)`` — row-identical to the resident index (pinned in
+    tests/test_r10_queries.py). A different process over the same
+    corpus mounts the path without any fit work
+    (``dedup_lsh_cold_probe``). Probing the reloaded frames keeps
+    parquet's filter pushdown: the frozen-side ``id < cut`` reaches the
+    reader, which a resident checkpoint scan cannot do."""
+    return mounted(spark, LSH, persisted(spark, sf_dir, LSH))
 
 
-def lsh_index_persisted(
-    spark: SparkSession, sf_dir: str, artifact_dir: str | None = None
-) -> tuple:
-    """Persist the maintained LSH dedup index to its STABLE content-keyed
-    parquet artifact (build-once, publish-atomic — the dedup
-    ``write_index``), then LOAD it back: the band-signature rows and the
-    hashed shingle sets both round-trip through storage (plain
-    BIGINT/STRING/array<string> columns — parquet is lossless for all of
-    them, so the reloaded index is row-identical to the resident one,
-    pinned in tests/test_r10_queries.py). Returns ``(banded, toks)`` read
-    from disk. Since r11 the artifact SURVIVES the session: a different
-    process over the same corpus mounts the path and serves without any
-    fit work (``dedup_lsh_cold_probe``; fit-forbidden pin in
-    tests/test_r11_queries.py). ``artifact_dir`` overrides the resolved
-    path for callers that manage their own artifact store.
+def _artifact_probe(spark: SparkSession, sf_dir: str):
+    """The incremental probe over a mounted ``(banded, toks)`` index, the
+    batch cut riding as a literal the parquet reader can push."""
 
-    Scale shape: the write is paid once per corpus — at 100 TB the two
-    parquets ARE the maintained dedup table a daily pipeline mounts: the
-    banded rows join-pruned by (band_id, band_hash), the shingle sets
-    fetched for candidate rows only. Probing from the reloaded frames
-    keeps parquet's filter pushdown (the frozen-side ``id < cut`` cut
-    reaches the reader, which the resident checkpoint scan cannot do)."""
-    path = _lsh_persisted_dir(spark, sf_dir, artifact_dir)
-    return (
-        spark.read.parquet(f"{path}/banded"),
-        spark.read.parquet(f"{path}/toks"),
-    )
+    def probe(index: tuple) -> DataFrame:
+        (docs,) = load(spark, sf_dir, "documents")
+        return _incremental_probe(docs, *index, cut=_lsh_batch_cut(spark, sf_dir))
+
+    return probe
 
 
 @register(
@@ -1339,35 +1368,19 @@ def lsh_index_persisted(
 )
 def dedup_lsh_persist_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The incremental near-dup probe run ENTIRELY from the PERSISTED
-    dedup-index artifact (r10, VERDICT r9 task 2 — brings the LSH index
-    to lifecycle parity with ``ann_ivfpq_persist_probe``): band rows and
-    shingle sets are written to parquet once per (session, corpus) and
-    reloaded, and the probe consumes the reloaded frames through the
-    SAME ``_incremental_probe`` body as the resident-index query — so
-    output must be row-identical to ``dedup_incremental_lsh`` (pinned in
-    tests/test_r10_queries.py), proving the artifact round-trips
-    losslessly with no signature recompute on load.
+    dedup-index artifact, through the SAME ``_incremental_probe`` body as
+    the resident-index query, so its rows must equal
+    ``dedup_incremental_lsh``'s (pinned in tests/test_r10_queries.py):
+    the artifact round-trips losslessly with no signature recompute.
 
-    Scale shape: identical joins to the resident probe, plus a
-    storage-side win — both probe legs carry parquet-pushed ``id``
-    cutoffs into the reader (plan-gated: every scan is a parquet scan,
-    zero signature expressions anywhere), which is exactly how a daily
-    job reads a 100 TB maintained dedup table: prune by the batch
-    boundary at the scan, join at band grain, fetch shingle sets for
-    candidates only."""
-    from ..operators.caching import dir_fingerprint
-
-    art = _lsh_persisted_dir(spark, sf_dir)
-
-    def build() -> DataFrame:
-        banded_idx, toks = lsh_index_persisted(spark, sf_dir)
-        (docs,) = load(spark, sf_dir, "documents")
-        return _incremental_probe(
-            docs, banded_idx, toks, cut=_lsh_batch_cut(spark, sf_dir)
-        )
-
-    return get(
-        "lsh_probe_frame", spark, (sf_dir, "persisted", dir_fingerprint(art)), build
+    Scale shape: the resident probe's joins, with both probe legs
+    carrying parquet-pushed ``id`` cutoffs into the reader (plan-gated:
+    parquet scans only, zero signature expressions) — how a daily job
+    reads a maintained dedup table: prune by the batch boundary at the
+    scan, join at band grain, fetch shingle sets for candidates only."""
+    return mount(
+        spark, sf_dir, LSH, "lsh_probe_frame", "persisted",
+        (persisted(spark, sf_dir, LSH),), _artifact_probe(spark, sf_dir),
     )
 
 
@@ -1377,41 +1390,17 @@ def dedup_lsh_persist_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "lsh", "incremental", "storage"),
 )
 def dedup_lsh_cold_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COLD-START serving from the stable artifact path (r11, VERDICT r10
-    task 3): resolve the content-keyed artifact dir — a pure function of
-    the corpus files and model params, NO session state consulted —
-    bootstrap it once if absent, then run the incremental probe ENTIRELY
-    from the mounted parquets. This is the fit→serve handoff FAISS's
-    ``read_index`` means: a fresh process (today's probe job) mounts the
-    path yesterday's signature job published and serves without
-    recomputing a single signature — pinned in tests/test_r11_queries.py
-    by clearing every in-memory cache, forbidding the signer functions
-    outright (monkeypatched to raise), and checking row-equality to the
-    resident-index probe.
-
-    Scale shape: identical to ``dedup_lsh_persist_probe`` (parquet scans
-    with the batch cutoff pushed to the reader, band equi-join under the
-    occupancy cap, candidate-grain verify) — the only difference is WHERE
-    the path comes from, which is the entry's whole claim."""
-    from ..operators.artifacts import artifact_complete
-
-    from ..operators.caching import dir_fingerprint
-
-    path = lsh_artifact_dir(sf_dir)
-    if not artifact_complete(path):
-        lsh_index_persisted(spark, sf_dir)  # bootstrap once, publish-atomic
-
-    def build() -> DataFrame:
-        (docs,) = load(spark, sf_dir, "documents")
-        return _incremental_probe(
-            docs,
-            spark.read.parquet(f"{path}/banded"),
-            spark.read.parquet(f"{path}/toks"),
-            cut=_lsh_batch_cut(spark, sf_dir),
-        )
-
-    return get(
-        "lsh_probe_frame", spark, (sf_dir, "cold", dir_fingerprint(path)), build
+    """COLD-START serving from the stable artifact path — FAISS
+    ``read_index``: resolve the content-keyed dir (a pure function of
+    corpus files and model params, no session state), bootstrap it once
+    if absent, and run ``dedup_lsh_persist_probe``'s plan ENTIRELY from
+    the mounted parquets. Pinned in tests/test_r11_queries.py: with
+    every cache cleared and the signers forbidden, rows equal the
+    resident-index probe's."""
+    return mount(
+        spark, sf_dir, LSH, "lsh_probe_frame", "cold", (lsh_artifact_dir(sf_dir),),
+        _artifact_probe(spark, sf_dir),
+        bootstrap=lambda: persisted(spark, sf_dir, LSH),
     )
 
 

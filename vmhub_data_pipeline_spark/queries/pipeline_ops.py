@@ -910,10 +910,10 @@ def pipeline_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session; a later invocation finds the dir already canonical and the
     # fold skips — row totals are conserved either way)
     from . import streaming_queries as sq
+    from .dedup import LSH
 
     sq.streaming_lsh_index_growth(spark, sf_dir)
-    grown = sq._lsh_growth_dir(spark, sf_dir)
-    metrics = compact_grown_index(spark, grown, ("banded", "toks"))
+    metrics = compact_grown_index(spark, sq._lsh_growth_dir(spark, sf_dir), LSH.legs)
     compact_rows = int(sum(m["rows"] for m in metrics))
 
     # prune a planted private store: 2 stale staging dirs, 1 complete

@@ -23,7 +23,17 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import dsum, sql_dsum
-from ..operators.caching import dir_fingerprint, get, invalidate, store
+from ..operators.artifacts import artifact_complete
+from ..operators.caching import get, store
+from ..operators.index_lifecycle import (
+    artifact_dir,
+    grow,
+    grown_artifact_dir,
+    growth_dir,
+    mount,
+    mounted,
+    publish,
+)
 from ..streaming.events import TS_FORMAT, events_file_stream
 from ..tables import load
 from . import register
@@ -33,14 +43,13 @@ def _rmtree(path: str) -> None:
     shutil.rmtree(path, ignore_errors=True)
 
 
-# Every landed fixture and growth dir is a per-(session, sf_dir) scratch
+# Every landed fixture is a per-(session, sf_dir) scratch
 # dir owned by its registry entry: eviction, invalidation and the exit
 # sweep remove it from disk. Keyed by app id so a fresh SparkSession never
 # trusts a stale tempdir another process may have cleaned up.
 for _name in (
     "landed_events", "landed_replay", "landed_docs", "landed_queries",
-    "landed_arrivals", "landed_adds", "landed_batch_docs",
-    "ivfpq_growth_dir", "lsh_growth_dir",
+    "landed_arrivals",
 ):
     store(_name, on_evict=_rmtree)
 
@@ -761,59 +770,16 @@ def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(spark, stream, "stream_late", output_mode="append")
 
 
-def _dir_schema(spark: SparkSession, path: str):
-    """A growth-dir parquet's schema. The growth streams read the base
-    schema only to cast each micro-batch's append rows to the exact base
-    types; appends never change the schema, so one footer read per
-    directory suffices — unregistered, every warm invocation re-paid a
-    DataFrameReader footer job."""
-    return get("dir_schema", spark, (path,), lambda: spark.read.parquet(path).schema)
-
-
 def _ivfpq_growth_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Scratch dir of the GROWING serving index: lists/ starts as a copy
-    of the persisted artifact's inverted lists (partition ``__sb=-1``)
-    and is foreachBatch-appended to; _ckpt/ is the stream's checkpoint
-    (exactly-once appends across re-invocations — a restarted
-    availableNow run replays nothing)."""
-    from .vector import _ivfpq_persisted_dir
+    from .vector import IVFPQ
 
-    def build() -> str:
-        base_dir = _ivfpq_persisted_dir(spark, sf_dir)
-        grown = tempfile.mkdtemp(prefix="vmhub_ivfpq_grow_")
-        shutil.copytree(
-            f"{base_dir}/lists", f"{grown}/lists/__sb=-1", dirs_exist_ok=True
-        )
-        return grown
-
-    return get("ivfpq_growth_dir", spark, (sf_dir,), build)
+    return growth_dir(spark, sf_dir, IVFPQ)
 
 
-def _landed_add_vectors(spark: SparkSession, sf_dir: str) -> str:
-    """Land the held-out batch (vec_id < 10, the catalog-wide ANN
-    batch convention) as unit-normalized NDJSON — the SAME vectors the
-    frozen model never saw and ``ann_ivfpq_add_batch`` encodes. Doubles
-    round-trip exactly through Spark's JSON writer (shortest round-trip
-    decimals), so the streamed rows are bit-equal to the batch path's.
-    Two arrival files, so the growth stream runs >1 micro-batch: the
-    held-out UNIT vectors with their filterable label — what an ingest
-    pipeline hands the index-maintenance stream."""
-    from .vector import _pq_unit_corpus
+def _lsh_growth_dir(spark: SparkSession, sf_dir: str) -> str:
+    from .dedup import LSH
 
-    def build() -> str:
-        q, _ = _pq_unit_corpus(spark, sf_dir)
-        scratch = tempfile.mkdtemp(prefix="vmhub_annadd_")
-        (
-            q.select(
-                "vec_id", F.col("embedding").alias("v"), "label"
-            )
-            .repartition(2, "vec_id")
-            .write.mode("overwrite")
-            .json(scratch)
-        )
-        return scratch
-
-    return get("landed_adds", spark, (sf_dir,), build)
+    return growth_dir(spark, sf_dir, LSH)
 
 
 def _grown_probe_oracle() -> str:
@@ -830,213 +796,27 @@ def _grown_probe_oracle() -> str:
 def streaming_index_growth(
     spark: SparkSession, sf_dir: str, _timeout: float = 300.0
 ) -> DataFrame:
-    """Streamed IVF-PQ index GROWTH — the eleventh real streaming
-    execution, closing the serving loop the r8 pieces left open
-    (VERDICT r8 task 5): the persisted parquet artifact
-    (``ivfpq_index_persisted`` — FAISS ``write_index``) is copied to a
-    growth directory, a micro-batched stream of new vectors is
-    foreachBatch-ENCODED against the frozen model and appended to the
-    lists parquet (``ann_ivfpq_add_batch``'s exact arithmetic — FAISS
-    ``add``), and the post-growth probe runs from the RELOADED lists —
-    every query now retrieves its own newly-added vector at rank 1
-    (pinned in tests/test_r9_queries.py, along with row-equality to a
-    batch-built grown index).
+    """Streamed IVF-PQ index GROWTH, FAISS ``add`` as a stream: a growth
+    dir seeded from the persisted artifact (``ivfpq_index_persisted``)
+    takes a micro-batched stream of the held-out vectors, each encoded
+    against the frozen model (``ann_ivfpq_add_batch``'s exact
+    arithmetic), and the probe runs from the RELOADED grown lists —
+    every query retrieves its own added vector at rank 1 (pinned in
+    tests/test_r9_queries.py, with row-equality to a batch-built grown
+    index). The lifecycle is ``index_lifecycle.grow``.
 
-    Scale shape: each micro-batch is a PURE SCAN of the batch (model
-    literals inline; no shuffle, no stateful operator — the stream's
-    stateOperators list is pinned empty), and the append writes only the
-    batch's rows — O(batch x model) per trigger against an
-    O(corpus)-sized resident table, exactly how a serving fleet takes
-    daily adds between refits. Appends are CRASH-IDEMPOTENT (r11,
-    VERDICT r10 task 2): each micro-batch overwrites its own
-    ``__sb=<batch_id>`` partition of the lists parquet (the
-    ``start_to_lake`` batch-keyed convention), so a batch replayed after
-    a mid-batch crash — the at-least-once window inherent to a
-    foreachBatch file sink — overwrites its own partial rows instead of
-    double-appending (pinned in tests/test_r11_queries.py: a fresh
-    checkpoint over the same arrival files reproduces the identical row
-    set). The checkpoint still makes CLEAN re-invocations replay nothing
-    (the T4 idempotent-replay contract). The probe keeps the
-    composed-index contract: bucket equi-join over the probed cells of
-    the reloaded parquet, raw vectors touched only for the shortlist.
-    Fixture concession, documented: the growth dir START is a copy of
-    the persisted lists seeded as partition ``__sb=-1`` (production
-    appends to the serving table in place; the copy keeps
-    ``ann_ivfpq_persist_probe``'s round-trip artifact immutable for its
-    row-equality pin)."""
-    import os
+    Scale shape: each micro-batch is a pure scan with the model inline
+    as literals (no shuffle, no stateful operator — pinned) writing only
+    the batch's rows, O(batch x model) per trigger; the probe is the
+    composed-index bucket equi-join over the probed cells, raw vectors
+    touched only for the shortlist. The growth dir is a copy, so
+    ``ann_ivfpq_persist_probe``'s artifact stays immutable."""
+    from .vector import IVFPQ, _ivfpq_serving_probe
 
-    from pyspark.errors import StreamingQueryException
-
-    from ..operators.similarity import (
-        _nearest_centroid_expr,
-        _pq_code_expr,
-        ivfpq_knn,
+    return grow(
+        spark, sf_dir, IVFPQ, _ivfpq_serving_probe(spark, sf_dir, grown=True),
+        _timeout,
     )
-    from .vector import _ivfpq_persisted_dir, _pq_unit_corpus, ivfpq_index_persisted
-
-    cents, books, _base_lists = ivfpq_index_persisted(spark, sf_dir)
-    base_dir = _ivfpq_persisted_dir(spark, sf_dir)
-    # schema from the immutable persisted artifact (the growth dir itself
-    # carries the __sb partition column, which is sink bookkeeping — the
-    # serving schema is the artifact's)
-    base_schema = _dir_schema(spark, f"{base_dir}/lists")
-    grown = _ivfpq_growth_dir(spark, sf_dir)
-    lists_dir = f"{grown}/lists"
-
-    adds = _landed_add_vectors(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("vec_id BIGINT, v ARRAY<DOUBLE>, label INT")
-        .option("maxFilesPerTrigger", 1)
-        .json(adds)
-    )
-
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.select(
-            F.col("vec_id").alias("corpus_id"),
-            _nearest_centroid_expr(cents, F.col("v")).alias("bucket"),
-            _pq_code_expr(F.col("v"), books, 64 // len(books)).alias("codes"),
-            F.col("label"),
-        )
-        # overwrite-by-batch-id: path-targeted overwrite of THIS batch's
-        # partition is idempotent under replay — a re-run of the batch
-        # replaces its own rows, never duplicates them
-        rows.select(
-            *[F.col(f.name).cast(f.dataType) for f in base_schema.fields]
-        ).write.mode("overwrite").parquet(f"{lists_dir}/__sb={batch_id}")
-
-    q = (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", os.path.join(grown, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-
-    def _discard_and_raise(reason: str, cause: Exception | None = None):
-        # never leave a half-grown dir + stale checkpoint behind for a
-        # same-session retry to serve: rebuild from the immutable
-        # persisted artifact instead (ADVICE r10: the discard must cover
-        # the exception path, not just the timeout)
-        invalidate("ivfpq_growth_dir")
-        raise RuntimeError(
-            f"streaming_index_growth: {reason}; discarding the growth dir "
-            f"before probing a partially-grown index"
-        ) from cause
-
-    # awaitTermination(timeout) returns False when the availableNow drain
-    # has NOT finished — probing then would silently serve a
-    # partially-grown index and fail confusingly far from the cause
-    # (ADVICE r9 / VERDICT r9 task 7): stop the stream and fail loudly.
-    try:
-        finished = q.awaitTermination(_timeout)
-    except StreamingQueryException as exc:
-        _discard_and_raise(f"growth stream failed ({exc})", exc)
-    if not finished:
-        q.stop()
-        _discard_and_raise(f"growth stream did not finish within {_timeout}s")
-
-    # a replayed batch (fresh checkpoint, same inputs) REWRITES its
-    # partition's files without advancing the commit id, so any compiled
-    # plan over the sink must re-list before its next action — the
-    # REFRESH TABLE a serving system issues after ingest commits
-    spark.catalog.refreshByPath(lists_dir)
-
-    # r12 (VERDICT r11 task 4): publish the committed grown index — the
-    # grown lists plus the frozen model, so the artifact is self-contained
-    # — to the stable content-keyed store; a fresh process mounts it and
-    # serves without re-running fit OR growth (``ann_ivfpq_grown_cold_
-    # reload``). Atomic, idempotent (no-op once complete).
-    from ..operators.artifacts import artifact_complete, publish_artifact
-
-    art = ivfpq_grown_artifact_dir(sf_dir)
-    if not artifact_complete(art):
-
-        def _publish(staging: str) -> None:
-            (
-                spark.read.parquet(lists_dir)
-                .select(*[F.col(f.name) for f in base_schema.fields])
-                .write.mode("overwrite")
-                .parquet(f"{staging}/lists")
-            )
-            spark.createDataFrame(
-                [(cents, books)],
-                "cents array<array<double>>, books array<array<array<double>>>",
-            ).write.mode("overwrite").parquet(f"{staging}/model")
-
-        publish_artifact(art, _publish)
-
-    # The compiled post-growth probe frame. Rebuilding the literal-heavy
-    # probe plan per invocation costs ~1-1.5 s of driver analysis at sf0.1
-    # (r11) — a serving system re-plans only when the index actually
-    # changed, so the key carries a fingerprint of the sink's data files
-    # (an appended batch or a replay that rewrites part-files in place
-    # both change it) and the growth dir itself (a discarded-and-rebuilt
-    # dir must never serve a stale frame bound to deleted files).
-    def probe() -> DataFrame:
-        # re-fetched so the probe is recorded as built from the growth dir
-        grown_lists = f"{_ivfpq_growth_dir(spark, sf_dir)}/lists"
-        qdf, c = _pq_unit_corpus(spark, sf_dir)
-        lists = spark.read.parquet(grown_lists).select(
-            *[F.col(f.name) for f in base_schema.fields]
-        )
-        return ivfpq_knn(
-            qdf.unionByName(c), qdf, id_col="vec_id", vec_col="embedding",
-            k=5, dim=64, cents=cents, books=books, nprobe=4,
-            rerank_shortlist=40, index=lists,
-        )
-
-    return get(
-        "grown_probe", spark, (sf_dir, grown, dir_fingerprint(lists_dir)), probe
-    )
-
-
-def _lsh_growth_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Scratch dir of the GROWING dedup index: banded/ and toks/ start as
-    the FROZEN (pre-cut) slice of the persisted LSH artifact (partition
-    ``__sb=-1``) and are foreachBatch-appended to; _ckpt/ is the
-    stream's checkpoint."""
-    from .dedup import _lsh_batch_cut, _lsh_persisted_dir
-
-    def build() -> str:
-        base_dir = _lsh_persisted_dir(spark, sf_dir)
-        cut = _lsh_batch_cut(spark, sf_dir)
-        grown = tempfile.mkdtemp(prefix="vmhub_lsh_grow_")
-        for leg in ("banded", "toks"):
-            (
-                spark.read.parquet(f"{base_dir}/{leg}")
-                .filter(F.col("id") < F.lit(cut))
-                .write.mode("overwrite")
-                .parquet(f"{grown}/{leg}/__sb=-1")
-            )
-        return grown
-
-    return get("lsh_growth_dir", spark, (sf_dir,), build)
-
-
-def _landed_batch_docs(spark: SparkSession, sf_dir: str) -> str:
-    """Land the document batch (doc_id >= cut — the catalog-wide
-    incremental-batch convention) as NDJSON. Text round-trips exactly
-    through Spark's JSON writer, so the streamed rows sign identically
-    to the batch path's. Two arrival files, so the growth stream runs >1
-    micro-batch: the raw (doc_id, text) rows an ingest pipeline hands the
-    index-maintenance stream — signing happens IN the stream, against
-    the frozen hash family."""
-    from .dedup import _lsh_batch_cut
-
-    def build() -> str:
-        cut = _lsh_batch_cut(spark, sf_dir)
-        (docs,) = load(spark, sf_dir, "documents")
-        scratch = tempfile.mkdtemp(prefix="vmhub_docadd_")
-        (
-            docs.filter(F.col("doc_id") >= F.lit(cut))
-            .select("doc_id", "text")
-            .repartition(2, "doc_id")
-            .write.mode("overwrite")
-            .json(scratch)
-        )
-        return scratch
-
-    return get("landed_batch_docs", spark, (sf_dir,), build)
 
 
 def _lsh_grown_probe_oracle(
@@ -1111,174 +891,44 @@ WHERE d.doc_id >= cut.cut
 def streaming_lsh_index_growth(
     spark: SparkSession, sf_dir: str, _timeout: float = 300.0
 ) -> DataFrame:
-    """Streamed LSH dedup-index GROWTH — the twelfth real streaming
-    execution, closing the dedup tier's persist+append+serve loop at
-    lifecycle parity with the ANN tier (r10, VERDICT r9 task 4; mirror
-    of ``streaming_index_growth``): the persisted dedup artifact
-    (``lsh_index_persisted`` — the dedup ``write_index``) seeds a growth
-    directory with its FROZEN (pre-cut) slice, a micro-batched stream of
-    raw new documents is foreachBatch-SIGNED against the frozen hash
-    family (``minhash_banded`` — the exact operator the index was built
-    with) and appended to the banded/toks parquets, and the post-growth
-    probe runs from the RELOADED copies: each batch document reports its
-    near-dups across the WHOLE grown index (frozen ∪ batch, self
-    excluded) — so batch-vs-batch duplicates, invisible to the
-    frozen-index probe ``dedup_incremental_lsh`` runs, now surface
-    (pinned in tests/test_r10_queries.py, along with row-equality of the
-    grown parquets to the batch-built ``lsh_index_appended`` index).
+    """Streamed LSH dedup-index GROWTH: a growth dir seeded with the
+    FROZEN (pre-cut) slice of the persisted dedup artifact
+    (``lsh_index_persisted``) takes a micro-batched stream of raw new
+    documents, each signed against the frozen hash family
+    (``minhash_banded``, the operator the index was built with) into the
+    banded and toks legs, and the probe runs from the RELOADED grown
+    legs: each batch document reports its near-dups across the WHOLE
+    grown index (frozen ∪ batch, self excluded), so batch-vs-batch
+    duplicates the frozen-index probe ``dedup_incremental_lsh`` cannot
+    see now surface (pinned in tests/test_r10_queries.py, with
+    row-equality of the grown legs to ``lsh_index_appended``). The
+    lifecycle is ``index_lifecycle.grow``.
 
-    Scale shape: each micro-batch is a PURE SCAN of the batch documents
-    (signature expressions ride the scan; no shuffle, no stateful
-    operator — stateOperators pinned empty) and the append writes only
-    the batch's band/shingle rows — O(batch × signature) per trigger
-    against an O(corpus)-sized maintained table, exactly how a daily
-    dedup pipeline takes document arrivals between full re-mines.
-    Appends are CRASH-IDEMPOTENT (r11, VERDICT r10 task 2 + ADVICE r10):
-    BOTH legs of a micro-batch overwrite their own ``__sb=<batch_id>``
-    partition (the ``start_to_lake`` batch-keyed convention), so a batch
-    replayed after a mid-batch crash — including a crash BETWEEN the two
-    legs' writes, the cross-leg inconsistency window two independent
-    plain appends would have — overwrites both partitions back to a
-    consistent state instead of double-appending (pinned in
-    tests/test_r11_queries.py: a fresh checkpoint over the same arrival
-    files reproduces the identical row sets). The checkpoint still makes
-    CLEAN re-invocations replay nothing (pinned). The probe keeps the
-    asymmetric-index contract: band equi-join (bucket-occupancy cap
-    enforced since r11), candidate-grain verification, query-grain
-    windows. Fixture concession, documented: the growth dir START is a
-    filtered copy of the persisted artifact seeded as partition
-    ``__sb=-1`` (production appends to the serving table in place; the
-    copy keeps ``dedup_lsh_persist_probe``'s round-trip artifact
-    immutable for its row-equality pin)."""
-    import os
+    Scale shape: each micro-batch is a pure scan with the signature
+    expressions riding it (no shuffle, no stateful operator — pinned)
+    writing only the batch's band/shingle rows, O(batch × signature) per
+    trigger; the probe is a band equi-join under the bucket-occupancy
+    cap, candidate-grain verification and query-grain windows."""
+    from .dedup import LSH
 
-    from pyspark.errors import StreamingQueryException
-
-    from ..operators.dedup import (
-        band_candidates,
-        hashed_token_sets,
-        jaccard_verify,
-        minhash_banded,
-    )
-    from .dedup import _lsh_batch_cut, _lsh_persisted_dir
-    from pyspark.sql import Window
-
-    # materialize the persisted artifact first
-    base_dir = _lsh_persisted_dir(spark, sf_dir)
-    cut = _lsh_batch_cut(spark, sf_dir)
-    # serving schemas come from the immutable persisted artifact; the
-    # growth dir adds the __sb partition column (sink bookkeeping only)
-    banded_schema = _dir_schema(spark, f"{base_dir}/banded")
-    toks_schema = _dir_schema(spark, f"{base_dir}/toks")
-    grown = _lsh_growth_dir(spark, sf_dir)
-
-    docs_dir = _landed_batch_docs(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(docs_dir)
-    )
-
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        # overwrite-by-batch-id on BOTH legs: a replayed batch replaces
-        # its own partitions, so the two sinks can never drift apart
-        # past one replay even if a crash lands between the two writes
-        banded_rows = minhash_banded(
-            batch_df, "doc_id", "text", portable=True
-        )
-        banded_rows.select(
-            *[F.col(f.name).cast(f.dataType) for f in banded_schema.fields]
-        ).write.mode("overwrite").parquet(f"{grown}/banded/__sb={batch_id}")
-        toks_rows = hashed_token_sets(batch_df, "doc_id", "text", 3)
-        toks_rows.select(
-            *[F.col(f.name).cast(f.dataType) for f in toks_schema.fields]
-        ).write.mode("overwrite").parquet(f"{grown}/toks/__sb={batch_id}")
-
-    q = (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", os.path.join(grown, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-
-    def _discard_and_raise(reason: str, cause: Exception | None = None):
-        # same loud-failure contract as streaming_index_growth, and the
-        # discard covers the exception path too (ADVICE r10): a retry
-        # rebuilds from the immutable persisted artifact
-        invalidate("lsh_growth_dir")
-        raise RuntimeError(
-            f"streaming_lsh_index_growth: {reason}; discarding the growth "
-            f"dir before probing a partially-grown index"
-        ) from cause
-
-    try:
-        finished = q.awaitTermination(_timeout)
-    except StreamingQueryException as exc:
-        _discard_and_raise(f"growth stream failed ({exc})", exc)
-    if not finished:
-        q.stop()
-        _discard_and_raise(f"growth stream did not finish within {_timeout}s")
-
-    # same REFRESH-after-commit contract as streaming_index_growth: a
-    # replayed batch rewrites partition files in place, so compiled plans
-    # over both legs must re-list before their next action
-    spark.catalog.refreshByPath(f"{grown}/banded")
-    spark.catalog.refreshByPath(f"{grown}/toks")
-
-    # r12 (VERDICT r11 task 4): the GROWN index becomes durable. The
-    # session growth dir is working state (checkpoint + __sb partitions);
-    # once the drain commits, the grown serving tables are published to
-    # the stable content-keyed artifact store — frozen ∪ batch is a pure
-    # function of the corpus, so the key needs only corpus+params — and a
-    # fresh process can mount persist→grow→serve output without re-running
-    # the stream (``dedup_lsh_grown_cold_probe``). Publish is atomic and
-    # idempotent (no-op once complete).
-    from ..operators.artifacts import artifact_complete, publish_artifact
-
-    art = lsh_grown_artifact_dir(sf_dir)
-    if not artifact_complete(art):
-
-        def _publish(staging: str) -> None:
-            for leg, schema in (("banded", banded_schema), ("toks", toks_schema)):
-                (
-                    spark.read.parquet(f"{grown}/{leg}")
-                    .select(*[F.col(f.name) for f in schema.fields])
-                    .write.mode("overwrite")
-                    .parquet(f"{staging}/{leg}")
-                )
-
-        publish_artifact(art, _publish)
-
-    def probe() -> DataFrame:
-        # re-fetched so the probe is recorded as built from the growth dir
-        grown_dir = _lsh_growth_dir(spark, sf_dir)
-        grown_banded = spark.read.parquet(f"{grown_dir}/banded").select(
-            *[F.col(f.name) for f in banded_schema.fields]
-        )
-        grown_toks = spark.read.parquet(f"{grown_dir}/toks").select(
-            *[F.col(f.name) for f in toks_schema.fields]
-        )
-        return _grown_lsh_probe(spark, sf_dir, grown_banded, grown_toks, cut)
-
-    return get(
-        "grown_probe", spark,
-        (sf_dir, grown, dir_fingerprint(f"{grown}/banded", f"{grown}/toks")),
-        probe,
+    return grow(
+        spark, sf_dir, LSH, lambda index: _grown_lsh_probe(spark, sf_dir, index),
+        _timeout,
     )
 
 
-def _grown_lsh_probe(
-    spark: SparkSession, sf_dir: str, grown_banded: DataFrame,
-    grown_toks: DataFrame, cut: int,
-) -> DataFrame:
-    """The whole-grown-index probe plan (batch vs frozen ∪ batch, self
-    excluded, production cap enforced) — shared by the streamed growth
-    entry and the cold grown-serve entry so the two can never drift."""
+def _grown_lsh_probe(spark: SparkSession, sf_dir: str, index: tuple) -> DataFrame:
+    """The whole-grown-index probe plan over a grown ``(banded, toks)``
+    index (batch vs frozen ∪ batch, self excluded, production cap
+    enforced) — shared by the streamed growth entry and the cold
+    grown-serve entry so the two can never drift."""
     from pyspark.sql import Window
 
     from ..operators.dedup import band_candidates, jaccard_verify
-    from .dedup import _LSH_HOT_CAP
+    from .dedup import _LSH_HOT_CAP, _lsh_batch_cut
 
+    grown_banded, grown_toks = index
+    cut = _lsh_batch_cut(spark, sf_dir)
     (docs,) = load(spark, sf_dir, "documents")
     cand = band_candidates(
         grown_banded.filter(F.col("id") >= F.lit(cut)),
@@ -1315,29 +965,15 @@ def _grown_lsh_probe(
 
 
 def lsh_grown_artifact_dir(sf_dir: str) -> str:
-    """Stable content-keyed path of the GROWN dedup index (r12): the
-    grown content (frozen ∪ batch under the frozen hash family) is a
-    pure function of the corpus, so corpus files + model params key it."""
-    from ..operators.artifacts import stable_artifact_dir
-    from .dedup import _LSH_MODEL_PARAMS
+    from .dedup import LSH
 
-    return stable_artifact_dir(
-        "lshgrown", sf_dir, _LSH_MODEL_PARAMS + ("grown",),
-        tables=("documents",),
-    )
+    return grown_artifact_dir(LSH, sf_dir)
 
 
 def ivfpq_grown_artifact_dir(sf_dir: str) -> str:
-    """Stable content-keyed path of the GROWN IVF-PQ index (r12): lists
-    grown by the held-out add batch plus the frozen model, both pure
-    functions of the corpus + model params."""
-    from ..operators.artifacts import stable_artifact_dir
-    from .vector import _IVFPQ_MODEL_PARAMS
+    from .vector import IVFPQ
 
-    return stable_artifact_dir(
-        "ivfpqgrown", sf_dir, _IVFPQ_MODEL_PARAMS + ("grown",),
-        tables=("embeddings",),
-    )
+    return grown_artifact_dir(IVFPQ, sf_dir)
 
 
 @register(
@@ -1346,38 +982,21 @@ def ivfpq_grown_artifact_dir(sf_dir: str) -> str:
     tags=("dedup", "lsh", "incremental", "storage"),
 )
 def dedup_lsh_grown_cold_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COLD-START serving from the GROWN dedup-index artifact (r12,
-    VERDICT r11 task 4 — closes the durability gap the r11 cold entries
-    left: they served the FITTED index only, so streamed append work died
-    with the session). The growth stream now publishes its committed
-    output to the stable artifact store; this entry resolves that
-    content-keyed path — no session state consulted — bootstraps it once
-    if absent, and runs the whole-grown-index probe ENTIRELY from the
-    mounted parquets: persist→grow→serve survives the session exactly
-    like fit→serve does. Pinned in tests/test_r12_queries.py by clearing
-    every in-memory cache, forbidding BOTH the signer functions and the
-    growth stream outright (monkeypatched to raise), and checking
-    row-equality to the warm streamed-growth probe.
+    """COLD-START serving from the GROWN dedup-index artifact: the growth
+    stream publishes its committed legs to the stable store, and this
+    entry mounts that content-keyed path (bootstrapping it once if
+    absent) and runs ``streaming_lsh_index_growth``'s probe ENTIRELY
+    from the mounted parquets, so persist→grow→serve survives the
+    session like fit→serve does. Pinned in tests/test_r12_queries.py:
+    with every cache cleared and the signers and the growth stream
+    forbidden, rows equal the warm streamed-growth probe's."""
+    from .dedup import LSH
 
-    Scale shape: identical to ``streaming_lsh_index_growth``'s post-drain
-    probe (band equi-join under the occupancy cap over the grown index,
-    candidate-grain verify, query-grain windows) — the only difference is
-    WHERE the index comes from, which is the entry's whole claim."""
-    from ..operators.artifacts import artifact_complete
-    from .dedup import _lsh_batch_cut
-
-    path = lsh_grown_artifact_dir(sf_dir)
-    if not artifact_complete(path):
-        # bootstrap once: run the growth stream, which publishes on commit
-        streaming_lsh_index_growth(spark, sf_dir)
-    return get(
-        "grown_probe", spark, (sf_dir, "lsh-grown-cold", dir_fingerprint(path)),
-        lambda: _grown_lsh_probe(
-            spark, sf_dir,
-            spark.read.parquet(f"{path}/banded"),
-            spark.read.parquet(f"{path}/toks"),
-            cut=_lsh_batch_cut(spark, sf_dir),
-        ),
+    return mount(
+        spark, sf_dir, LSH, "grown_probe", "lsh-grown-cold",
+        (lsh_grown_artifact_dir(sf_dir),),
+        lambda index: _grown_lsh_probe(spark, sf_dir, index),
+        bootstrap=lambda: streaming_lsh_index_growth(spark, sf_dir),
     )
 
 
@@ -1387,60 +1006,30 @@ def dedup_lsh_grown_cold_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("vector", "ivf", "pq", "incremental", "storage"),
 )
 def ann_ivfpq_grown_cold_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COLD-START serving from the GROWN IVF-PQ artifact (r12, VERDICT
-    r11 task 4 — the ANN twin of ``dedup_lsh_grown_cold_probe``): the
-    growth stream publishes the grown inverted lists PLUS the frozen
-    model to the stable store, so a fresh process mounts one path and
-    serves the post-growth probe — every query retrieving its own
-    newly-added vector — with fit AND growth forbidden (pinned in
-    tests/test_r12_queries.py, plus row-equality to the warm streamed-
-    growth probe).
+    """COLD-START serving from the GROWN IVF-PQ artifact (the ANN twin
+    of ``dedup_lsh_grown_cold_probe``): the grown lists plus the frozen
+    model mount from one published path, and ``streaming_index_growth``'s
+    probe serves from it — one O(model) row rehydrates the model as plan
+    literals. Pinned in tests/test_r12_queries.py: with fit AND growth
+    forbidden, rows equal the warm streamed-growth probe's."""
+    from .vector import IVFPQ, _ivfpq_serving_probe
 
-    Scale shape: identical to ``streaming_index_growth``'s post-drain
-    probe — one O(model) parquet row rehydrates centroids+codebooks as
-    plan literals, the grown lists feed the celled ADC join, raw vectors
-    touched only for the shortlist re-rank."""
-    from ..operators.artifacts import artifact_complete
-    from ..operators.similarity import ivfpq_knn
-    from .vector import _pq_unit_corpus
-
-    path = ivfpq_grown_artifact_dir(sf_dir)
-    if not artifact_complete(path):
-        # bootstrap once: run the growth stream, which publishes on commit
-        streaming_index_growth(spark, sf_dir)
-
-    def build() -> DataFrame:
-        row = spark.read.parquet(f"{path}/model").collect()[0]
-        cents = [[float(x) for x in c] for c in row["cents"]]
-        books = [[[float(x) for x in c2] for c2 in b] for b in row["books"]]
-        qdf, c = _pq_unit_corpus(spark, sf_dir)
-        return ivfpq_knn(
-            qdf.unionByName(c), qdf, id_col="vec_id", vec_col="embedding",
-            k=5, dim=64, cents=cents, books=books, nprobe=4,
-            rerank_shortlist=40, index=spark.read.parquet(f"{path}/lists"),
-        )
-
-    return get(
-        "grown_probe", spark, (sf_dir, "ivfpq-grown-cold", dir_fingerprint(path)),
-        build,
+    return mount(
+        spark, sf_dir, IVFPQ, "grown_probe", "ivfpq-grown-cold",
+        (ivfpq_grown_artifact_dir(sf_dir),),
+        _ivfpq_serving_probe(spark, sf_dir, grown=True),
+        bootstrap=lambda: streaming_index_growth(spark, sf_dir),
     )
 
 
 def lsh_grown_maint_artifact_dir(sf_dir: str, modulus: int = 97) -> str:
-    """Stable content-keyed path of the MAINTAINED grown dedup index
-    (r13): the grown content minus the deterministic tombstone batch is a
-    pure function of corpus + model params + retraction rule, so the key
-    extends the grown key with the rule — maintenance re-publishes under
-    a NEW address instead of mutating the artifact a concurrent reader
-    may be serving (the store's append-only discipline)."""
-    from ..operators.artifacts import stable_artifact_dir
-    from .dedup import _LSH_MODEL_PARAMS
+    """Stable content-keyed path of the MAINTAINED grown dedup index:
+    the grown key extended by the retraction rule, so maintenance
+    re-publishes under a NEW address instead of mutating the artifact a
+    concurrent reader may be serving."""
+    from .dedup import LSH
 
-    return stable_artifact_dir(
-        "lshgrownmaint", sf_dir,
-        _LSH_MODEL_PARAMS + ("grown", f"del{modulus}"),
-        tables=("documents",),
-    )
+    return artifact_dir(LSH, sf_dir, "grownmaint", ("grown", f"del{modulus}"))
 
 
 def _grown_maint_oracle() -> str:
@@ -1455,65 +1044,47 @@ def _grown_maint_oracle() -> str:
     tags=("dedup", "lsh", "incremental", "audit", "storage"),
 )
 def dedup_lsh_grown_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maintenance COMPOSED over the durable grown artifact (r13, VERDICT
-    r12 task 5 — "the maintenance contract provably applies to the
-    artifact a deployment actually serves"): mount the GROWN dedup index
-    from the stable store (bootstrapping via the growth stream only if
-    absent, like the cold probes), tombstone-delete the retraction batch
-    (``doc_id % 97 = 0`` — ``dedup_lsh_index_delete``'s production-
-    selectivity rule) out of BOTH mounted legs, RE-PUBLISH the maintained
-    index to a new content-keyed address, and emit the per-band delete
-    audit with the after-side read back from the PUBLISHED parquet — so
-    grow -> delete -> re-publish -> audit all run against durable state,
-    not the session-fitted index. Conservation (rows_before -
-    rows_removed = rows_after, both legs) is pinned in
-    tests/test_r13_queries.py, along with a fit-and-growth-forbidden
-    cold-mount row-equality check.
+    """Maintenance COMPOSED over the durable grown artifact: mount the
+    GROWN dedup index (bootstrapping via the growth stream only if
+    absent), tombstone-delete the retraction batch (``doc_id % 97 = 0``,
+    ``dedup_lsh_index_delete``'s rule) out of BOTH legs, RE-PUBLISH the
+    maintained index under its own content-keyed address, and emit the
+    per-band delete audit with the after-side read back from the
+    published parquet — grow -> delete -> re-publish -> audit all run
+    against durable state. Conservation (rows_before - rows_removed =
+    rows_after, both legs) and a fit-and-growth-forbidden cold mount
+    are pinned in tests/test_r13_queries.py.
 
     Scale shape: the tombstone set rides BROADCAST left-anti hash joins
-    over the mounted parquet scans (no index shuffle — the
-    ``dedup_lsh_index_delete`` posture); the re-publish writes the
-    surviving rows once (atomic, idempotent — no-op when the maintained
-    artifact already exists); both audit rollups run at band grain. No
-    signature expression anywhere: maintenance edits rows, never the
-    frozen signer."""
-    from ..operators.artifacts import artifact_complete, publish_artifact
+    over the mounted parquet scans (no index shuffle); the re-publish
+    writes the surviving rows once; both audit rollups run at band
+    grain. No signature expression anywhere."""
+    from .dedup import LSH
 
     path = lsh_grown_artifact_dir(sf_dir)
-    if not artifact_complete(path):
-        # bootstrap once: run the growth stream, which publishes on commit
-        streaming_lsh_index_growth(spark, sf_dir)
-
-    (docs,) = load(spark, sf_dir, "documents")
-    tomb = docs.filter(F.col("doc_id") % 97 == 0).select(
-        F.col("doc_id").alias("__tomb_id")
-    )
     mart = lsh_grown_maint_artifact_dir(sf_dir, modulus=97)
-    if not artifact_complete(mart):
 
-        def _publish(staging: str) -> None:
-            for leg in ("banded", "toks"):
-                (
-                    spark.read.parquet(f"{path}/{leg}")
-                    .join(
-                        F.broadcast(tomb),
-                        F.col("id") == F.col("__tomb_id"),
-                        "left_anti",
-                    )
-                    .write.mode("overwrite")
-                    .parquet(f"{staging}/{leg}")
-                )
+    def bootstrap() -> None:
+        if not artifact_complete(path):
+            # run the growth stream, which publishes on commit
+            streaming_lsh_index_growth(spark, sf_dir)
+        (docs,) = load(spark, sf_dir, "documents")
+        tomb = F.broadcast(
+            docs.filter(F.col("doc_id") % 97 == 0).select(
+                F.col("doc_id").alias("__tomb_id")
+            )
+        )
+        publish(spark, LSH, mart, lambda: tuple(
+            leg.join(tomb, F.col("id") == F.col("__tomb_id"), "left_anti")
+            for leg in mounted(spark, LSH, path)
+        ))
 
-        publish_artifact(mart, _publish)
-
-    def build() -> DataFrame:
-        banded_before = spark.read.parquet(f"{path}/banded")
-        banded_after = spark.read.parquet(f"{mart}/banded")
-        fb = banded_before.groupBy("band_id").agg(
+    def audit(grown: tuple, maintained: tuple) -> DataFrame:
+        fb = grown[0].groupBy("band_id").agg(
             F.count(F.lit(1)).cast("long").alias("rows_before"),
             F.countDistinct("band_hash").cast("long").alias("buckets_before"),
         )
-        sb = banded_after.groupBy("band_id").agg(
+        sb = maintained[0].groupBy("band_id").agg(
             F.count(F.lit(1)).cast("long").alias("rows_after"),
             F.countDistinct("band_hash").cast("long").alias("buckets_after"),
         )
@@ -1538,8 +1109,7 @@ def dedup_lsh_grown_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return get(
-        "grown_probe", spark,
-        (sf_dir, "lsh-grown-maint", dir_fingerprint(path), dir_fingerprint(mart)),
-        build,
+    return mount(
+        spark, sf_dir, LSH, "grown_probe", "lsh-grown-maint", (path, mart), audit,
+        bootstrap,
     )

@@ -21,6 +21,7 @@ from ..operators.similarity import (
     norm_expr,
 )
 from ..operators.caching import get, store
+from ..operators.index_lifecycle import IndexSpec, artifact_dir, mount, mounted, persisted
 from ..tables import load
 from . import register
 
@@ -276,15 +277,11 @@ SELECT query_id, neighbor_id, ROUND(cosine, 4) AS cosine_r, rank FROM (
 # like the index) — the resident unit-corpus legitimacy class. Repeat
 # invocations therefore measure EXECUTION against the resident index,
 # the serving-loop steady state.
-def _probe_frame(spark: SparkSession, sf_dir: str, entry: str, build, fingerprint: str | None = None):
-    """``fingerprint`` (ADVICE r11): entries that serve from a DURABLE
-    on-disk artifact must key their compiled plan on a digest of the
-    artifact's data files (``dir_fingerprint``), matching the LSH probe
-    family's discipline — now that artifacts survive the session and are
-    externally deletable, a mid-session wipe+rebuild would otherwise
-    leave the cached plan bound to deleted part-files. Session-resident
-    indexes (checkpointed in-memory) keep the plain key."""
-    return get("ann_probe_frame", spark, (sf_dir, entry, fingerprint), build)
+def _probe_frame(spark: SparkSession, sf_dir: str, entry: str, build):
+    """Entries that serve from a durable on-disk artifact compile through
+    ``index_lifecycle.mount`` instead, keyed on a ``dir_fingerprint`` of
+    the artifact's files."""
+    return get("ann_probe_frame", spark, (sf_dir, entry), build)
 
 
 def ivf_index_cached(
@@ -2283,6 +2280,24 @@ def ivfpq_index_cached(
     )
 
 
+def _ivfpq_serving_probe(spark: SparkSession, sf_dir: str, grown: bool = False):
+    """The top-5 probe over a mounted ``(cents, books, lists)`` index. A
+    grown index also holds the held-out batch, so its probe searches
+    batch ∪ corpus and every query retrieves its own added vector."""
+    from ..operators.similarity import ivfpq_knn
+
+    def probe(index: tuple) -> DataFrame:
+        cents, books, lists = index
+        q, c = _pq_unit_corpus(spark, sf_dir)
+        return ivfpq_knn(
+            q.unionByName(c) if grown else c, q, id_col="vec_id",
+            vec_col="embedding", k=5, dim=64, cents=cents, books=books,
+            nprobe=4, rerank_shortlist=40, index=lists,
+        )
+
+    return probe
+
+
 @register("ann_ivfpq_topk", oracle=_ivfpq_ann_oracle(), tags=("vector", "ivf", "pq"))
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-5 via COMPOSED IVF-PQ (VERDICT r6 task 2 — retires
@@ -2300,90 +2315,104 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_operators.py; index comes from ``ivfpq_index_cached`` so
     repeated invocations measure PROBE cost (bench reports
     ann_ivfpq_fit / ann_ivfpq_probe apart). Probe plan compiled once per
-    session+model (``_probe_frame``)."""
-    from ..operators.similarity import ivfpq_knn
-
-    def build() -> DataFrame:
-        q, c = _pq_unit_corpus(spark, sf_dir)
-        cents, books, index = ivfpq_index_cached(
-            spark, sf_dir, dim=64, n_cells=16, coarse_iter=3, m=8, k=16,
-            pq_iter=3,
-        )
-        return ivfpq_knn(
-            c, q, id_col="vec_id", vec_col="embedding", k=5, dim=64,
-            cents=cents, books=books, nprobe=4, rerank_shortlist=40,
-            index=index,
-        )
-
-    return _probe_frame(spark, sf_dir, "ann_ivfpq_topk", build)
+    session+model (``_probe_frame``); the persisted and cold entries run
+    the same probe over a mounted copy of the index."""
+    return _probe_frame(
+        spark, sf_dir, "ann_ivfpq_topk",
+        lambda: _ivfpq_serving_probe(spark, sf_dir)(ivfpq_index_cached(spark, sf_dir)),
+    )
 
 
 # model parameters baked into the artifact key (the registered entries'
 # frozen config: 64-dim unit vectors, 16 coarse cells x 3 Lloyd rounds,
-# 8x16 sub-codebooks x 3 rounds, exact-integer means)
+# 8x16 sub-codebooks x 3 rounds, exact-integer means — the defaults of
+# ivfpq_index_cached)
 _IVFPQ_MODEL_PARAMS = (
     "dim64", "cells16", "ci3", "m8", "k16", "pi3", "exact-mean",
 )
 
 
-def ivfpq_artifact_dir(sf_dir: str) -> str:
-    """The stable, content-keyed path of the persisted IVF-PQ serving
-    artifact — a pure function of the embeddings files + model params (no
-    session state), so ANY process resolves the same artifact."""
-    from ..operators.artifacts import stable_artifact_dir
-
-    return stable_artifact_dir(
-        "ivfpqidx", sf_dir, _IVFPQ_MODEL_PARAMS, tables=("embeddings",)
-    )
-
-
-def _ivfpq_persisted_dir(
-    spark: SparkSession, sf_dir: str, artifact_dir: str | None = None
-) -> str:
-    """The persisted serving artifact's STABLE dir (model/ one-row
-    parquet of centroids+codebooks, lists/ the inverted-list rows),
-    published from the resident index if absent — the durable handoff
-    between the offline fit job and the serving job. Content-keyed and
-    durable since r11 (operators/artifacts.py): a fresh session over the
-    same corpus+config mounts the same path instead of silently
-    re-fitting."""
-    from ..operators.artifacts import published
-
-    def _build(staging: str) -> None:
-        cents, books, index = ivfpq_index_cached(
-            spark, sf_dir, dim=64, n_cells=16, coarse_iter=3, m=8, k=16,
-            pq_iter=3,
-        )
-        index.write.mode("overwrite").parquet(f"{staging}/lists")
-        spark.createDataFrame(
-            [(cents, books)],
-            "cents array<array<double>>, books array<array<array<double>>>",
-        ).write.mode("overwrite").parquet(f"{staging}/model")
-
-    return published(
-        "ivfpq_persisted", spark, artifact_dir or ivfpq_artifact_dir(sf_dir), _build
-    )
+def _ivfpq_write(spark: SparkSession, staging: str, index: tuple) -> None:
+    """lists/ the inverted-list rows, model/ one row of centroids and
+    codebooks (parquet doubles are IEEE-exact, so a mounted model is
+    bit-identical to the fitted one)."""
+    cents, books, lists = index
+    lists.write.mode("overwrite").parquet(f"{staging}/lists")
+    spark.createDataFrame(
+        [(cents, books)],
+        "cents array<array<double>>, books array<array<array<double>>>",
+    ).write.mode("overwrite").parquet(f"{staging}/model")
 
 
-def ivfpq_index_persisted(
-    spark: SparkSession, sf_dir: str, artifact_dir: str | None = None
-) -> tuple:
-    """Persist the resident IVF-PQ index to its STABLE content-keyed
-    parquet artifact (build-once, publish-atomic — FAISS ``write_index``),
-    then LOAD it back — centroids, sub-codebooks, and inverted lists all
-    round-trip through storage (parquet doubles are IEEE-exact, so the
-    reloaded model is bit-identical to the fitted one). Returns
-    (cents, books, lists_df) read from disk. Since r11 the artifact
-    SURVIVES the session: a different process over the same corpus mounts
-    the path and serves without any fit work (``ann_ivfpq_cold_reload``;
-    fit-forbidden pin in tests/test_r11_queries.py). ``artifact_dir``
-    overrides the resolved path for callers managing their own store."""
-    scratch = _ivfpq_persisted_dir(spark, sf_dir, artifact_dir)
-    row = spark.read.parquet(f"{scratch}/model").collect()[0]
+def _ivfpq_read(spark: SparkSession, path: str) -> tuple:
+    """One O(model) row rehydrates centroids and codebooks as plan
+    literals; the lists stay a parquet scan."""
+    row = spark.read.parquet(f"{path}/model").collect()[0]
     cents = [[float(x) for x in c] for c in row["cents"]]
     books = [[[float(x) for x in c] for c in b] for b in row["books"]]
-    lists = spark.read.parquet(f"{scratch}/lists")
-    return cents, books, lists
+    return cents, books, spark.read.parquet(f"{path}/lists")
+
+
+def _ivfpq_seed(spark: SparkSession, sf_dir: str, base: str, grown: str) -> None:
+    import shutil
+
+    shutil.copytree(f"{base}/lists", f"{grown}/lists/__sb=-1", dirs_exist_ok=True)
+
+
+def _ivfpq_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The held-out batch (vec_id < 10, the catalog-wide ANN batch
+    convention) — the SAME unit vectors the frozen model never saw and
+    ``ann_ivfpq_add_batch`` encodes, with their filterable label.
+    Doubles round-trip exactly through Spark's JSON writer (shortest
+    round-trip decimals), so the streamed rows are bit-equal to the
+    batch path's."""
+    q, _ = _pq_unit_corpus(spark, sf_dir)
+    return q.select("vec_id", F.col("embedding").alias("v"), "label")
+
+
+def _ivfpq_encode(index: tuple, batch: DataFrame) -> dict:
+    """Assign and encode one micro-batch against the frozen model — a
+    pure scan with the model inline as literals."""
+    from ..operators.similarity import _nearest_centroid_expr, _pq_code_expr
+
+    cents, books, _ = index
+    return {
+        "lists": batch.select(
+            F.col("vec_id").alias("corpus_id"),
+            _nearest_centroid_expr(cents, F.col("v")).alias("bucket"),
+            _pq_code_expr(F.col("v"), books, 64 // len(books)).alias("codes"),
+            F.col("label"),
+        )
+    }
+
+
+# The composed IVF-PQ serving index as a serving-index family.
+IVFPQ = IndexSpec(
+    family="ivfpq",
+    tables=("embeddings",),
+    params=_IVFPQ_MODEL_PARAMS,
+    legs=("lists",),
+    resident=lambda spark, sf_dir: ivfpq_index_cached(spark, sf_dir),
+    write=_ivfpq_write,
+    read=_ivfpq_read,
+    seed=_ivfpq_seed,
+    arrivals=_ivfpq_arrivals,
+    arrivals_schema="vec_id BIGINT, v ARRAY<DOUBLE>, label INT",
+    encode_batch=_ivfpq_encode,
+)
+
+
+def ivfpq_artifact_dir(sf_dir: str) -> str:
+    return artifact_dir(IVFPQ, sf_dir)
+
+
+def ivfpq_index_persisted(spark: SparkSession, sf_dir: str) -> tuple:
+    """The resident IVF-PQ index published to its STABLE content-keyed
+    artifact (FAISS ``write_index``) and read back as
+    ``(cents, books, lists)`` — bit-identical to the fitted model. A
+    different process over the same corpus mounts the path without any
+    fit work (``ann_ivfpq_cold_reload``)."""
+    return mounted(spark, IVFPQ, persisted(spark, sf_dir, IVFPQ))
 
 
 @register(
@@ -2392,47 +2421,21 @@ def ivfpq_index_persisted(
     tags=("vector", "ivf", "pq", "storage"),
 )
 def ann_ivfpq_persist_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe the PERSISTED serving artifact — the durability step every
-    production deployment has between the offline fit job and the
-    serving fleet (FAISS ``write_index``/``read_index``): the coarse
-    centroids, the 8x16 sub-codebooks, and the inverted code lists are
-    written to parquet once per (session, corpus) and the probe runs
-    ENTIRELY from the reloaded copy. Output must be byte-identical to
-    ``ann_ivfpq_topk``'s resident-index probe — same oracle replay, and
-    a pin in tests/test_r8_queries.py asserts row-for-row equality — so
-    this is the proof that the artifact round-trips losslessly: parquet
-    doubles are IEEE-exact, the codes are plain BIGINT arrays, and no
-    re-fit or re-encode happens on load.
+    """Probe the PERSISTED serving artifact (FAISS
+    ``write_index``/``read_index``): centroids, sub-codebooks and
+    inverted lists are written to parquet once per corpus and the probe
+    runs ENTIRELY from the reloaded copy. Rows must equal
+    ``ann_ivfpq_topk``'s (same oracle; row-equality pinned in
+    tests/test_r8_queries.py): parquet doubles are IEEE-exact, codes are
+    plain BIGINT arrays, and nothing is re-fit or re-encoded on load.
 
-    Scale shape: identical to the resident probe (the reloaded lists
-    frame joins on probed cell ids; the models inline as literals). The
-    write is paid once per corpus — at 100 TB the lists parquet is the
-    ~32x-compressed serving table a fleet mounts read-only, re-read per
-    executor at O(corpus/n_cells) per probed cell, while the re-rank
-    fetches shortlist raw vectors from the session's RESIDENT
-    unit-vector store (``_pq_unit_corpus`` — since r10 a checkpointed
-    artifact, the FAISS vectors-live-in-the-index posture). Probe plan
-    compiled once per session+model (``_probe_frame``)."""
-    from ..operators.caching import dir_fingerprint
-    from ..operators.similarity import ivfpq_knn
-
-    # resolve (and if needed publish) the artifact path WITHOUT paying the
-    # model rehydration per invocation — the O(model) collect lives inside
-    # build(), which the fingerprint-keyed probe frame amortizes
-    art = _ivfpq_persisted_dir(spark, sf_dir)
-
-    def build() -> DataFrame:
-        q, c = _pq_unit_corpus(spark, sf_dir)
-        cents, books, lists = ivfpq_index_persisted(spark, sf_dir)
-        return ivfpq_knn(
-            c, q, id_col="vec_id", vec_col="embedding", k=5, dim=64,
-            cents=cents, books=books, nprobe=4, rerank_shortlist=40,
-            index=lists,
-        )
-
-    return _probe_frame(
-        spark, sf_dir, "ann_ivfpq_persist_probe", build,
-        fingerprint=dir_fingerprint(art),
+    Scale shape: the resident probe's — the reloaded lists join on probed
+    cell ids, the model inlines as literals, and the shortlist re-rank
+    fetches raw vectors from the resident unit-vector store
+    (``_pq_unit_corpus``)."""
+    return mount(
+        spark, sf_dir, IVFPQ, "ann_probe_frame", "ann_ivfpq_persist_probe",
+        (persisted(spark, sf_dir, IVFPQ),), _ivfpq_serving_probe(spark, sf_dir),
     )
 
 
@@ -2442,46 +2445,17 @@ def ann_ivfpq_persist_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("vector", "ivf", "pq", "storage"),
 )
 def ann_ivfpq_cold_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COLD-START serving from the stable artifact path (r11, VERDICT r10
-    task 3): resolve the content-keyed artifact dir — a pure function of
-    the corpus files and model params, NO session-cached model or index
-    handle consulted — bootstrap it once if absent, then serve the probe
-    ENTIRELY from the mounted path: one O(model) parquet row rehydrates
-    the centroids+codebooks as plan literals, the lists parquet feeds the
-    celled join. This is FAISS ``read_index`` as deployed: the serving
-    fleet mounts the path the offline fit job published and a fresh
-    process serves without running a single Lloyd round — pinned in
-    tests/test_r11_queries.py by clearing every in-memory model/index
-    cache, monkeypatching the fit entry points to raise, and checking
-    row-equality to the resident-index probe.
-
-    Scale shape: identical to ``ann_ivfpq_persist_probe`` (celled ADC
-    over the reloaded lists, raw vectors only for the shortlist re-rank
-    from the resident unit-vector store — the store is normalization of
-    raw storage, not fit state). The only difference is WHERE the path
-    comes from, which is the entry's whole claim."""
-    from ..operators.artifacts import artifact_complete
-    from ..operators.caching import dir_fingerprint
-    from ..operators.similarity import ivfpq_knn
-
-    path = ivfpq_artifact_dir(sf_dir)
-    if not artifact_complete(path):
-        ivfpq_index_persisted(spark, sf_dir)  # bootstrap once, publish-atomic
-
-    def build() -> DataFrame:
-        q, c = _pq_unit_corpus(spark, sf_dir)
-        row = spark.read.parquet(f"{path}/model").collect()[0]
-        cents = [[float(x) for x in cc] for cc in row["cents"]]
-        books = [[[float(x) for x in c2] for c2 in b] for b in row["books"]]
-        return ivfpq_knn(
-            c, q, id_col="vec_id", vec_col="embedding", k=5, dim=64,
-            cents=cents, books=books, nprobe=4, rerank_shortlist=40,
-            index=spark.read.parquet(f"{path}/lists"),
-        )
-
-    return _probe_frame(
-        spark, sf_dir, "ann_ivfpq_cold_reload", build,
-        fingerprint=dir_fingerprint(path),
+    """COLD-START serving from the stable artifact path — FAISS
+    ``read_index`` as deployed: resolve the content-keyed dir (no
+    session-cached model or index consulted), bootstrap it once if
+    absent, and serve ``ann_ivfpq_persist_probe``'s plan ENTIRELY from the
+    mounted path. Pinned in tests/test_r11_queries.py: with every
+    model/index cache cleared and the fit entry points forbidden, rows
+    equal the resident-index probe's."""
+    return mount(
+        spark, sf_dir, IVFPQ, "ann_probe_frame", "ann_ivfpq_cold_reload",
+        (ivfpq_artifact_dir(sf_dir),), _ivfpq_serving_probe(spark, sf_dir),
+        bootstrap=lambda: persisted(spark, sf_dir, IVFPQ),
     )
 
 

@@ -220,21 +220,29 @@ def lineage_instant() -> str:
     return datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ")
 
 
+def lineage_record(rec: dict, instant: str) -> str:
+    """One fetched record wrapped in the lineage envelope the reference
+    adds (src/main.py:33-40), serialized with sorted keys. Every fetch path
+    (``fetch_stripe`` and the ``vmhub_stream`` source) lands records
+    through it."""
+    return json.dumps(
+        {**rec, "ingestion_timestamp": instant, "source_system": "VMHUB"},
+        sort_keys=True,
+    )
+
+
 def fetch_stripe(
     ing: RestIngestor, date: str, instant: str, slot: int = 0, n_slots: int = 1
 ) -> list[tuple[str, int, str]]:
     """One stripe of one date as ``(date, page, record)`` rows: ``fetch_all``
-    over pages slot, slot+n_slots, ..., each record wrapped in the lineage
-    envelope the reference adds (src/main.py:33-40) and serialized with
-    sorted keys. Shared by the ``mapInPandas`` fetch and the ``vmhub`` data
-    source, so both land the same records."""
+    over pages slot, slot+n_slots, ..., each record a ``lineage_record``.
+    Shared by the ``mapInPandas`` fetch and the ``vmhub`` data source, so
+    both land the same records."""
     rows: list[tuple[str, int, str]] = []
     pages = ing.fetch_all(start_page=slot, stride=n_slots)
     for stripe_no, page_rows in enumerate(pages):
         page_no = slot + stripe_no * n_slots
-        for rec in page_rows:
-            rec = {**rec, "ingestion_timestamp": instant, "source_system": "VMHUB"}
-            rows.append((date, page_no, json.dumps(rec, sort_keys=True)))
+        rows += [(date, page_no, lineage_record(rec, instant)) for rec in page_rows]
     return rows
 
 

@@ -40,12 +40,11 @@ from pyspark.sql.datasource import (
 
 from .rest import (
     EndpointConfig,
-    FatalHTTPError,
     MockVMHubAPI,
-    NoMoreDataError,
     RestIngestor,
     fetch_stripe,
     lineage_instant,
+    lineage_record,
 )
 
 
@@ -114,8 +113,14 @@ class VMHubSimpleStreamReader(SimpleDataSourceStreamReader):
       trigger re-polls, which is the reference's daily re-fetch semantics.
     * ``readBetweenOffsets`` replays a committed page range
       deterministically for recovery — pagination is offset-addressed, so
-      replay is exact (the property the reference leans on for its
-      truncate-reload idempotency).
+      replay is exact for the record payloads (the property the reference
+      leans on for its truncate-reload idempotency).
+
+    Pages are fetched by ``RestIngestor.fetch_all`` (retry, EOF and bisect,
+    as in the batch sources) and every record carries the lineage envelope
+    (``lineage_record``), stamped with one ``lineage_instant`` per
+    ``read`` / ``readBetweenOffsets`` call: a replayed range carries its
+    own ingest instant, not the original read's.
     """
 
     def __init__(self, options: dict) -> None:
@@ -136,27 +141,20 @@ class VMHubSimpleStreamReader(SimpleDataSourceStreamReader):
         return {"next_page": 0}
 
     def _fetch_pages(self, first_page: int, max_pages: int):
-        ing = self._ingestor()
-        rows_out: list[tuple] = []
-        page = first_page
-        for _ in range(max_pages):
-            try:
-                rows = ing._fetch_with_backoff(page, self.page_size)
-            except NoMoreDataError:
-                break
-            except FatalHTTPError:
-                raise
-            except Exception:
-                rows = ing._bisect_page(page)
-                if not rows:
-                    break
-            if not rows:
-                break
-            rows_out.extend(
-                (page, json.dumps(r, sort_keys=True)) for r in rows
+        # fetch_all's max_pages is an absolute page bound: pages first_page
+        # .. first_page + max_pages - 1, ending early on the first empty page
+        pages = list(
+            self._ingestor().fetch_all(
+                max_pages=first_page + max_pages, start_page=first_page
             )
-            page += 1
-        return rows_out, page
+        )
+        instant = lineage_instant()
+        rows = [
+            (first_page + i, lineage_record(rec, instant))
+            for i, page_rows in enumerate(pages)
+            for rec in page_rows
+        ]
+        return rows, first_page + len(pages)
 
     def read(self, start: dict):
         rows, next_page = self._fetch_pages(
