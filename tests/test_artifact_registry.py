@@ -148,6 +148,10 @@ def test_invalidate_lsh_index_drops_everything_built_from_it(
     def plan(df) -> str:
         return df._jdf.queryExecution().analyzed().toString()
 
+    # pair sets left by earlier tests may be built from the published
+    # artifact alone (no edge to the index); start from none, so the
+    # pair-set key asserted on below is the one built here
+    invalidate("lsh_pairs")
     invalidate("lsh_index")
     old_banded, _ = dq.lsh_index_cached(spark, sf_dir)
     old_probe = dq.dedup_incremental_lsh(spark, sf_dir)
@@ -160,13 +164,14 @@ def test_invalidate_lsh_index_drops_everything_built_from_it(
     }
     for name, key in built_from_index.items():
         assert key in store(name), name
-    assert [k for k in store("lsh_pairs") if k[1] == sf_dir]
+    pair_keys = [k for k in store("lsh_pairs") if k[1] == sf_dir]
+    assert pair_keys
     assert leaf(old_banded) in plan(old_probe)
 
     invalidate("lsh_index")
     for name, key in built_from_index.items():
         assert key not in store(name), name
-    assert not [k for k in store("lsh_pairs") if k[1] == sf_dir]
+    assert not [k for k in pair_keys if k in store("lsh_pairs")]
 
     new_banded, _ = dq.lsh_index_cached(spark, sf_dir)
     new_probe = dq.dedup_incremental_lsh(spark, sf_dir)

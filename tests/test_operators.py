@@ -578,8 +578,9 @@ def test_pq_knn_recall_and_determinism(spark):
     from vmhub_data_pipeline_spark.operators.similarity import (
         brute_force_knn,
         dot_expr,
-        pq_fit,
+        lloyd_fit,
         pq_knn,
+        pq_levels,
     )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -594,7 +595,7 @@ def test_pq_knn_recall_and_determinism(spark):
         (r["query_id"], r["neighbor_id"])
         for r in brute_force_knn(c, q, "vec_id", "embedding", k=5).collect()
     }
-    books = pq_fit(c, "vec_id", "embedding", dim=64, m=8, k=16, max_iter=3)
+    books = lloyd_fit(c, "vec_id", "embedding", pq_levels(64, 8, 16, 3))
     run = lambda: {  # noqa: E731
         (r["query_id"], r["corpus_id"])
         for r in pq_knn(
@@ -845,26 +846,30 @@ def test_dlit_literal_round_trip(spark):
     ]
 
 
-@pytest.mark.slow
 def test_ivfpq_fit_fused_bit_identical_to_sequential(spark):
-    """ivfpq_fit_fused (r8) must produce BIT-identical models to running
-    kmeans_fit then pq_fit — the fusion is a job-count optimization, and
-    the DuckDB oracle replay depends on exact equality."""
+    """The fused IVF-PQ fit (the coarse level and the m PQ levels in one
+    lloyd_fit) must produce BIT-identical models to separate single-level
+    runs — fusion is a job-count optimization, and the DuckDB oracle
+    replay depends on exact equality. The coarse level runs more rounds
+    than the PQ levels, so rounds where only some levels are live are
+    covered too."""
     from vmhub_data_pipeline_spark.operators.similarity import (
-        ivfpq_fit_fused,
-        kmeans_fit,
-        pq_fit,
+        Level,
+        lloyd_fit,
+        pq_levels,
     )
     from vmhub_data_pipeline_spark.queries.vector import _pq_unit_corpus
 
     _, c = _pq_unit_corpus(spark, SF)
-    cents_seq = kmeans_fit(c, "vec_id", "embedding", k=16, max_iter=3, exact_mean=True)
-    books_seq = pq_fit(
-        c, "vec_id", "embedding", dim=64, m=8, k=16, max_iter=3, exact_mean=True
-    )
-    cents_f, books_f = ivfpq_fit_fused(
-        c, "vec_id", "embedding", dim=64, n_cells=16, m=8, k=16,
-        coarse_iter=3, pq_iter=3, exact_mean=True,
+    coarse = Level(0, None, 16, 4)
+    books_levels = pq_levels(64, 8, 16, 3)
+    (cents_seq,) = lloyd_fit(c, "vec_id", "embedding", [coarse], exact_mean=True)
+    books_seq = [
+        lloyd_fit(c, "vec_id", "embedding", [lv], exact_mean=True)[0]
+        for lv in books_levels
+    ]
+    cents_f, *books_f = lloyd_fit(
+        c, "vec_id", "embedding", [coarse, *books_levels], exact_mean=True
     )
     assert cents_f == cents_seq
     assert books_f == books_seq

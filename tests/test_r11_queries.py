@@ -392,7 +392,7 @@ def test_ann_cold_reload_serves_without_any_fit(spark, sf_dir, monkeypatch):
         _forbidden,
     )
     monkeypatch.setattr(
-        "vmhub_data_pipeline_spark.operators.similarity.ivfpq_fit_fused",
+        "vmhub_data_pipeline_spark.operators.similarity.lloyd_fit",
         _forbidden,
     )
     cold = Q["ann_ivfpq_cold_reload"].fn(spark, sf_dir)
@@ -443,8 +443,9 @@ def test_opq_beats_pq_on_anisotropic_fixture(spark):
     import pyspark.sql.functions as F2
     from vmhub_data_pipeline_spark.operators.similarity import (
         checkpoint_index,
-        pq_fit,
+        lloyd_fit,
         pq_knn,
+        pq_levels,
     )
     from vmhub_data_pipeline_spark.queries.vector import (
         _opq_transform,
@@ -467,9 +468,8 @@ def test_opq_beats_pq_on_anisotropic_fixture(spark):
     queries = _fixture_frames(spark, mk(24, 100_000))
     truth = _ann_truth(corpus, queries)
 
-    books_raw = pq_fit(
-        corpus, "vec_id", "embedding", dim=dim, m=8, k=16, max_iter=3,
-        exact_mean=True,
+    books_raw = lloyd_fit(
+        corpus, "vec_id", "embedding", pq_levels(dim, 8, 16, 3), exact_mean=True
     )
     r_pq = _ann_recall(
         pq_knn(corpus, queries, "vec_id", "embedding", k=5, dim=dim,
@@ -481,9 +481,8 @@ def test_opq_beats_pq_on_anisotropic_fixture(spark):
     )
     rot_c = checkpoint_index(_opq_transform(corpus, w, perm, dim))
     rot_q = _opq_transform(queries, w, perm, dim)
-    books_rot = pq_fit(
-        rot_c, "vec_id", "embedding", dim=dim, m=8, k=16, max_iter=3,
-        exact_mean=True,
+    books_rot = lloyd_fit(
+        rot_c, "vec_id", "embedding", pq_levels(dim, 8, 16, 3), exact_mean=True
     )
     r_opq = _ann_recall(
         pq_knn(rot_c, rot_q, "vec_id", "embedding", k=5, dim=dim,
@@ -515,7 +514,8 @@ def test_residual_beats_vector_coded_on_clustered_fixture(spark):
         ivfpq_knn,
         ivfpq_residual_knn,
         kmeans_fit,
-        pq_fit,
+        lloyd_fit,
+        pq_levels,
     )
 
     dim = 64
@@ -538,9 +538,8 @@ def test_residual_beats_vector_coded_on_clustered_fixture(spark):
     cents = kmeans_fit(
         corpus, "vec_id", "embedding", k=16, max_iter=3, exact_mean=True
     )
-    books_vec = pq_fit(
-        corpus, "vec_id", "embedding", dim=dim, m=8, k=16, max_iter=3,
-        exact_mean=True,
+    books_vec = lloyd_fit(
+        corpus, "vec_id", "embedding", pq_levels(dim, 8, 16, 3), exact_mean=True
     )
     r_vec = _ann_recall(
         ivfpq_knn(corpus, queries, id_col="vec_id", vec_col="embedding",
@@ -555,9 +554,8 @@ def test_residual_beats_vector_coded_on_clustered_fixture(spark):
             "embedding"
         ),
     )
-    books_res = pq_fit(
-        res, "vec_id", "embedding", dim=dim, m=8, k=16, max_iter=3,
-        exact_mean=True,
+    books_res = lloyd_fit(
+        res, "vec_id", "embedding", pq_levels(dim, 8, 16, 3), exact_mean=True
     )
     r_res = _ann_recall(
         ivfpq_residual_knn(corpus, queries, id_col="vec_id",

@@ -77,7 +77,6 @@ def test_ivf_multi_corpus_partitions_bounded(spark, sf_dir):
     assert c.rdd.getNumPartitions() <= scan_parts + 6
 
 
-@pytest.mark.slow
 def test_grouped_kmeans_fit_matches_per_cell_fits(spark, sf_dir):
     """ann_ivf_rebalance_all's grouped Lloyd (one job per round for ALL
     hot cells) must return bit-identical models to the per-cell
@@ -100,7 +99,7 @@ def test_grouped_kmeans_fit_matches_per_cell_fits(spark, sf_dir):
     for g, k in k_by.items():
         solo = kmeans_fit(
             mem.filter(F.col("cell") == g).select("id", "v"),
-            "id", "v", k=k, max_iter=2, exact_mean=True, materialize=False,
+            "id", "v", k=k, max_iter=2, exact_mean=True,
         )
         assert grouped[g] == solo, f"cell {g} diverged"
 

@@ -111,6 +111,29 @@ def test_lazy_checkpoint_keeps_its_width(spark):
     assert checkpoint_index(df, eager=False).rdd.getNumPartitions() == 16
 
 
+def test_fit_reads_a_resident_input_as_it_is(spark):
+    """A fit's input is materialized once: a checkpointed frame (a filter
+    of one included) is read as it is, from the same blocks; a scan or
+    local rows are spread and checkpointed."""
+    from vmhub_data_pipeline_spark.operators.similarity import _fit_frame, _is_resident
+
+    def leaf_rdds(df) -> set[int]:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        return {leaves.apply(i).rdd().id() for i in range(leaves.size())}
+
+    scan = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("v")
+    )
+    local = spark.createDataFrame([(1, [1.0])], "id long, v array<double>")
+    resident = checkpoint_index(scan).filter(F.col("id") >= 10)
+    assert not _is_resident(scan) and not _is_resident(local)
+    assert _is_resident(resident)
+    kept = _fit_frame(resident, F.col("id"), F.col("v"))
+    assert leaf_rdds(kept) == leaf_rdds(resident)
+    for df in (scan, local):
+        assert _is_resident(_fit_frame(df, F.col("id"), F.col("v")))
+
+
 def test_small_resident_frame_plans_as_broadcast(spark):
     """A resident frame keeps its statistics, so a 10-row checkpoint
     joined to a checkpointed corpus is a broadcast in the initial
@@ -224,3 +247,49 @@ def test_index_lifecycle_is_written_once():
     offenders = [p for p in publishers if p not in PUBLISH_EXEMPT]
     assert not offenders, offenders
     assert PUBLISH_EXEMPT <= set(publishers), "stale exemption"
+
+
+def _calls_by_function(names: set[str]) -> dict[str, set[str]]:
+    """``{name: {"module.py:top_level_function", ...}}`` for every call of
+    one of ``names`` anywhere under the package."""
+    callers: dict[str, set[str]] = {n: set() for n in names}
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for top in ast.parse(path.read_text()).body:
+            where = f"{rel}:{getattr(top, 'name', '<module>')}"
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call):
+                    f = node.func
+                    name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                    if name in callers:
+                        callers[name].add(where)
+    return callers
+
+
+def test_quantizer_fits_share_one_core():
+    """One Lloyd round implementation serves the IVF / PQ / IVF-PQ family:
+    the centroid-mean regroup and the smallest-id seed collect run only
+    in the core (``lloyd_fit``) and the grouped variant, the PQ code
+    expression only in the inverted-list encoder, and no fit takes a
+    ``materialize=`` switch (the input decides)."""
+    core = {"operators/similarity.py:lloyd_fit", "operators/similarity.py:grouped_kmeans_fit"}
+    callers = _calls_by_function(
+        {"_mean_expr", "_seed_collect", "_lloyd_update", "_pq_code_expr"}
+    )
+    assert callers["_mean_expr"] == {"operators/similarity.py:_lloyd_update"}
+    assert callers["_seed_collect"] == core
+    assert callers["_lloyd_update"] == core
+    assert callers["_pq_code_expr"] == {"operators/similarity.py:encode_lists"}
+
+    materialize, defined = [], set()
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.keyword) and node.arg == "materialize":
+                materialize.append(rel)
+            if isinstance(node, ast.arg) and node.arg == "materialize":
+                materialize.append(rel)
+            if isinstance(node, ast.FunctionDef):
+                defined.add(node.name)
+    assert not materialize, materialize
+    assert not defined & {"pq_fit", "ivfpq_fit_fused", "_residual_lut_col"}

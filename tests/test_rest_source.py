@@ -48,6 +48,20 @@ def test_eof_on_empty_page():
     assert api.calls[-1][1] == 2  # probed page 2, got [], stopped
 
 
+def test_batch_stripe_lands_every_page_past_ten_thousand():
+    """A batch fetch stops only at EOF: a day of 10,005 one-record pages
+    lands every record (it once stopped silently at page 10,000)."""
+    from vmhub_data_pipeline_spark.sources.rest import fetch_stripe
+
+    recs = [{"id": i} for i in range(10_005)]
+    cfg = EndpointConfig("clientes", page_size=1)
+    api = MockVMHubAPI({"clientes": recs})
+    rows = fetch_stripe(RestIngestor(cfg, api.get), "2024-01-01", "T")
+    assert [json.loads(r)["id"] for _d, _p, r in rows] == list(range(10_005))
+    assert rows[-1][1] == 10_004
+    assert api.calls[-1][1] == 10_005  # the empty page that ended the loop
+
+
 def test_429_retries_then_succeeds():
     cfg = EndpointConfig("clientes", page_size=10)
     api = _api({("clientes", 1): [429, 429]})

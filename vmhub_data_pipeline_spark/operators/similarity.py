@@ -19,6 +19,7 @@ doubles — no Python, no UDF.
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -293,17 +294,12 @@ def lsh_bucketed_knn(
 
 def _nearest_centroid_from_col(mat: Column, vec: Column) -> Column:
     """argmin_c ||v - c||^2 where the centroid matrix arrives as a COLUMN
-    (array<array<double>>) instead of inlined literals. Iterative fits
-    (kmeans_fit, pq_fit) use this: centroid values change every Lloyd
-    round, and re-inlining them as literals forces Catalyst to re-analyze
-    and re-codegen a fresh expression tree per round (measured: the
-    per-round planning cost dwarfed the actual math at fixture scale).
-    With the matrix as broadcast DATA the generated code text is identical
-    across rounds, so Spark's codegen cache hits and planning is O(small).
-
-    Bit-parity with the literal form: dot is the same left-fold zip_with;
-    |c|^2/2 is the same left-fold sum (Python's sum() and F.aggregate both
-    fold left) divided by 2.0; argmax tie-break unchanged."""
+    (array<array<double>>) instead of inlined literals — the grouped fit's
+    per-cell model rides as data, one matrix per cell. Bit-parity with
+    the literal form (:func:`_nearest_centroid_expr`): dot is the same
+    left-fold zip_with; |c|^2/2 is the same left-fold sum (Python's sum()
+    and F.aggregate both fold left) divided by 2.0; argmax tie-break
+    unchanged."""
     scores = F.transform(
         mat,
         lambda c: dot_expr(vec, c)
@@ -313,13 +309,10 @@ def _nearest_centroid_from_col(mat: Column, vec: Column) -> Column:
 
 
 def _mean_expr(exact_mean: bool):
-    """The per-component centroid-mean aggregate over a posexploded ``col``
-    — ONE definition shared by kmeans_fit, pq_fit, and ivfpq_fit_fused,
-    because the fused fit's bit-identity guarantee to the sequential fits
-    depends on all three aggregating with byte-identical expressions.
-    ``exact_mean`` is the repo's integer-quantization convention: quantize
-    each contribution to nano-units (``floor(x*1e9 + 0.5)``, a BIGINT),
-    sum EXACTLY, then divide — two correctly-rounded IEEE ops on
+    """The per-component centroid-mean aggregate over a posexploded
+    ``col``. ``exact_mean`` is the repo's integer-quantization convention:
+    quantize each contribution to nano-units (``floor(x*1e9 + 0.5)``, a
+    BIGINT), sum EXACTLY, then divide — two correctly-rounded IEEE ops on
     exactly-representable integers, replayable by any engine that sums
     the same integers. COUNT(1) matches the oracles' COUNT(*) even if a
     vector ever carried a NULL component (ADVICE r4)."""
@@ -333,6 +326,142 @@ def _mean_expr(exact_mean: bool):
     return F.avg("col").alias("m")
 
 
+def _is_resident(df: DataFrame) -> bool:
+    """Every leaf of ``df``'s analysed plan is the ``LogicalRDD`` of a
+    materialized checkpoint: its rows are already resident blocks. (A
+    frame made from local rows is a ``LogicalRDD`` too, not a checkpoint.)"""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return all(
+        leaf.nodeName() == "LogicalRDD" and leaf.rdd().isCheckpointed()
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+    )
+
+
+def _fit_frame(df: DataFrame, *cols: Column) -> DataFrame:
+    """The rows every Lloyd round reads: ``df`` projected to ``cols``
+    (an ``id`` column among them). A resident input is fitted as it is;
+    any other input is spread and checkpointed once, so the rounds read
+    materialized blocks instead of re-planning the input per round."""
+    v = df.select(*cols)
+    return v if _is_resident(v) else checkpoint_index(spread_small_input(v, "id"))
+
+
+def _seed_collect(v: DataFrame, n: int, group: str | None = None) -> dict:
+    """The smallest-id seeds: the ``n`` smallest-id vectors of ``v``
+    (columns ``id``, ``v``) in id order, in one collect — per value of
+    ``group``, or under the key ``None`` when ungrouped."""
+    if group is None:
+        rows = v.orderBy("id").limit(n).collect()
+        return {None: [[float(x) for x in r["v"]] for r in rows]}
+    rn = F.row_number().over(Window.partitionBy(group).orderBy("id"))
+    rows = v.select(group, "v", rn.alias("rn")).filter(F.col("rn") <= n).collect()
+    seeds: dict = {}
+    for r in sorted(rows, key=lambda r: (r[group], r["rn"])):
+        seeds.setdefault(int(r[group]), []).append([float(x) for x in r["v"]])
+    return seeds
+
+
+def _lloyd_update(long: DataFrame, models: dict, exact_mean: bool) -> dict:
+    """One Lloyd update from ``long`` rows ``(key, c, pos, col)`` — the
+    component ``col`` at position ``pos`` of a vector assigned to centroid
+    ``c`` of model ``key``. One regroup keyed (key, centroid, component)
+    and one collect give every model its new means; an empty cluster
+    (and a model with no rows this round) keeps its previous centroid."""
+    by: dict = {}
+    for r in long.groupBy("key", "c", "pos").agg(_mean_expr(exact_mean)).collect():
+        by.setdefault((r["key"], r["c"]), {})[r["pos"]] = float(r["m"])
+    return {
+        key: [
+            [by[(key, c)][p] for p in range(len(cent))] if (key, c) in by else cent
+            for c, cent in enumerate(cents)
+        ]
+        for key, cents in models.items()
+    }
+
+
+class Level(NamedTuple):
+    """One Lloyd recursion of a fit: ``k`` centroids over the contiguous
+    slice ``start .. start + width - 1`` of the vector (``width=None``:
+    to its end), refined for ``max_iter`` rounds."""
+
+    start: int
+    width: int | None
+    k: int
+    max_iter: int
+
+
+def pq_levels(dim: int, m: int, k: int, max_iter: int) -> list[Level]:
+    """Product quantization's levels: ``m`` contiguous sub-slices of a
+    ``dim`` vector, ``k`` centroids each (Jégou et al., TPAMI'11) —
+    codebooks[m][k][dim/m], so a float vector compresses to m codes and
+    distance becomes a table lookup."""
+    if dim % m != 0:
+        raise ValueError(f"dim {dim} not divisible by m {m}")
+    sub = dim // m
+    return [Level(j * sub, sub, k, max_iter) for j in range(m)]
+
+
+def lloyd_fit(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    levels: list[Level],
+    exact_mean: bool = False,
+) -> list[list[list[float]]]:
+    """Lloyd's k-means over an embedding column, Spark-distributed, for
+    any set of independent ``levels`` at once: k-means is one full-width
+    level, PQ is ``m`` sub-slices (:func:`pq_levels`), and the composed
+    IVF-PQ fit (codes over the vectors, not residuals) is both. Returns
+    each level's centroids, in ``levels`` order.
+
+    One seed collect takes the smallest-id vectors (each level slices the
+    first ``k`` of them; a corpus smaller than ``k`` gets one centroid per
+    row). Round t is ONE job over every level with ``t < max_iter``: one
+    projection assigns each live level's slice against its centroids as a
+    literal matrix, one explode and posexplode key each component by
+    (level, centroid, position), and :func:`_lloyd_update` regroups. The
+    data never leaves executors except sum(k x width) means per round.
+
+    Bit-parity — a fused fit equals the separate single-level fits, and
+    the unrolled DuckDB oracles replay it — holds because (1) seeds are
+    the same smallest-id rows, (2) each level's argmin is the same
+    ``_nearest_centroid_expr`` fold over the same slice with the
+    lowest-index tie-break, and (3) each (level, centroid, component)
+    group aggregates exactly the same contributions: with ``exact_mean``
+    the integer sums are order-free and the division is two IEEE ops.
+    Float ``AVG`` (``exact_mean=False``) depends on summation order, so
+    only the exact mode is bit-stable."""
+    v = _fit_frame(df, F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
+    seeds = _seed_collect(v, max(lv.k for lv in levels))[None]
+    if not seeds:
+        raise ValueError("lloyd_fit: empty corpus")
+    dim = len(seeds[0])
+    spans = [(lv.start, dim - lv.start if lv.width is None else lv.width) for lv in levels]
+    models = {
+        i: [s[a : a + w] for s in seeds[: lv.k]]
+        for i, (lv, (a, w)) in enumerate(zip(levels, spans))
+    }
+    for t in range(max(lv.max_iter for lv in levels)):
+        entries = []
+        for i, lv in enumerate(levels):
+            if t >= lv.max_iter:
+                continue
+            a, w = spans[i]
+            x = F.col("v") if (a, w) == (0, dim) else F.slice(F.col("v"), a + 1, w)
+            entries.append(
+                F.struct(
+                    F.lit(i).alias("key"),
+                    _nearest_centroid_expr(models[i], x).alias("c"),
+                    x.alias("x"),
+                )
+            )
+        long = v.select(F.explode(F.array(*entries)).alias("e")).select(
+            "e.key", "e.c", F.posexplode("e.x")
+        )
+        models = _lloyd_update(long, models, exact_mean)
+    return [models[i] for i in range(len(levels))]
+
+
 def kmeans_fit(
     df: DataFrame,
     id_col: str,
@@ -340,78 +469,13 @@ def kmeans_fit(
     k: int = 16,
     max_iter: int = 5,
     exact_mean: bool = False,
-    materialize: bool = True,
 ) -> list[list[float]]:
-    """Plain Lloyd's k-means over an embedding column, Spark-distributed.
-
-    Deterministic init: the k vectors with the smallest ids. Each iteration
-    is one job: broadcast current centroids -> assign (argmin cosine-free
-    squared L2 via expression) -> groupBy centroid -> component-wise mean
-    (posexplode + avg). Centroid count k is driver-sized (k x dim floats),
-    the data never leaves executors except k centroids per iteration —
-    the standard scalable topology.
-
-    ``exact_mean`` replaces the float AVG (whose value depends on the
-    engine's summation order) with the repo's integer-quantization
-    convention: each contribution is quantized to nano-units
-    (``floor(x*1e9 + 0.5)``, a BIGINT), summed EXACTLY, then divided —
-    two correctly-rounded IEEE ops on exactly-representable integers. The
-    fitted centroids are then bit-identical on any engine that sums the
-    same integers, which is what lets a DuckDB oracle replay the whole
-    fit (see ``queries/vector.py:ann_pq_topk``). Quantization error is
-    ~1e-9 per component — far below any clustering-relevant distance.
-
-    ``materialize`` (r13, guide §2.4/§5): every Lloyd round is a
-    SEQUENTIAL job that used to re-plan the corpus subtree (scan + cast)
-    from scratch — max_iter + 1 corpus passes per fit, each riding the
-    scan's (often single) split. An eager localCheckpoint (input spread
-    across cores first) pays one materialization and every round reads
-    the resident blocks in parallel. Values are bit-identical. Pass
-    ``False`` for tiny already-resident inputs (the single-cell
-    rebalance sub-fits) where the extra jobs outweigh the saved
-    re-reads.
-    """
-    v = df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
-    if materialize:
-        v = checkpoint_index(spread_small_input(v, "id"))
-    cents = [
-        [float(x) for x in r["v"]]
-        for r in v.orderBy("id").limit(k).collect()
-    ]
-    if not cents:
-        raise ValueError("kmeans_fit: empty corpus")
-    k = min(k, len(cents))  # corpus smaller than k: one centroid per row
-    mean_expr = _mean_expr(exact_mean)
-    # r13 opt (measured, idle-host interleaved A/B): the model rides as a
-    # LITERAL matrix (one F.expr parse via _mat_sql — NOT k*dim F.lit py4j
-    # round trips) and the round collects at (c, pos) grain directly
-    # (pq_fit's shape), dropping the per-round 1-row model frame, its
-    # BroadcastExchange, and the second component-assembly groupBy. The
-    # literal form re-plans per round but the generated code TEXT is
-    # round-invariant (array literals ride as references), so codegen
-    # caches hit — per-round wall 1.55 -> 1.07 s at sf0.01/local[32]
-    # against the broadcast-column + two-groupBy shape. Bit-parity with
-    # _nearest_centroid_from_col: same zip_with dot fold, |c|^2/2
-    # precomputed by the same left-to-right Python sum, same
-    # array_position tie-break.
-    for _ in range(max_iter):
-        assigned = v.select(
-            "id", "v", _nearest_centroid_expr(cents, F.col("v")).alias("c")
-        )
-        rows = (
-            assigned.select("c", F.posexplode("v"))
-            .groupBy("c", "pos")
-            .agg(mean_expr)
-            .collect()
-        )
-        by_c: dict[int, dict[int, float]] = {}
-        for r in rows:
-            by_c.setdefault(int(r["c"]), {})[r["pos"]] = float(r["m"])
-        cents = [
-            [by_c[i][p] for p in range(len(cents[i]))] if i in by_c else cents[i]
-            for i in range(k)
-        ]
-    return cents
+    """Plain Lloyd's k-means: one full-width level of :func:`lloyd_fit`.
+    ``exact_mean`` makes the fitted centroids bit-identical on any engine
+    that sums the same integers, which is what lets a DuckDB oracle replay
+    the whole fit (see ``queries/vector.py:ann_pq_topk``); quantization
+    error is ~1e-9 per component."""
+    return lloyd_fit(df, id_col, vec_col, [Level(0, None, k, max_iter)], exact_mean)[0]
 
 
 def grouped_kmeans_fit(
@@ -423,81 +487,44 @@ def grouped_kmeans_fit(
     max_iter: int = 2,
     exact_mean: bool = True,
 ) -> dict[int, list[list[float]]]:
-    """Independent Lloyd's k-means fits over MANY disjoint cells, run as
-    ONE grouped Spark job per round (r13, guide §1.2 step 1 / §2.6): the
-    per-cell loop in ``ann_ivf_rebalance_all`` paid ``cells x (1 seed
-    collect + max_iter round jobs)`` sequential driver round-trips, a pure
-    job-scheduling floor at maintenance scale; the cells are independent
-    recursions over disjoint member sets, so round t of EVERY cell is one
-    pass over the union of hot members — ``1 + max_iter`` jobs total, and
-    the honest at-scale shape (one scan of hot members per round instead
-    of one per cell).
+    """Independent Lloyd's k-means fits over MANY disjoint cells, one
+    grouped Spark job per round: round t of every cell is one pass over
+    the union of members, ``1 + max_iter`` jobs in all instead of that
+    many per cell.
 
-    Bit-identical to looping ``kmeans_fit(materialize=False)`` per cell:
-    seeds are each cell's ``k_by_cell[cell]`` smallest-id vectors (the
-    per-cell ``orderBy(id).limit(k)``, here one partitioned row_number
-    pass); assignments use the SAME ``_nearest_centroid_from_col``
-    argmin over the cell's current centroid list (broadcast-joined per
-    cell instead of cross-joined per fit); and each (cell, centroid,
-    component) group aggregates exactly the same quantized-integer
-    contributions (``_mean_expr`` — integer sums are order-free, then the
-    same two IEEE ops). Empty clusters keep their previous centroid, per
-    cell, as in ``kmeans_fit``.
+    It shares the core's steps — input rule, smallest-id seed collect
+    (one partitioned row_number pass) and :func:`_lloyd_update` — and
+    differs only in the assignment: each cell's centroid list rides as
+    data through a broadcast join (:func:`_nearest_centroid_from_col`),
+    not as a per-fit literal. So each cell's model is bit-identical to
+    ``kmeans_fit`` over that cell alone, under the same parity conditions
+    as :func:`lloyd_fit`.
 
-    Returns ``{cell: centroids[k_by_cell[cell]][dim]}``. Driver state is
-    O(sum of models); members never leave executors except through the
-    per-round model aggregate.
-    """
-    from pyspark.sql import Window
-
-    spark = df.sparkSession
+    Returns ``{cell: centroids[k_by_cell[cell]][dim]}``."""
     cells = sorted(int(c) for c in k_by_cell)
     if not cells:
         return {}
-    mem = df.select(
-        F.col(cell_col).cast("long").alias("g"),
+    mem = _fit_frame(
+        df,
+        F.col(cell_col).cast("long").alias("key"),
         F.col(id_col).alias("id"),
         _as_double(F.col(vec_col)).alias("v"),
     )
-    max_k = max(k_by_cell.values())
-    w = Window.partitionBy("g").orderBy("id")
-    seed_rows = (
-        mem.select("g", "v", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= F.lit(max_k))
-        .collect()
-    )
-    cents: dict[int, list[list[float]]] = {c: [] for c in cells}
-    for r in sorted(seed_rows, key=lambda r: (r["g"], r["rn"])):
-        g = int(r["g"])
-        if len(cents[g]) < k_by_cell[g]:
-            cents[g].append([float(x) for x in r["v"]])
+    seeds = _seed_collect(mem, max(k_by_cell.values()), "key")
+    cents = {g: seeds.get(g, [])[: k_by_cell[g]] for g in cells}
     for g in cells:
         if not cents[g]:
             raise ValueError(f"grouped_kmeans_fit: empty cell {g}")
-    mean_expr = _mean_expr(exact_mean)
     assign_col = _nearest_centroid_from_col(F.col("__cents"), F.col("v")).alias("c")
     for _ in range(max_iter):
-        model = spark.createDataFrame(
-            [(g, [[float(x) for x in c] for c in cents[g]]) for g in cells],
-            schema="g long, __cents array<array<double>>",
+        model = df.sparkSession.createDataFrame(
+            [(g, cents[g]) for g in cells],
+            schema="key long, __cents array<array<double>>",
         )
-        assigned = mem.join(F.broadcast(model), "g").select("g", "v", assign_col)
-        rows = (
-            assigned.select("g", "c", F.posexplode("v"))
-            .groupBy("g", "c", "pos")
-            .agg(mean_expr)
-            .collect()
+        assigned = mem.join(F.broadcast(model), "key").select("key", "v", assign_col)
+        cents = _lloyd_update(
+            assigned.select("key", "c", F.posexplode("v")), cents, exact_mean
         )
-        by: dict[tuple[int, int], dict[int, float]] = {}
-        for r in rows:
-            by.setdefault((int(r["g"]), int(r["c"])), {})[r["pos"]] = float(r["m"])
-        for g in cells:
-            cents[g] = [
-                [by[(g, c)][p] for p in range(len(cents[g][c]))]
-                if (g, c) in by
-                else cents[g][c]
-                for c in range(len(cents[g]))
-            ]
     return cents
 
 
@@ -507,7 +534,7 @@ def _centroid_scores(cents: list[list[float]], vec: Column | None = None) -> Col
     chaining F.when comparisons instead nests the whole running expression
     per centroid and the tree grows exponentially with k (measured: k=16
     never finishes analysis). ``vec`` defaults to the conventional "v"
-    column; pq_fit passes subvector slices."""
+    column; PQ levels and codes pass subvector slices."""
     v = F.col("v") if vec is None else vec
     # One zip_with lambda over a literal centroid matrix, NOT k unrolled
     # dot-expression trees: the unrolled form costs O(k) aggregate/zip_with
@@ -563,13 +590,10 @@ def ivf_knn(
             exact_mean=exact_mean,
         )
     qid = query_id_col or id_col
-    if index is None:
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("v")
-        ).select("neighbor_id", F.col("v").alias("cv"), F.col("v"))
-        c = c.select("neighbor_id", "cv", _nearest_centroid_expr(cents).alias("bucket"))
-    else:
-        c = index
+    c = index if index is not None else encode_lists(
+        corpus, id_col, vec_col, cents, id_name="neighbor_id",
+        carry=(_as_double(F.col(vec_col)).alias("cv"),),
+    )
 
     q = queries.select(
         F.col(qid).alias("query_id"), _as_double(F.col(vec_col)).alias("v")
@@ -608,239 +632,51 @@ def centroids(df: DataFrame, label_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def pq_fit(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    m: int = 8,
-    k: int = 16,
-    max_iter: int = 3,
-    exact_mean: bool = False,
-    materialize: bool = True,
-) -> list[list[list[float]]]:
-    """Product-quantization codebooks: split the vector into ``m``
-    contiguous subspaces and run the distributed k-means on each — the
-    IVF-PQ storage layout (Jégou et al., TPAMI'11) that compresses a
-    float32 corpus ~32x (dim floats -> m byte codes) while keeping
-    distance computation a table lookup.
-
-    ``materialize`` — as in :func:`kmeans_fit`: pass ``False`` when the
-    caller already holds a checkpointed input (the OPQ/residual index
-    builders), so the fit doesn't re-spread and re-materialize the same
-    rows a second time.
-
-    All ``m`` sub-fits are FUSED into one Spark job per Lloyd round: a
-    single projection computes every subspace's nearest-centroid
-    assignment, one posexplode keys each component by (subspace, centroid,
-    local position), and one aggregate produces every codebook's new
-    means — 1 + max_iter driver round-trips total, where the naive
-    per-subspace loop paid m * (1 + max_iter) (measured 8x wall at m=8:
-    driver-synchronized job latency dominates the tiny per-round math).
-    The fusion is numerically inert: identical seeds (same k smallest-id
-    vectors, sliced), identical argmin expressions per slice, and the
-    per-(subspace, centroid, component) sums aggregate exactly the same
-    contributions — so fitted books are bit-identical to the sequential
-    fit and the unrolled DuckDB oracle replay is unaffected.
-
-    Returns codebooks[m][k][dim/m]. Same determinism contract as
-    kmeans_fit (smallest-id init, fixed iterations); only m*k centroid
-    vectors ever reach the driver."""
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
-    # r13: one materialization feeds every Lloyd round (see kmeans_fit)
-    v = df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
-    if materialize:
-        v = checkpoint_index(spread_small_input(v, "id"))
-    seed_rows = v.orderBy("id").limit(k).collect()
-    if not seed_rows:
-        raise ValueError("pq_fit: empty corpus")
-    k = min(k, len(seed_rows))
-    books: list[list[list[float]]] = [
-        [[float(x) for x in r["v"]][j * sub : (j + 1) * sub] for r in seed_rows[:k]]
-        for j in range(m)
-    ]
-    mean_expr = _mean_expr(exact_mean)
-    # r13 opt: each sub-codebook rides as a LITERAL matrix per round (one
-    # F.expr parse each via _mat_sql) instead of a broadcast model frame —
-    # drops the per-round 1-row createDataFrame + BroadcastExchange; the
-    # generated code text is round-invariant (literal arrays ride as
-    # references) so codegen caches hit. Bit-parity per kmeans_fit.
-    cs_col = F.array(*[F.col(f"c{j}") for j in range(m)]).alias("cs")
-    sj = F.floor(F.col("pos") / sub).cast("int")
-    long_cols = [
-        sj.alias("j"),
-        F.element_at("cs", sj + 1).alias("c"),
-        (F.col("pos") % sub).alias("pos_l"),
-        F.col("col"),
-    ]
-    for _ in range(max_iter):
-        assign_cols = [
-            _nearest_centroid_expr(
-                books[j], F.slice(F.col("v"), j * sub + 1, sub)
-            ).alias(f"c{j}")
-            for j in range(m)
-        ]
-        assigned = v.select("v", *assign_cols)
-        long = assigned.select(cs_col, F.posexplode("v")).select(*long_cols)
-        rows = long.groupBy("j", "c", "pos_l").agg(mean_expr).collect()
-        by_jc: dict[tuple[int, int], dict[int, float]] = {}
-        for r in rows:
-            by_jc.setdefault((r["j"], r["c"]), {})[r["pos_l"]] = float(r["m"])
-        books = [
-            [
-                [by_jc[(j, c)][p] for p in range(sub)]
-                if (j, c) in by_jc
-                else books[j][c]
-                for c in range(k)
-            ]
-            for j in range(m)
-        ]
-    return books
-
-
-def ivfpq_fit_fused(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    n_cells: int = 16,
-    m: int = 8,
-    k: int = 16,
-    coarse_iter: int = 3,
-    pq_iter: int = 3,
-    exact_mean: bool = False,
-) -> tuple[list[list[float]], list[list[list[float]]]]:
-    """The COMPOSED IVF-PQ fit with the coarse quantizer and all ``m``
-    sub-codebooks fused into ONE Spark job per Lloyd round (VERDICT r7
-    task 8, extending pq_fit's subspace fusion across levels): when codes
-    encode the vectors directly (``by_residual=False``), the coarse fit
-    and the sub-fits are INDEPENDENT Lloyd recursions over the same
-    corpus, so round t can compute the coarse assignment and every
-    subspace assignment in a single projection, emit each exploded
-    component to BOTH its coarse group (lvl = -1) and its subspace group
-    (lvl = j), and update all models from one aggregate. Job count drops
-    from ``2 + coarse_iter + pq_iter`` driver round-trips (two seed
-    collects + per-level rounds) to ``1 + max(coarse_iter, pq_iter)``.
-
-    Numerically inert vs running :func:`kmeans_fit` then :func:`pq_fit`:
-    one shared smallest-id seed collect slices the same rows both seeds
-    used (coarse takes the first ``n_cells`` vectors, books the first
-    ``k``, exactly the oracle's shared ``init_ids``), assignments use the
-    identical literal-matrix argmax expressions, and every
-    (level, centroid, component) group aggregates exactly the same
-    contributions — fitted models are bit-identical, so the unrolled
-    DuckDB replay (``_ivfpq_fit_ctes``) is unaffected."""
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
-    # r13: one materialization feeds every fused round (see kmeans_fit)
-    v = checkpoint_index(
-        spread_small_input(
-            df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")),
-            "id",
-        )
-    )
-    seed_rows = v.orderBy("id").limit(max(n_cells, k)).collect()
-    if not seed_rows:
-        raise ValueError("ivfpq_fit_fused: empty corpus")
-    n_cells = min(n_cells, len(seed_rows))
-    k = min(k, len(seed_rows))
-    cents = [[float(x) for x in r["v"]] for r in seed_rows[:n_cells]]
-    books: list[list[list[float]]] = [
-        [[float(x) for x in r["v"]][j * sub : (j + 1) * sub] for r in seed_rows[:k]]
-        for j in range(m)
-    ]
-    mean_expr = _mean_expr(exact_mean)
-    # r13 opt: models ride as LITERAL matrices per round (one F.expr parse
-    # per matrix via _mat_sql) instead of a broadcast model frame — drops
-    # the per-round 1-row createDataFrame + crossJoin BroadcastExchange;
-    # generated code text stays round-invariant so codegen caches hit.
-    # Bit-parity per kmeans_fit. The explode/regroup trees below ARE
-    # round-invariant and stay hoisted.
-    sj = F.floor(F.col("pos") / sub).cast("int")
-    _shapes: dict[tuple[bool, bool], tuple] = {}
-
-    def _shape(do_g: bool, do_p: bool) -> tuple:
-        cached = _shapes.get((do_g, do_p))
-        if cached is not None:
-            return cached
-        entries = []
-        if do_g:
-            entries.append(
-                F.struct(
-                    F.lit(-1).alias("lvl"),
-                    F.col("cg").alias("c"),
-                    F.col("pos").alias("p"),
-                )
-            )
-        if do_p:
-            entries.append(
-                F.struct(
-                    sj.alias("lvl"),
-                    F.element_at("cs", sj + 1).alias("c"),
-                    (F.col("pos") % sub).alias("p"),
-                )
-            )
-        pre = ["cg"] if do_g else []
-        if do_p:
-            pre.append(F.array(*[F.col(f"c{j}") for j in range(m)]).alias("cs"))
-        exploded = F.explode(F.array(*entries)).alias("e")
-        _shapes[(do_g, do_p)] = (pre, exploded)
-        return _shapes[(do_g, do_p)]
-
-    for t in range(max(coarse_iter, pq_iter)):
-        do_g = t < coarse_iter
-        do_p = t < pq_iter
-        cols = [F.col("v")]
-        if do_g:
-            cols.append(_nearest_centroid_expr(cents, F.col("v")).alias("cg"))
-        if do_p:
-            cols.extend(
-                _nearest_centroid_expr(
-                    books[j], F.slice(F.col("v"), j * sub + 1, sub)
-                ).alias(f"c{j}")
-                for j in range(m)
-            )
-        pre, exploded = _shape(do_g, do_p)
-        assigned = v.select(*cols)
-        long = (
-            assigned.select(*pre, F.posexplode("v"))
-            .select(exploded, "col")
-            .select("e.lvl", "e.c", "e.p", "col")
-        )
-        rows = long.groupBy("lvl", "c", "p").agg(mean_expr).collect()
-        by: dict[tuple[int, int], dict[int, float]] = {}
-        for r in rows:
-            by.setdefault((r["lvl"], r["c"]), {})[r["p"]] = float(r["m"])
-        if do_g:
-            cents = [
-                [by[(-1, c)][p] for p in range(dim)] if (-1, c) in by else cents[c]
-                for c in range(n_cells)
-            ]
-        if do_p:
-            books = [
-                [
-                    [by[(j, c)][p] for p in range(sub)]
-                    if (j, c) in by
-                    else books[j][c]
-                    for c in range(k)
-                ]
-                for j in range(m)
-            ]
-    return cents, books
-
-
 def _pq_code_expr(vec: Column, books: list[list[list[float]]], sub: int) -> Column:
     """array<int> of per-subspace nearest-centroid codes (the PQ encoding),
     one argmax expression per subspace over the sliced subvector."""
-    codes = []
-    for j, cents in enumerate(books):
-        sv = F.slice(vec, j * sub + 1, sub)
-        scores = _centroid_scores(cents, sv)
-        codes.append((F.array_position(scores, F.array_max(scores)) - 1).cast("int"))
-    return F.array(*codes)
+    return F.array(
+        *[
+            _nearest_centroid_expr(cents, F.slice(vec, j * sub + 1, sub))
+            for j, cents in enumerate(books)
+        ]
+    )
+
+
+def encode_lists(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    cents: list[list[float]] | None = None,
+    books: list[list[list[float]]] | None = None,
+    *,
+    residual: bool = False,
+    id_name: str = "corpus_id",
+    carry: tuple = (),
+) -> DataFrame:
+    """The inverted-list row ``(id, [bucket], [codes], *carry)`` of every
+    IVF / PQ / IVF-PQ index, encoded in one place against a frozen model:
+    ``bucket`` is the nearest of ``cents`` (when given), ``codes`` the PQ
+    codes of the vector under ``books`` (when given) — of its residual
+    against its bucket's centroid when ``residual``. ``carry`` columns
+    ride along unchanged (the stored ``label``; flat IVF's raw ``cv``).
+    Scan-side projections only, with the model inline as literals."""
+    v = _as_double(F.col(vec_col))
+    head = [F.col(id_col).alias(id_name)]
+    if cents is not None:
+        head.append(_nearest_centroid_expr(cents, v).alias("bucket"))
+    if books is None:
+        return df.select(*head, *carry)
+    # the code argmaxes re-read their input once per centroid they score,
+    # so it is staged as a column: the vector, or its residual against
+    # the staged bucket's centroid
+    staged = df.select(*head, v.alias("__x"), *carry)
+    names, carry = staged.columns[: len(head)], staged.columns[len(head) + 1 :]
+    if residual:
+        r = _residual_expr(F.col("__x"), cents, F.col("bucket"))
+        staged = staged.select(*names, r.alias("__x"), *carry)
+    codes = _pq_code_expr(F.col("__x"), books, len(books[0][0])).alias("codes")
+    return staged.select(*names, codes, *carry)
 
 
 def pq_knn(
@@ -868,12 +704,8 @@ def pq_knn(
     serving posture, where the encoded index is resident and only probes
     run per query (the re-rank still fetches raw vectors for the SHORTLIST
     only, the cold-storage fetch a production IVF-PQ does)."""
-    sub = dim // m_books if (m_books := len(books)) else 0
     if codes is None:
-        codes = corpus.select(
-            F.col(id_col).alias("corpus_id"),
-            _pq_code_expr(_as_double(F.col(vec_col)), books, sub).alias("codes"),
-        )
+        codes = encode_lists(corpus, id_col, vec_col, books=books)
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     )
@@ -887,12 +719,9 @@ def pq_knn(
     # the scored projection, re-evaluated per scanned code row, and its
     # nested-F.lit construction alone cost ~1 s of py4j driver time
     # (VERDICT r6 task 6).
-    q = q.withColumn("__lut", _query_lut_col(books, sub))
-    # left-to-right add in subspace order (bit-parity with the oracle's
-    # ordered ADC sum); [] indexing is 0-based, matching the code values
-    score = F.expr(" + ".join(f"__lut[{j}][codes[{j}]]" for j in range(len(books))))
+    q = q.withColumn("__lut", _lut_col(books, "qv"))
     scored = F.broadcast(q).crossJoin(codes).select(
-        "query_id", "corpus_id", score.alias("pq_dist")
+        "query_id", "corpus_id", _adc_score(len(books)).alias("pq_dist")
     )
     return _adc_shortlist_rerank(
         scored, corpus, id_col, vec_col, q, k, rerank_shortlist
@@ -967,28 +796,38 @@ def _model_key(*parts) -> tuple:
     return tuple(freeze(p) for p in parts)
 
 
-def _query_lut_col(books: list[list[list[float]]], sub: int) -> Column:
-    """The m x k ADC distance table for one query vector, as a nested
-    array column — materialized once per query row, looked up per code.
-    Reads the conventional ``qv`` column (hardcoded, like the other
-    cached helpers: the cache key covers only the model, so a
-    caller-supplied column would bind the first caller's tree for
-    everyone)."""
+def _lut_col(books: list[list[list[float]]], col: str) -> Column:
+    """The m x k ADC distance table of the vector in column ``col``, as a
+    nested array column materialized once per row and looked up per code:
+    entry [j][c] is ``|c|^2 - 2<x_j, c>`` for the row's j-th subvector
+    ``x_j``. ``col`` is a query vector (``qv``) for codes of the vectors
+    themselves, or a query residual against a probed cell (``__qr``) for
+    residual codes. Cached with the model, keyed on ``col`` as well: a
+    Column binds its input by name."""
 
     def build() -> Column:
+        sub = len(books[0][0])
         lut_terms = []
         for j, cents in enumerate(books):
-            qj = F.slice(F.col("qv"), j * sub + 1, sub)
+            xj = F.slice(F.col(col), j * sub + 1, sub)
             mat = F.expr(_mat_sql(cents))
             norms2 = F.expr(_vec_sql([sum(x * x for x in c) for c in cents]))
             lut_terms.append(
                 F.zip_with(
-                    mat, norms2, lambda c, n2: n2 - F.lit(2.0) * dot_expr(qj, c)
+                    mat, norms2, lambda c, n2: n2 - F.lit(2.0) * dot_expr(xj, c)
                 )
             )
         return F.array(*lut_terms)
 
-    return _prep_expr(("lut", sub, _model_key(books)), build)
+    return _prep_expr(("lut", col, _model_key(books)), build)
+
+
+def _adc_score(m: int) -> Column:
+    """The ADC distance of a ``codes`` row under a row's ``__lut``: the m
+    table lookups added left to right in subspace order (bit-parity with
+    the oracles' ordered sum); ``[]`` indexing is 0-based, matching the
+    code values."""
+    return F.expr(" + ".join(f"__lut[{j}][codes[{j}]]" for j in range(m)))
 
 
 def ivfpq_knn(
@@ -1028,15 +867,8 @@ def ivfpq_knn(
     ``ivf_knn``'s tie convention (score desc, LARGEST cell index on
     ties); code assignment and shortlist ties use smallest-index — both
     mirrored by the oracle replay."""
-    sub = dim // len(books)
     if index is None:
-        index = corpus.select(
-            F.col(id_col).alias("corpus_id"),
-            _nearest_centroid_expr(
-                cents, _as_double(F.col(vec_col))
-            ).alias("bucket"),
-            _pq_code_expr(_as_double(F.col(vec_col)), books, sub).alias("codes"),
-        )
+        index = encode_lists(corpus, id_col, vec_col, cents, books)
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     )
@@ -1058,7 +890,7 @@ def ivfpq_knn(
         q.select(
             "query_id",
             "qv",
-            _query_lut_col(books, sub).alias("__lut"),
+            _lut_col(books, "qv").alias("__lut"),
             probes_col.alias("__probes"),
         ),
         eager=False,
@@ -1066,11 +898,10 @@ def ivfpq_knn(
     # the LUT rides through the explode — plain column refs off the leaf,
     # so no second broadcast join is needed to attach it
     qp = qprep.select("query_id", "__lut", F.explode("__probes").alias("bucket"))
-    score = F.expr(" + ".join(f"__lut[{j}][codes[{j}]]" for j in range(len(books))))
     scored = (
         F.broadcast(qp)
         .join(index, "bucket")
-        .select("query_id", "corpus_id", score.alias("pq_dist"))
+        .select("query_id", "corpus_id", _adc_score(len(books)).alias("pq_dist"))
     )
     return _adc_shortlist_rerank(
         scored,
@@ -1124,32 +955,6 @@ def _residual_expr(vec: Column, cents: list[list[float]], bucket: Column) -> Col
     )
 
 
-def _residual_lut_col(books: list[list[list[float]]], sub: int) -> Column:
-    """The m x k ADC table for a (query, probed-cell) row: distances are
-    against the QUERY RESIDUAL (the ``__qr`` column by convention — the
-    caller materializes ``qv - cent[bucket]`` ONCE per row, so the
-    centroid-matrix literal appears once in the plan instead of once
-    per subspace slice), because residual-PQ codes quantize corpus
-    residuals — both sides subtract the same cell centroid, so ADC
-    approximates the original distance with the coarse component
-    removed. Cached with the model."""
-
-    def build() -> Column:
-        lut_terms = []
-        for j, cbook in enumerate(books):
-            qj = F.slice(F.col("__qr"), j * sub + 1, sub)
-            mat = F.expr(_mat_sql(cbook))
-            norms2 = F.expr(_vec_sql([sum(x * x for x in c) for c in cbook]))
-            lut_terms.append(
-                F.zip_with(
-                    mat, norms2, lambda c, n2: n2 - F.lit(2.0) * dot_expr(qj, c)
-                )
-            )
-        return F.array(*lut_terms)
-
-    return _prep_expr(("rlut", sub, _model_key(books)), build)
-
-
 def ivfpq_residual_knn(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1177,26 +982,13 @@ def ivfpq_residual_knn(
     Same probe shape as ``ivfpq_knn``: bucket equi-join prunes the code
     scan to the probed cells, shortlist by quantized distance, exact
     cosine re-rank from raw storage. ``books`` must be fitted on
-    residuals (``pq_fit`` over ``x - cent[bucket]``); ``index`` may pass
-    the precomputed lists ``(corpus_id, bucket, codes)``. Every
+    residuals (``pq_levels`` over ``x - cent[bucket]``); ``index`` may
+    pass the precomputed lists ``(corpus_id, bucket, codes)``. Every
     fit/assign/probe/ADC step keeps the exact-integer-mean + ordered
     fold conventions, so the full pipeline is replayed by
     ``_ivfpq_residual_ann_oracle``'s unrolled CTEs."""
-    sub = dim // len(books)
     if index is None:
-        v = _as_double(F.col(vec_col))
-        bucketed = corpus.select(
-            F.col(id_col).alias("corpus_id"),
-            v.alias("__v"),
-            _nearest_centroid_expr(cents, v).alias("bucket"),
-        )
-        index = bucketed.select(
-            "corpus_id",
-            "bucket",
-            _pq_code_expr(
-                _residual_expr(F.col("__v"), cents, F.col("bucket")), books, sub
-            ).alias("codes"),
-        )
+        index = encode_lists(corpus, id_col, vec_col, cents, books, residual=True)
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     )
@@ -1227,14 +1019,12 @@ def ivfpq_residual_knn(
             # fixture: top-5 came from the wrong cluster). FAISS's
             # by_residual ADC carries exactly this term.
             dot_expr(F.col("__qr"), F.col("__qr")).alias("__qr2"),
-            _residual_lut_col(books, sub).alias("__lut"),
+            _lut_col(books, "__qr").alias("__lut"),
         ),
         eager=False,
     )
     # qr^2 leads the left-to-right fold (bit-parity with the oracle's sum)
-    score = F.col("__qr2") + F.expr(
-        " + ".join(f"__lut[{j}][codes[{j}]]" for j in range(len(books)))
-    )
+    score = F.col("__qr2") + _adc_score(len(books))
     scored = (
         F.broadcast(qp.select("query_id", "bucket", "__qr2", "__lut"))
         .join(index, "bucket")

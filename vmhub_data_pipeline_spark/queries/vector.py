@@ -284,6 +284,29 @@ def _probe_frame(spark: SparkSession, sf_dir: str, entry: str, build):
     return get("ann_probe_frame", spark, (sf_dir, entry), build)
 
 
+def _ivf_index(c: DataFrame, n_clusters: int, max_iter: int) -> tuple:
+    """The flat-IVF index over ``c``: exact-integer-mean k-means
+    centroids and the checkpointed inverted lists
+    ``(neighbor_id, bucket, cv)``."""
+    from ..operators.similarity import (
+        _as_double,
+        checkpoint_index,
+        encode_lists,
+        kmeans_fit,
+    )
+
+    cents = kmeans_fit(
+        c, "vec_id", "embedding", k=n_clusters, max_iter=max_iter, exact_mean=True
+    )
+    index = checkpoint_index(
+        encode_lists(
+            c, "vec_id", "embedding", cents, id_name="neighbor_id",
+            carry=(_as_double(F.col("embedding")).alias("cv"),),
+        )
+    )
+    return cents, index
+
+
 def ivf_index_cached(
     spark: SparkSession,
     sf_dir: str,
@@ -297,29 +320,10 @@ def ivf_index_cached(
     ``checkpoint_index``). Resident per (session, sf_dir, params), so
     bench reports the Lloyd fit (paid once per corpus) apart from the
     probe (what a query actually costs against the resident lists)."""
-    from ..operators.similarity import (
-        _as_double,
-        _nearest_centroid_expr,
-        checkpoint_index,
-        kmeans_fit,
-    )
 
     def build() -> tuple:
         (emb,) = load(spark, sf_dir, "embeddings")
-        c = emb.filter(F.col("vec_id") >= 10)
-        cents = kmeans_fit(
-            c, "vec_id", "embedding", k=n_clusters, max_iter=max_iter,
-            exact_mean=True,
-        )
-        v = _as_double(F.col("embedding"))
-        index = checkpoint_index(
-            c.select(
-                F.col("vec_id").alias("neighbor_id"),
-                v.alias("cv"),
-                _nearest_centroid_expr(cents, v).alias("bucket"),
-            )
-        )
-        return cents, index
+        return _ivf_index(emb.filter(F.col("vec_id") >= 10), n_clusters, max_iter)
 
     return get("ivf_index", spark, (sf_dir, n_clusters, max_iter), build)
 
@@ -539,10 +543,7 @@ def ann_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()[0]["bucket"]
     )
     members = index.filter(F.col("bucket") == hot).select("neighbor_id", "cv")
-    sub = kmeans_fit(
-        members, "neighbor_id", "cv", k=2, max_iter=2, exact_mean=True,
-        materialize=False,  # r13: cell-sized resident input, skip the checkpoint
-    )
+    sub = kmeans_fit(members, "neighbor_id", "cv", k=2, max_iter=2, exact_mean=True)
     return members.select(
         F.col("neighbor_id").alias("vec_id"),
         F.lit(hot).cast("int").alias("old_bucket"),
@@ -759,28 +760,9 @@ def ivf_multi_index_cached(
     the ``ivf_index_cached`` lifecycle applied to the maintenance fixture,
     so repeated rebalance-all invocations measure the MAINTENANCE pass,
     not the corpus refit."""
-    from ..operators.similarity import (
-        _as_double,
-        _nearest_centroid_expr,
-        checkpoint_index,
-        kmeans_fit,
-    )
 
     def build() -> tuple:
-        c = ivf_multi_corpus(spark, sf_dir)
-        cents = kmeans_fit(
-            c, "vec_id", "embedding", k=n_clusters, max_iter=max_iter,
-            exact_mean=True,
-        )
-        v = _as_double(F.col("embedding"))
-        index = checkpoint_index(
-            c.select(
-                F.col("vec_id").alias("neighbor_id"),
-                v.alias("cv"),
-                _nearest_centroid_expr(cents, v).alias("bucket"),
-            )
-        )
-        return cents, index
+        return _ivf_index(ivf_multi_corpus(spark, sf_dir), n_clusters, max_iter)
 
     return get("ivf_multi_index", spark, (sf_dir, n_clusters, max_iter), build)
 
@@ -1455,7 +1437,7 @@ SELECT query_id, corpus_id, ROUND(cosine, 4) AS cosine, rank FROM (
 # materialization is paid inside the first fit (bench's ann_*_fit
 # build lines). Session-keyed lifecycle as the index artifacts.
 def _pq_unit_corpus(spark: SparkSession, sf_dir: str):
-    from ..operators.similarity import checkpoint_index, dot_expr
+    from ..operators.similarity import checkpoint_index, dot_expr, spread_small_input
 
     def build() -> tuple:
         (emb,) = load(spark, sf_dir, "embeddings")
@@ -1466,12 +1448,17 @@ def _pq_unit_corpus(spark: SparkSession, sf_dir: str):
         nrm = F.sqrt(dot_expr(v, v))
         # label rides along (serving systems store filterable attributes
         # WITH the vectors); consumers select explicit columns, so it is
-        # pruned everywhere except the attribute-bearing index build
+        # pruned everywhere except the attribute-bearing index build.
+        # Spread once here, so the fits over the resident corpus read it
+        # as it is instead of each re-spreading it.
         unit = checkpoint_index(
-            emb.filter(nrm > 0).select(
+            spread_small_input(
+                emb.filter(nrm > 0).select(
+                    "vec_id",
+                    F.transform(v, lambda x: x / nrm).alias("embedding"),
+                    "label",
+                ),
                 "vec_id",
-                F.transform(v, lambda x: x / nrm).alias("embedding"),
-                "label",
             )
         )
         return (
@@ -1494,12 +1481,13 @@ def pq_books_cached(
     max_iter: int = 3,
 ) -> list:
     """Fit (or fetch) the shared unit-corpus PQ sub-codebooks."""
-    from ..operators.similarity import pq_fit
+    from ..operators.similarity import lloyd_fit, pq_levels
 
     def build() -> list:
         _, c = _pq_unit_corpus(spark, sf_dir)
-        return pq_fit(c, "vec_id", "embedding", dim=dim, m=m, k=k,
-                      max_iter=max_iter, exact_mean=True)
+        return lloyd_fit(
+            c, "vec_id", "embedding", pq_levels(dim, m, k, max_iter), exact_mean=True
+        )
 
     return get("pq_books", spark, (sf_dir, dim, m, k, max_iter), build)
 
@@ -1520,23 +1508,12 @@ def pq_index_cached(
     query run both misrepresents query latency in BENCH and wastes
     O(corpus x iter) work (VERDICT r5 task 4); bench.py times a cold fit
     (ann_pq_fit) and warm probes (ann_pq_probe) separately."""
-    from ..operators.similarity import (
-        _as_double,
-        _pq_code_expr,
-        checkpoint_index,
-    )
+    from ..operators.similarity import checkpoint_index, encode_lists
 
     def build() -> tuple:
         _, c = _pq_unit_corpus(spark, sf_dir)
         books = pq_books_cached(spark, sf_dir, dim, m, k, max_iter)
-        codes = checkpoint_index(
-            c.select(
-                F.col("vec_id").alias("corpus_id"),
-                _pq_code_expr(
-                    _as_double(F.col("embedding")), books, dim // m
-                ).alias("codes"),
-            )
-        )
+        codes = checkpoint_index(encode_lists(c, "vec_id", "embedding", books=books))
         return books, codes
 
     return get("pq_index", spark, (sf_dir, dim, m, k, max_iter), build)
@@ -1835,34 +1812,24 @@ def opq_index_cached(
     ``OPQMatrix`` + ``IndexPQ`` chain stores rotated vectors/codes), and
     the encoded codes. Returns (w, perm, books, rot_q, rot_c, codes)."""
     from ..operators.similarity import (
-        _pq_code_expr,
         checkpoint_index,
-        pq_fit,
+        encode_lists,
+        lloyd_fit,
+        pq_levels,
         spread_small_input,
     )
 
     def build() -> tuple:
         q, c = _pq_unit_corpus(spark, sf_dir)
         w, perm = opq_model_cached(spark, sf_dir, dim, m, iters)
-        # r13 opt: the sub-codebook fit consumes the resident rows
-        # directly (materialize=False) instead of re-spreading and
-        # re-checkpointing the same corpus a second time (see pq_fit).
         rot_c = checkpoint_index(
             spread_small_input(_opq_transform(c, w, perm, dim), "vec_id")
         )
         rot_q = _opq_transform(q, w, perm, dim)  # batch-sized, stays lazy
-        books = pq_fit(
-            rot_c, "vec_id", "embedding", dim=dim, m=m, k=k,
-            max_iter=pq_iter, exact_mean=True, materialize=False,
+        books = lloyd_fit(
+            rot_c, "vec_id", "embedding", pq_levels(dim, m, k, pq_iter), exact_mean=True
         )
-        codes = checkpoint_index(
-            rot_c.select(
-                F.col("vec_id").alias("corpus_id"),
-                _pq_code_expr(
-                    F.col("embedding"), books, dim // m
-                ).alias("codes"),
-            )
-        )
+        codes = checkpoint_index(encode_lists(rot_c, "vec_id", "embedding", books=books))
         return w, perm, books, rot_q, rot_c, codes
 
     return get("opq_index", spark, (sf_dir, dim, m, k, pq_iter, iters), build)
@@ -2203,8 +2170,7 @@ def coarse_cents_cached(
     def build() -> list:
         _, c = _pq_unit_corpus(spark, sf_dir)
         return kmeans_fit(
-            c, "vec_id", "embedding", k=n_cells, max_iter=coarse_iter,
-            exact_mean=True,
+            c, "vec_id", "embedding", k=n_cells, max_iter=coarse_iter, exact_mean=True
         )
 
     return get("coarse_cents", spark, (sf_dir, dim, n_cells, coarse_iter), build)
@@ -2224,19 +2190,19 @@ def ivfpq_index_cached(
     cells, the PQ codebooks, and the encoded inverted lists — everything
     a probe needs except the raw vectors it re-ranks from. Fit work is
     O(corpus x iters) distributed with O(model) driver state; the lists
-    are checkpointed executor-side. A cold session runs the FUSED
-    composed Lloyd recursion (``ivfpq_fit_fused`` — one job per round
-    across the coarse level and all m subspaces) and publishes BOTH
+    are checkpointed executor-side. A cold session runs ONE fused
+    ``lloyd_fit`` (the coarse level and all m subspace levels, one job
+    per round) and publishes BOTH
     shared model artifacts (coarse quantizer + PQ sub-codebooks — the
     flat PQ index trains the identical books, bit-parity pinned); when
     one of them is already resident only the other's rounds run, and
     when both are warm the fit is the encode scan alone."""
     from ..operators.similarity import (
-        _as_double,
-        _nearest_centroid_expr,
-        _pq_code_expr,
+        Level,
         checkpoint_index,
-        ivfpq_fit_fused,
+        encode_lists,
+        lloyd_fit,
+        pq_levels,
     )
 
     coarse_key = (sf_dir, dim, n_cells, coarse_iter)
@@ -2251,26 +2217,21 @@ def ivfpq_index_cached(
             cents = coarse_cents_cached(spark, sf_dir, dim, n_cells, coarse_iter)
             books = pq_books_cached(spark, sf_dir, dim, m, k, pq_iter)
         else:
-            # cold session: the fused recursion fits BOTH shared models
-            # in one job per Lloyd round and publishes each
-            fused = ivfpq_fit_fused(
-                c, "vec_id", "embedding", dim=dim, n_cells=n_cells, m=m, k=k,
-                coarse_iter=coarse_iter, pq_iter=pq_iter, exact_mean=True,
+            # cold session: one fit of both shared models' levels, each
+            # published
+            fitted, *fitted_books = lloyd_fit(
+                c, "vec_id", "embedding",
+                [Level(0, None, n_cells, coarse_iter), *pq_levels(dim, m, k, pq_iter)],
+                exact_mean=True,
             )
-            cents = get("coarse_cents", spark, coarse_key, lambda: fused[0])
-            books = get("pq_books", spark, books_key, lambda: fused[1])
-        v = _as_double(F.col("embedding"))
+            cents = get("coarse_cents", spark, coarse_key, lambda: fitted)
+            books = get("pq_books", spark, books_key, lambda: fitted_books)
         # label rides in the inverted-list rows — filterable attributes
         # are STORED with the codes in a serving table, so filtered
         # search (ann_ivfpq_filtered_topk) is a scan-side predicate on
         # the resident index, never a re-encode of the corpus
         index = checkpoint_index(
-            c.select(
-                F.col("vec_id").alias("corpus_id"),
-                _nearest_centroid_expr(cents, v).alias("bucket"),
-                _pq_code_expr(v, books, dim // m).alias("codes"),
-                "label",
-            )
+            encode_lists(c, "vec_id", "embedding", cents, books, carry=("label",))
         )
         return cents, books, index
 
@@ -2373,17 +2334,10 @@ def _ivfpq_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivfpq_encode(index: tuple, batch: DataFrame) -> dict:
     """Assign and encode one micro-batch against the frozen model — a
     pure scan with the model inline as literals."""
-    from ..operators.similarity import _nearest_centroid_expr, _pq_code_expr
+    from ..operators.similarity import encode_lists
 
     cents, books, _ = index
-    return {
-        "lists": batch.select(
-            F.col("vec_id").alias("corpus_id"),
-            _nearest_centroid_expr(cents, F.col("v")).alias("bucket"),
-            _pq_code_expr(F.col("v"), books, 64 // len(books)).alias("codes"),
-            F.col("label"),
-        )
-    }
+    return {"lists": encode_lists(batch, "vec_id", "v", cents, books, carry=("label",))}
 
 
 # The composed IVF-PQ serving index as a serving-index family.
@@ -2530,27 +2484,18 @@ def ann_ivfpq_add_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied to new rows. Output: (vec_id, bucket, code_0..code_7), the
     appended inverted-list rows; codes unpacked to columns so the oracle
     hash pins every byte."""
-    from ..operators.similarity import (
-        _as_double,
-        _nearest_centroid_expr,
-        _pq_code_expr,
-    )
+    from ..operators.similarity import encode_lists
 
     q, _ = _pq_unit_corpus(spark, sf_dir)
     cents, books, _index = ivfpq_index_cached(
         spark, sf_dir, dim=64, n_cells=16, coarse_iter=3, m=8, k=16, pq_iter=3
     )
-    v = _as_double(F.col("embedding"))
-    enc = q.select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        _nearest_centroid_expr(cents, v).cast("long").alias("bucket"),
-        _pq_code_expr(v, books, 64 // len(books)).alias("__codes"),
-    )
+    enc = encode_lists(q, "vec_id", "embedding", cents, books, id_name="vec_id")
     return enc.select(
-        "vec_id",
-        "bucket",
+        F.col("vec_id").cast("long").alias("vec_id"),
+        F.col("bucket").cast("long").alias("bucket"),
         *[
-            F.element_at("__codes", j + 1).cast("long").alias(f"code_{j}")
+            F.element_at("codes", j + 1).cast("long").alias(f"code_{j}")
             for j in range(len(books))
         ],
     )
@@ -2643,13 +2588,7 @@ def ivfopq_index_cached(
     reused. Returns (w, perm, cents, books, rot_q, rot_c, index) with
     ``index`` the checkpointed inverted lists (corpus_id, bucket, codes,
     label) in rotated space."""
-    from ..operators.similarity import (
-        _as_double,
-        _nearest_centroid_expr,
-        _pq_code_expr,
-        checkpoint_index,
-        kmeans_fit,
-    )
+    from ..operators.similarity import checkpoint_index, encode_lists, kmeans_fit
 
     def build() -> tuple:
         w, perm, books, rot_q, rot_c, _codes = opq_index_cached(
@@ -2658,16 +2597,9 @@ def ivfopq_index_cached(
         cents = kmeans_fit(
             rot_c, "vec_id", "embedding", k=n_cells, max_iter=coarse_iter,
             exact_mean=True,
-            materialize=False,  # r13 opt: rot_c is already the spread checkpoint
         )
-        v = _as_double(F.col("embedding"))
         index = checkpoint_index(
-            rot_c.select(
-                F.col("vec_id").alias("corpus_id"),
-                _nearest_centroid_expr(cents, v).alias("bucket"),
-                _pq_code_expr(v, books, dim // m).alias("codes"),
-                "label",
-            )
+            encode_lists(rot_c, "vec_id", "embedding", cents, books, carry=("label",))
         )
         return w, perm, cents, books, rot_q, rot_c, index
 
@@ -2956,56 +2888,44 @@ def ivfpqr_index_cached(
     a session where the plain variant already fitted, only the residual
     sub-codebook rounds run here. Residual sub-fits CANNOT fuse with the
     coarse rounds (they consume the finished centroids), so the fusion
-    ceiling for this variant is pq_fit's existing per-round subspace
-    fusion plus the quantizer share."""
+    ceiling for this variant is the per-round subspace fusion plus the
+    quantizer share."""
     from ..operators.similarity import (
         _as_double,
         _nearest_centroid_expr,
-        _pq_code_expr,
         _residual_expr,
         checkpoint_index,
-        pq_fit,
+        encode_lists,
+        lloyd_fit,
+        pq_levels,
+        spread_small_input,
     )
 
     def build() -> tuple:
         _, c = _pq_unit_corpus(spark, sf_dir)
         cents = coarse_cents_cached(spark, sf_dir, dim, n_cells, coarse_iter)
         v = _as_double(F.col("embedding"))
-        # Materialize the residuals ONCE before the sub-codebook fit:
-        # pq_fit scans its input 1 + max_iter times, and the residual
-        # plan (nearest-centroid argmax over the 16x64 literal matrix +
-        # element-wise subtract) would otherwise be recomputed per round
-        # — measured 4x the whole fit. FAISS trains on materialized
-        # residuals for the same reason; the frame is corpus-sized and
-        # fit-scoped (the encode below reuses it, then only the codes
-        # index stays resident).
-        from ..operators.similarity import spread_small_input
-
+        # the residuals are materialized once, with their bucket: every
+        # fit round reads them (recomputing the 16x64 argmax per round
+        # measured 4x the whole fit) and the encode reads them again
         res = checkpoint_index(
             spread_small_input(
                 c.select(
-                    F.col("vec_id").alias("corpus_id"),
-                    _nearest_centroid_expr(cents, v).alias("bucket"),
-                    v.alias("__v"),
+                    "vec_id", _nearest_centroid_expr(cents, v).alias("bucket"), v.alias("__v")
                 ).select(
-                    "corpus_id",
+                    "vec_id",
                     "bucket",
                     _residual_expr(F.col("__v"), cents, F.col("bucket")).alias("resid"),
                 ),
-                "corpus_id",
+                "vec_id",
             )
         )
-        books = pq_fit(
-            res, "corpus_id", "resid", dim=dim, m=m, k=k, max_iter=pq_iter,
-            exact_mean=True,
-            materialize=False,  # r13 opt: res is already the spread checkpoint
+        books = lloyd_fit(
+            res, "vec_id", "resid", pq_levels(dim, m, k, pq_iter), exact_mean=True
         )
         index = checkpoint_index(
-            res.select(
-                "corpus_id",
-                "bucket",
-                _pq_code_expr(F.col("resid"), books, dim // m).alias("codes"),
-            )
+            encode_lists(res, "vec_id", "resid", books=books, carry=("bucket",))
+            .select("corpus_id", "bucket", "codes")
         )
         return cents, books, index
 

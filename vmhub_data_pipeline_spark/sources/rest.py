@@ -34,6 +34,7 @@ the ``transport`` callable without touching the Spark plumbing.
 
 from __future__ import annotations
 
+import itertools
 import json
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
@@ -183,7 +184,7 @@ class RestIngestor:
         return out
 
     def fetch_all(
-        self, max_pages: int = 10_000, start_page: int = 0, stride: int = 1
+        self, start_page: int = 0, stride: int = 1, stop_page: int | None = None
     ) -> Iterator[list[dict]]:
         """Sequential page loop with EOF on empty page (src/main.py:57-72)
         and client-side inter-page pacing (src/main.py:86).
@@ -192,8 +193,17 @@ class RestIngestor:
         workers (worker s of N fetches pages s, s+N, s+2N, ...): each
         worker's loop still terminates on its first empty/NoMoreData page,
         which is correct for the empty-page-EOF protocol because every page
-        past the true end is empty. Pacing applies per worker."""
-        for page in range(start_page, max_pages * stride, stride):
+        past the true end is empty. Pacing applies per worker.
+
+        The loop stops only at EOF unless ``stop_page`` (absolute,
+        exclusive) bounds it — a batch fetch lands the whole day however
+        many pages it spans; a streaming read bounds its own trigger."""
+        pages = (
+            itertools.count(start_page, stride)
+            if stop_page is None
+            else range(start_page, stop_page, stride)
+        )
+        for page in pages:
             if page != start_page and self.cfg.page_delay:
                 self.sleep(self.cfg.page_delay)
             try:

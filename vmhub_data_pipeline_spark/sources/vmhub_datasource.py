@@ -141,11 +141,11 @@ class VMHubSimpleStreamReader(SimpleDataSourceStreamReader):
         return {"next_page": 0}
 
     def _fetch_pages(self, first_page: int, max_pages: int):
-        # fetch_all's max_pages is an absolute page bound: pages first_page
-        # .. first_page + max_pages - 1, ending early on the first empty page
+        # pages first_page .. first_page + max_pages - 1, ending early on
+        # the first empty page
         pages = list(
             self._ingestor().fetch_all(
-                max_pages=first_page + max_pages, start_page=first_page
+                start_page=first_page, stop_page=first_page + max_pages
             )
         )
         instant = lineage_instant()
